@@ -18,7 +18,8 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from amadou_spark.llm.text import portable_token_hash, tokens
-from amadou_spark.scale import gate_confs, materialize_shared
+from amadou_spark.scale import GATE_CONFS, materialize_shared
+from amadou_spark.session import conf_scope
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -43,11 +44,9 @@ def shingles_of(toks: Column, fallback: Column, n: int = 3) -> Column:
 
     Documents shorter than n tokens fall back to a single whole-text
     shingle (``fallback``): (a) short docs stay comparable (by exact
-    text), and (b) no row ever carries an empty shingle set —
-    MinHashLSH rejects all-zero vectors, and a filter is not a reliable
-    guard because Spark may evaluate UDF projections before filters in
-    a collapsed stage. Also note Spark's sequence(0, -k) counts DOWN,
-    so the n-token guard is required for correctness, not just hygiene.
+    text), and (b) no row ever carries an empty shingle set. Also note
+    Spark's sequence(0, -k) counts DOWN, so the n-token guard is
+    required for correctness, not just hygiene.
     """
     made = F.array_distinct(
         F.transform(
@@ -56,14 +55,6 @@ def shingles_of(toks: Column, fallback: Column, n: int = 3) -> Column:
         )
     )
     return F.when(F.size(toks) >= n, made).otherwise(F.array(fallback))
-
-
-def with_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, sh) with the token array materialized before shingling."""
-    return (
-        docs.select("doc_id", F.col(text_col).alias("_text"), tokens(F.col(text_col)).alias("_toks"))
-        .select("doc_id", shingles_of(F.col("_toks"), F.col("_text"), n).alias("sh"))
-    )
 
 
 def exploded_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -98,7 +89,7 @@ def exploded_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> Da
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Expression form (small inputs / tests). Hot paths use
-    ``with_shingles`` to avoid re-evaluating the split per element."""
+    ``exploded_shingles`` to avoid re-evaluating the split per element."""
     return shingles_of(tokens(text), text, n)
 
 
@@ -167,12 +158,11 @@ def _shingle_pair_counts(
     # |distinct doc_id in sh| == |counts| <= |docs|, so it soundly
     # bounds the counts-side broadcast without re-running the full
     # upstream docs lineage a second time (docs itself is uncached).
-    # both gate bounds in ONE job over the checkpointed blocks (r10 —
-    # they were two separate actions; each action is a full job and the
-    # bounds feed planning only, so fusing them is free). gate_confs
-    # (AQE off for the action) keeps it one job — under AQE this tiny
-    # agg materializes 3 query-stage jobs.
-    with gate_confs(docs.sparkSession):
+    # both gate bounds in ONE job over the checkpointed blocks (each
+    # action is a full job and the bounds feed planning only, so fusing
+    # them is free). GATE_CONFS (AQE off for the action) keeps it one
+    # job — under AQE this tiny agg materializes 3 query-stage jobs.
+    with conf_scope(docs.sparkSession, GATE_CONFS):
         stats = sh.agg(
             F.countDistinct("doc_id").alias("nd"), F.count("*").alias("nr")
         ).first()
@@ -478,10 +468,10 @@ def minhash_lsh_pairs(
     # size-gated (see BROADCAST_ROWS_GATE); the bound comes from the
     # checkpointed sh (|distinct doc_id| == |counts| <= |docs|), not a
     # second full scan of the uncached docs lineage
-    # planning-only bound: one countDistinct job under gate_confs
-    # (the old distinct().count() spelled the same number as 3 AQE
+    # planning-only bound: one countDistinct job under GATE_CONFS
+    # (a distinct().count() spelling of the same number runs as 3 AQE
     # stage jobs)
-    with gate_confs(docs.sparkSession):
+    with conf_scope(docs.sparkSession, GATE_CONFS):
         n_docs = sh.agg(F.countDistinct("doc_id")).first()[0]
     ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
@@ -491,35 +481,6 @@ def minhash_lsh_pairs(
         .join(_gate(cb, n_docs), "id_b")
         .filter(jac >= 1.0 - max_distance)
         .select("id_a", "id_b", F.round(1.0 - jac, 6).alias("jaccard_dist"))
-    )
-
-
-def minhash_lsh_pairs_ml(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    max_distance: float = 0.6,
-    seed: int = 42,
-) -> DataFrame:
-    """pyspark.ml variant (MinHashLSH.approxSimilarityJoin) kept for API
-    parity. Prefer :func:`minhash_lsh_pairs`: single-hash OR-buckets
-    degrade to near-quadratic candidates on low-diversity corpora."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = with_shingles(docs, text_col, n)
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True)
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=seed)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, max_distance, distCol="jaccard_dist")
-    return (
-        joined.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("id_a"),
-            F.col("datasetB.doc_id").alias("id_b"),
-            F.round("jaccard_dist", 6).alias("jaccard_dist"),
-        )
     )
 
 

@@ -25,17 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ in double precision, strictly left-to-right (so the
-    summation order — and therefore the float result — is reproducible
-    in any engine that folds sequentially)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(

@@ -317,6 +317,8 @@ def _bpe_induce(
     """Shared BPE induction loop: returns (learned merge rules, final
     word-frequency vocab with the fully-merged ``repr`` column)."""
     from amadou_spark.scale import loop_confs, materialize_shared
+    from amadou_spark.session import conf_scope
+
     words = (
         docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -336,11 +338,12 @@ def _bpe_induce(
     n_words = vocab.count()  # over materialized blocks; sizes the loop
 
     merges: list[tuple[int, str, str, str, int]] = []
-    # r10: same loop conf hygiene as the graph fixpoints — each round
-    # is (argmax job + merge-apply materialization) over the bounded
-    # distinct-word table, which AQE + the batch shuffle width were
-    # padding with stage-materialization jobs.
-    with loop_confs(docs.sparkSession, n_words):
+    # Same loop conf hygiene as the graph fixpoints: each round is
+    # (argmax job + merge-apply materialization) over the bounded
+    # distinct-word table, which AQE and the batch shuffle width would
+    # pad with stage-materialization jobs.
+    spark = docs.sparkSession
+    with conf_scope(spark, loop_confs(spark, n_words)):
         for rank in range(1, num_merges + 1):
             syms = F.filter(
                 F.split(F.col("repr"), BPE_SEP), lambda x: x != F.lit("")

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 from amadou_spark.catalog import table_path
 from amadou_spark.contracts import TABLE_NAMES
 from amadou_spark.queries import REGISTRY, _load
+from amadou_spark.session import restore_conf
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -186,10 +187,9 @@ def conf_snapshot(spark: SparkSession) -> dict:
 def check_all(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> list[CheckResult]:
-    """Oracle-compare the named queries; additionally assert (r10,
-    VERDICT r9 #5) that NO query leaks session SQL conf — the sweep
-    fails loudly naming the key, registry-wide, not just the
-    streaming family the old hygiene test covered."""
+    """Oracle-compare the named queries; additionally assert that NO
+    query leaks session SQL conf — the sweep fails loudly naming the
+    key, and restores the pre-query conf."""
     _load()
     con = duckdb_connection(sf_dir)
     results = []
@@ -219,10 +219,6 @@ def check_all(
             # every later query in the sweep runs under the leaked
             # setting (its before-snapshot already includes the leak,
             # so it passes while silently measuring a different plan)
-            for k, (old, new) in leaked.items():
-                if old is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, old)
+            restore_conf(spark, {k: old for k, (old, _) in leaked.items()})
         results.append(res)
     return results

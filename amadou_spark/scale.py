@@ -11,42 +11,36 @@ on by default in our sessions. These helpers cover what AQE can't:
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Loop-hygiene codegen gate (shared with operators/graph.py, where it
-# was born): below this many rows per round, disabling whole-stage
-# codegen saves ~100 ms of janino compilation per stage per round;
-# above it the interpreted-evaluation penalty dominates. Both knobs
-# are env-overridable: that is how the r11 A/B probes flipped policies
-# per PROCESS (alternating cold runs), and how a deployment whose
-# compile-vs-interpret balance differs can re-tune without a fork.
-#
-# r11 note (VERDICT r10 #1 asked for a defaultParallelism/2 width
-# floor here): measured, and REJECTED on evidence. Pinning the loop
-# wide is catastrophic where pinning narrow was merely mediocre —
-# q98_kcore at width 32 burned 238x the executor time of width 5
-# (5964 s vs 25 s summed executorRunTime, same 138 stages/60 jobs;
-# per-task ~300-600 ms of constant overhead that scales with the
-# number of pinned tasks per round). The wide pin also makes every
-# loop join a static SortMergeJoin, where r9's AQE-on loops re-plan
-# the tiny side into a runtime broadcast each round. The r11 fix for
-# the driver-regressed fixpoints (kcore/BFS/SSSP/LPA) is therefore to
-# RUN THEM UNDER AQE AGAIN (no loop_confs), not to re-tune the pin;
-# the pin stays only where the driver measured it flat-or-better
-# (CC, PageRank, HITS, the BPE induction loop).
-LOOP_CODEGEN_OFF_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOOP_CGOFF_ROWS", "200000")
-)
+from amadou_spark.session import conf_scope
 
-# Rows per partition target for pinned fixpoint loops (the r6-r9
-# constant). See the rejection note above before "fixing" this.
-LOOP_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_LOOP_RPP", "50000")
-)
+# Below this many rows per round, a pinned fixpoint loop runs with
+# whole-stage codegen off: every round is a NEW plan, so codegen would
+# recompile each stage each round (~100 ms of janino apiece); above it
+# the interpreted-evaluation penalty dominates.
+LOOP_CODEGEN_OFF_MAX_ROWS = 200_000
+
+# Rows per shuffle partition in a pinned fixpoint loop. Do not widen
+# the pin towards the core count: q98_kcore at width 32 burned 238x the
+# executor time of width 5 (5964 s vs 25 s summed executorRunTime, same
+# 138 stages), because every pinned task pays ~300-600 ms of fixed
+# overhead per round. A wide pin also makes every loop join a static
+# SortMergeJoin where AQE would broadcast the tiny side at run time,
+# which is why the BFS, SSSP, k-core and label-propagation loops run
+# under AQE with no pin at all; the pin stays where it measured flat or
+# better (CC, PageRank, HITS, the BPE induction loop).
+LOOP_ROWS_PER_PARTITION = 50_000
+
+# Conf for tiny planning-gate ACTIONS (a bound-probing count/first over
+# already-materialized blocks, whose result only feeds broadcast-hint
+# decisions). Under AQE such an action spawns one job per query stage
+# (3 jobs for the fused countDistinct+count gate in
+# ``_shingle_pair_counts``) for a sub-second scan; AQE has nothing to
+# adapt there, so it is off for the action. Use with
+# ``session.conf_scope``.
+GATE_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
 
 def loop_width(spark: SparkSession, n_rows: int) -> int:
@@ -63,79 +57,24 @@ def loop_width(spark: SparkSession, n_rows: int) -> int:
     )
 
 
-@contextmanager
-def loop_confs(spark: SparkSession, n_rows: int):
-    """Conf hygiene for iterative fixpoint loops (CC/PageRank pioneered
-    it in r6-r8; r10 factored it here and applied it to every graph
-    fixpoint and the BPE induction loop):
+def loop_confs(spark: SparkSession, n_rows: int) -> dict[str, str]:
+    """Session conf for a pinned iterative fixpoint loop over
+    ``n_rows`` rows per round; run the loop under
+    ``session.conf_scope(spark, loop_confs(spark, n_rows))``.
 
-    - AQE off for the loop: its per-exchange query-stage
-      materialization adds whole jobs to every round whose width is
-      already decided here from the real row count (q98_kcore ran 56
-      Spark jobs at sf0.1 without this, mostly stage materializations
-      of tiny exchanges);
-    - shuffle width pinned via :func:`loop_width` — the session
-      default is sized for batch scans, not a loop over a small table;
-    - whole-stage codegen off below ``LOOP_CODEGEN_OFF_MAX_ROWS`` —
-      every round is a NEW plan, so codegen recompiles each stage each
-      round (~100 ms apiece), a loss while rounds are tiny.
-
-    Restoration tracks whether each key was EXPLICITLY set before
-    (``conf.get(k, None)`` is None for unset keys): a previously-unset
-    key is UNSET again, never re-set to its effective default —
-    re-setting would flip it to explicitly-set, which the
-    registry-wide conf-leak gate (oracle.check_all, r10) flags as a
-    leak. Restoration is in a finally.
-
-    ``SPARK_GRAFT_LOOP_CONFS=off`` disables the hygiene entirely (the
-    loop then runs under the session conf — AQE re-planning per round,
-    runtime broadcast joins): the A/B lever for measuring the pinning
-    itself, and the escape hatch for deployments whose AQE behavior
-    beats a pinned loop."""
-    if os.environ.get("SPARK_GRAFT_LOOP_CONFS", "").lower() == "off":
-        yield
-        return
-    keys = {
+    - AQE off: its per-exchange query-stage materialization adds whole
+      jobs to every round whose width is already decided here from the
+      real row count;
+    - shuffle width from :func:`loop_width`: the session default is
+      sized for batch scans, not a loop over a small table;
+    - whole-stage codegen off up to ``LOOP_CODEGEN_OFF_MAX_ROWS``."""
+    confs = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": str(loop_width(spark, n_rows)),
     }
     if n_rows <= LOOP_CODEGEN_OFF_MAX_ROWS:
-        keys["spark.sql.codegen.wholeStage"] = "false"
-    before = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in before.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-@contextmanager
-def gate_confs(spark: SparkSession):
-    """Conf hygiene for tiny planning-gate ACTIONS (a bound-probing
-    count/first over already-materialized blocks, whose result only
-    feeds broadcast-hint decisions). Under AQE such an action spawns
-    one job per query stage — measured 3 jobs for the fused
-    countDistinct+count gate in ``_shingle_pair_counts`` — while the
-    work itself is a sub-second scan of checkpointed blocks. AQE has
-    nothing to adapt there (the input is materialized, the output is
-    <=1 row), so turn it off for the action and collapse it back to a
-    single job. Same explicit-vs-unset restore discipline as
-    :func:`loop_confs` (the registry-wide conf-leak gate checks it)."""
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
+        confs["spark.sql.codegen.wholeStage"] = "false"
+    return confs
 
 
 def materialize_shared(df: DataFrame) -> DataFrame:
@@ -348,7 +287,7 @@ def ntile_domain_table(
 def ntile_from_rank_py(rank: int, n: int, k: int) -> int:
     """Driver-side twin of :func:`ntile_from_rank` — identical sizing
     (first ``n % k`` buckets hold ``ceil(n/k)`` rows). Used by
-    :func:`ntile_domain_table_local` to stamp bucket bounds while
+    :func:`ntile_domain_tables_local` to stamp bucket bounds while
     building a local-relation lookup table."""
     q, r = n // k, n % k
     big = r * (q + 1)
@@ -490,15 +429,6 @@ def ntile_domain_tables_local(
         )
         out[prefix] = spark.createDataFrame(pdf, schema)
     return out
-
-
-def ntile_domain_table_local(
-    counts_input: DataFrame, value_col: str, k: int, prefix: str
-) -> DataFrame:
-    """Single-measure sugar over :func:`ntile_domain_tables_local`."""
-    return ntile_domain_tables_local(counts_input, [(value_col, k, prefix)])[
-        prefix
-    ]
 
 
 def bounded_domain_ntile(
@@ -741,10 +671,10 @@ def bloom_prune(
     """
     dim_nn = dim_keys.filter(F.col(dim_key).isNotNull())
     if n_bits is None:
-        # sizing gate: one countDistinct job under gate_confs (AQE has
+        # sizing gate: one countDistinct job under GATE_CONFS (AQE has
         # nothing to adapt in a 1-row bound probe; it would spawn 3
         # query-stage jobs for the distinct().count() spelling)
-        with gate_confs(dim_keys.sparkSession):
+        with conf_scope(dim_keys.sparkSession, GATE_CONFS):
             n_keys = max(
                 dim_nn.agg(F.countDistinct(dim_key)).first()[0] or 0, 1
             )

@@ -15,6 +15,7 @@ pandas-UDF path).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Mapping
 
 from pyspark.sql import SparkSession
@@ -40,38 +41,68 @@ _DEFAULTS = {
     # local mode = driver-only: this is the whole memory budget. Sized
     # for the 128 GiB container; override with SPARK_GRAFT_DRIVER_MEM.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-    # Engine-wide state-store posture (r9, VERDICT r8 #2): RocksDB for
-    # EVERY stateful streaming operator. At scale the HDFS-backed
+    # RocksDB for EVERY stateful streaming operator. The HDFS-backed
     # provider keeps all state as in-heap maps (state size bounded by
     # executor heap); RocksDB spills to local disk and supports the
     # multiple column families transformWithState requires. Choosing it
-    # here — once, deliberately — also means every bench sweep of every
-    # stateful query runs under the SAME store, instead of flipping
-    # mid-session as a side effect of whichever query ran first
-    # (the r8 streaming-bench drift source).
+    # here, once, also means every stateful query in a session runs under
+    # the SAME store, instead of whichever one the first query picked.
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     ),
-    # r10 (optimization): RocksDB CHANGELOG checkpointing. Without it
-    # every micro-batch commit uploads a full SST snapshot per state
-    # store — measured 16-36 s of summed commitTimeMs per batch across
-    # the b06/b09 family for ~40k rows of state. With it, commit writes
-    # only the batch's state delta (the changelog) and full snapshots
-    # happen asynchronously in the maintenance thread — commit latency
-    # becomes O(delta), not O(state), which is also the production
-    # posture for large stateful pipelines (state >> delta at 100 TB).
-    # r11: env-overridable so a probe/deployment can A/B it under its
-    # own conditions (run_stream_to_table honors the session value).
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-        os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true")
-    ),
+    # RocksDB changelog checkpointing. Without it every micro-batch
+    # commit uploads a full SST snapshot per state store (16-36 s of
+    # summed commitTimeMs per batch across the b06/b09 family for ~40k
+    # rows of state). With it, commit writes only the batch's state
+    # delta and full snapshots happen asynchronously in the maintenance
+    # thread: commit latency is O(delta), not O(state).
+    # streaming.windows.run_stream_to_table honours an explicit session
+    # value, so a deployment can still turn it off per session.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
 
 
 def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, or ``local[*]`` when it is not set.
+    A value that is not a positive integer fails here, naming the
+    variable, instead of deep inside Spark's master-URL parser."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return f"local[{cpus}]" if cpus else "local[*]"
+    if cpus is None:
+        return "local[*]"
+    if not (cpus.isascii() and cpus.isdigit() and int(cpus) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}"
+        )
+    return f"local[{int(cpus)}]"
+
+
+def restore_conf(spark: SparkSession, saved: Mapping[str, str | None]) -> None:
+    """Put session SQL conf keys back to ``saved``, where None means the
+    key was unset (``spark.conf.get(k, None)`` is None only for unset
+    keys). Such a key is unset again, never re-set to its effective
+    default: that would flip it to explicitly set, which the conf-leak
+    gate in ``oracle.check_all`` reports as a leak."""
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]):
+    """Set ``confs`` on the session for the body of the ``with`` and
+    restore every key afterwards (also on an exception), by
+    :func:`restore_conf`'s rule. Scopes nest: each restores what it
+    found."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        restore_conf(spark, saved)
 
 
 def get_spark(

@@ -15,12 +15,18 @@ stream length — that is what makes these queries run forever at scale.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from amadou_spark.session import conf_scope
+
+_CHANGELOG_KEY = (
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+)
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events table as a stream.
@@ -51,7 +57,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_stream_to_table(
     stream_df: DataFrame,
     mode: str = "complete",
-    state_partitions: int | None = None,
+    state_partitions: int = 4,
     confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Drive a (finite) streaming query to completion through a memory
@@ -63,58 +69,33 @@ def run_stream_to_table(
     and every microbatch pays a task per store — with the batch-tuned
     32-partition default, stateful queries here spent 2× longer on
     store bookkeeping than on data (measured 7.7s → 1.2s at sf0.1).
-    Size it to expected STATE, not batch shuffle width; the conf is
-    saved/restored around start so the session default is untouched.
-    r10 picked 4 from a warm paired sweep; r11 re-measured under
-    driver conditions (cold JVM, 32 cores) and the default is now
-    ``None`` = read ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` (env,
-    local default below) — a deployment sizes this to expected state
-    volume, not to the local micro-benchmark. The two PYTHON-stateful
-    queries (applyInPandasWithState, transformWithState) pass 8
-    explicitly: their per-partition work crosses the Python boundary
-    and was measured ~30% SLOWER at 4. It is per-query, not a session
-    constant.
+    Size it to expected STATE, not batch shuffle width. The two
+    PYTHON-stateful queries (applyInPandasWithState,
+    transformWithState) pass 8: their per-partition work crosses the
+    Python boundary and was measured ~30% SLOWER at 4.
 
     ``confs``: extra session confs the query must see at START (e.g.
     ``stateful.ROCKSDB_PROVIDER_CONF`` for transformWithState on a
-    vanilla session) — applied and restored exactly like
-    shuffle.partitions, so nothing leaks into later queries (r9,
-    VERDICT r8 #2 / ADVICE)."""
+    vanilla session). All start confs are set only around ``start()``
+    and then restored, so nothing leaks into later queries."""
     spark = stream_df.sparkSession
     name = f"amadou_stream_{uuid.uuid4().hex[:8]}"
-    if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
-        )
-    to_set = dict(confs or {})
-    to_set["spark.sql.shuffle.partitions"] = str(state_partitions)
-    # r10: changelog checkpointing must be ON at query start for the
-    # commit path to write deltas instead of full per-store snapshots
-    # (see session.py _DEFAULTS — this covers vanilla sessions too).
-    # Caller-provided confs win, then an EXPLICIT session conf (so a
-    # probe/deployment session can turn it off), then the engine
-    # default; set/restored like everything else.
-    _cl_key = (
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled"
-    )
-    to_set.setdefault(_cl_key, spark.conf.get(_cl_key, "true"))
-    saved = {k: spark.conf.get(k, None) for k in to_set}
-    for k, v in to_set.items():
-        spark.conf.set(k, v)
-    try:
+    # Changelog checkpointing must be ON at query start for the commit
+    # path to write deltas instead of full per-store snapshots (see
+    # session._DEFAULTS; this covers vanilla sessions too). Caller confs
+    # win, then an EXPLICIT session value, then the engine default.
+    start_confs = {
+        _CHANGELOG_KEY: spark.conf.get(_CHANGELOG_KEY, "true"),
+        **(confs or {}),
+        "spark.sql.shuffle.partitions": str(state_partitions),
+    }
+    with conf_scope(spark, start_confs):
         q = (
             stream_df.writeStream.outputMode(mode)
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        for k, prev in saved.items():
-            if prev is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev)
     try:
         q.processAllAvailable()
     finally:

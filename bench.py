@@ -1,7 +1,15 @@
 """Benchmark harness: run the declared-query suite and print ONE JSON line.
 
+Usage: python bench.py              full registry, output below
+       python bench.py name [...]   only the named queries (A/B probes)
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default all cores → local[*]).
+SPARK_GRAFT_BENCH_RUNS sets the samples per query (default 3).
+
+With query names, the run keeps the same warm-ups, cleanup and min-of-N
+and prints {"queries": {name: min_sec}, "samples": {...}, "sum_min": s};
+it writes no BENCH_DETAIL file.
 
 Output: {"metric": "suite_wall_clock", "value": <total-sec>, "unit": "sec",
          "queries": {name: sec, ...}, "sf": <sf>, ...}
@@ -23,7 +31,10 @@ worker startup.
 from __future__ import annotations
 
 import json
+import math
 import os
+import re
+import statistics
 import sys
 import time
 
@@ -37,10 +48,14 @@ from amadou_spark.queries import REGISTRY, _load  # noqa: E402
 from amadou_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("amadou-bench")
     _load()
+    unknown = [n for n in names if n not in REGISTRY]
+    duplicate = sorted({n for n in names if names.count(n) > 1})
+    if unknown or duplicate:
+        sys.exit(f"unknown queries: {unknown}; duplicate queries: {duplicate}")
+    spark = get_spark("amadou-bench")
 
     # warmup: JVM + parquet footer caches
     REGISTRY["q01_scan_projection"].fn(spark, sf_dir).count()
@@ -69,9 +84,11 @@ def main() -> None:
     # suite (A,B,C,A,B,C... not A,A,A,B,B,B) so a transient system-wide
     # stall can't poison all samples of one query.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    samples: dict[str, list[float]] = {name: [] for name in REGISTRY}
+    subset = bool(names)
+    names = names or sorted(REGISTRY)
+    samples: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(runs):
-        for name in sorted(REGISTRY):
+        for name in names:
             fn = REGISTRY[name].fn
             started = time.perf_counter()
             fn(spark, sf_dir).count()
@@ -79,6 +96,13 @@ def main() -> None:
             samples[name].append(round(elapsed, 3))
             cleanup()
     timings = {name: min(vals) for name, vals in samples.items()}
+    if subset:
+        print(json.dumps({
+            "queries": timings,
+            "samples": samples,
+            "sum_min": round(sum(timings.values()), 3),
+        }, separators=(",", ":")))
+        return
 
     # headline metric = the declared benchmark set (BASELINE.md): SURVEY
     # §2.2 Tier A (Q01-Q30). Tier B / LLM / extension timings are still
@@ -86,10 +110,8 @@ def main() -> None:
     # (full numeric prefix, not k[1:3]: the 2-char slice let q100+ leak
     # into the Q01-Q30 headline — q100_trend_fit inflated r4's value by
     # ~0.5 s and q101-q103 would distort it further)
-    import re as _re
-
     def _tier_a_num(k: str) -> int:
-        m = _re.match(r"q(\d+)", k)
+        m = re.match(r"q(\d+)", k)
         return int(m.group(1)) if m else 999
 
     tier_a = {k: v for k, v in timings.items() if _tier_a_num(k) <= 30}
@@ -139,12 +161,10 @@ def main() -> None:
     # and to keep the drift comparison honest (VERDICT r7 #5: an
     # earlier same-round stamp must never become the drift baseline —
     # the field exists to name the PRIOR round being compared against).
-    import re as _re
-
     rounds = [
         int(m.group(1))
         for fn in os.listdir(here)
-        if (m := _re.match(r"BENCH_r(\d+)\.json$", fn))
+        if (m := re.match(r"BENCH_r(\d+)\.json$", fn))
     ]
     this_round = (max(rounds) + 1) if rounds else 1
 
@@ -154,13 +174,10 @@ def main() -> None:
     # Median over 200+ queries isolates the uniform host factor from
     # individual regressions; consumers divide by it before comparing.
     try:
-        import re as _re2
-        import statistics
-
         prior_files = sorted(
             fn
             for fn in os.listdir(here)
-            if (m2 := _re2.match(r"BENCH_DETAIL_r(\d+)\.json$", fn))
+            if (m2 := re.match(r"BENCH_DETAIL_r(\d+)\.json$", fn))
             and int(m2.group(1)) < this_round
         )
         for prior_name in reversed(prior_files):
@@ -168,38 +185,32 @@ def main() -> None:
                 prior = json.load(fh)
             if abs(prior.get("sf", -1) - sf) > 1e-9:
                 continue
-            common = [
-                timings[q] / prior["queries"][q]
+            ratios = {
+                q: timings[q] / prior["queries"][q]
                 for q in timings
                 if prior["queries"].get(q)
-            ]
-            if len(common) >= 20:
+            }
+            if len(ratios) >= 20:
+                drift = statistics.median(ratios.values())
                 payload["drift_median_vs"] = prior_name.replace(
                     "BENCH_DETAIL_", ""
                 ).replace(".json", "")
-                payload["drift_median"] = round(
-                    statistics.median(common), 3
-                )
-                # r11 (VERDICT r10 #8): name the biggest per-query movers
-                # vs the prior round IN the stdout line, so a 3-4x win on
-                # a query that left the slow tail (or a big regression)
-                # can't silently vanish from the driver's tail window.
-                # speedup = prior/now (>1 improved), only movers outside
-                # [0.8, 1.25], capped at 8 entries. Additions-only.
-                import math
-
+                payload["drift_median"] = round(drift, 3)
+                # Name the biggest per-query movers vs the prior round IN
+                # the stdout line, so a 3-4x win on a query that left the
+                # slow tail (or a big regression) can't silently vanish
+                # from the ~2 KB stdout tail. Each value is a
+                # drift-normalized speedup, drift_median / (now/prior)
+                # (>1 improved), so uniform host drift cannot fill the 8
+                # entries; only movers outside [0.8, 1.25] are kept.
+                speedups = {q: drift / r for q, r in ratios.items() if r > 0}
                 movers = sorted(
-                    (
-                        (q, prior["queries"][q] / timings[q])
-                        for q in timings
-                        if prior["queries"].get(q) and timings[q] > 0
-                    ),
-                    key=lambda kv: -abs(math.log(kv[1])),
+                    speedups, key=lambda q: -abs(math.log(speedups[q]))
                 )
                 payload["top_deltas"] = {
-                    q: round(r, 2)
-                    for q, r in movers[:8]
-                    if r < 0.8 or r > 1.25
+                    q: round(speedups[q], 2)
+                    for q in movers[:8]
+                    if speedups[q] < 0.8 or speedups[q] > 1.25
                 }
             break
     except Exception:
@@ -237,4 +248,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -17,6 +17,7 @@ import pytest
 
 from amadou_spark.oracle import _canon
 from amadou_spark.queries import REGISTRY, _load
+from amadou_spark.session import conf_scope
 
 _load()
 
@@ -49,13 +50,7 @@ def _multiset(df):
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_output_is_partition_order_stable(spark, sf_dir, name):
     fn = REGISTRY[name].fn
-    before = {k: spark.conf.get(k) for k in _PERTURB}
     base = _multiset(fn(spark, sf_dir))
-    try:
-        for k, v in _PERTURB.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, _PERTURB):
         perturbed = _multiset(fn(spark, sf_dir))
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
     assert perturbed == base

@@ -406,17 +406,17 @@ def test_ntile_domain_tables_local_matches_cluster_side(spark):
 def test_ntile_domain_tables_local_one_melt_many_measures(spark):
     """Several measures share ONE collect; each table matches its
     single-measure twin."""
-    from amadou_spark.scale import (
-        ntile_domain_table_local,
-        ntile_domain_tables_local,
-    )
+    from amadou_spark.scale import ntile_domain_tables_local
 
     rows = [(i, i % 5, (i * 7) % 11) for i in range(97)]
     df = spark.createDataFrame(rows, "id int, a long, b long")
     tabs = ntile_domain_tables_local(df, [("a", 4, "a"), ("b", 3, "b")])
     for col, k, p in (("a", 4, "a"), ("b", 3, "b")):
         single = sorted(
-            map(tuple, ntile_domain_table_local(df, col, k, p).collect())
+            map(
+                tuple,
+                ntile_domain_tables_local(df, [(col, k, p)])[p].collect(),
+            )
         )
         assert sorted(map(tuple, tabs[p].collect())) == single
 
@@ -436,35 +436,56 @@ def test_ntile_domain_tables_local_rejects_nulls_by_name(spark):
         ntile_domain_tables_local(df, [("a", 4, "a")])
 
 
-def test_loop_and_gate_confs_restore_unset_keys(spark):
-    """loop_confs/gate_confs must restore a previously-UNSET key to
-    UNSET (not re-set it to its effective default): the registry-wide
-    conf-leak gate diffs the EXPLICIT conf map, so flipping a key from
-    implicit to explicit is a leak (r10)."""
-    from amadou_spark.scale import gate_confs, loop_confs
+def test_conf_scope_restores_set_and_unset_keys(spark):
+    """conf_scope must put an explicitly set key back to its old value
+    and restore a previously UNSET key to UNSET (not re-set it to its
+    effective default): the registry-wide conf-leak gate diffs the
+    EXPLICIT conf map, so flipping a key from implicit to explicit is a
+    leak. The restore also runs on an exception, and nested scopes on
+    one key unwind to the original value."""
+    from amadou_spark.scale import GATE_CONFS, loop_confs
+    from amadou_spark.session import conf_scope
 
-    keys = [
-        "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions",
-        "spark.sql.codegen.wholeStage",
-    ]
+    aqe = "spark.sql.adaptive.enabled"
+    width = "spark.sql.shuffle.partitions"
+    codegen = "spark.sql.codegen.wholeStage"
+    assert loop_confs(spark, 10) == {aqe: "false", width: "1", codegen: "false"}
 
     def explicit(k):
         # RuntimeConfig.get(k, None) is None only for unset keys
         return spark.conf.get(k, None)
 
-    before = {k: explicit(k) for k in keys}
-    with loop_confs(spark, 10):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert spark.conf.get("spark.sql.codegen.wholeStage") == "false"
-    with gate_confs(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    after = {k: explicit(k) for k in keys}
-    assert after == before, f"conf leak: {before} -> {after}"
+    unset_key = "spark.sql.amadou.test.unsetKey"
+    set_key = "spark.sql.amadou.test.setKey"
+    spark.conf.set(set_key, "old")
+    try:
+        keys = [aqe, width, codegen, unset_key, set_key]
+        before = {k: explicit(k) for k in keys}
+        assert before[unset_key] is None and before[set_key] == "old"
 
-    # restore must also run on exception (finally path)
-    with pytest.raises(RuntimeError):
-        with gate_confs(spark):
-            raise RuntimeError("boom")
-    assert {k: explicit(k) for k in keys} == before
+        with conf_scope(spark, loop_confs(spark, 10)):
+            assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(width) == "1"
+            assert spark.conf.get(codegen) == "false"
+        with conf_scope(spark, GATE_CONFS):
+            assert spark.conf.get(aqe) == "false"
+        with conf_scope(spark, {unset_key: "x", set_key: "new"}):
+            assert explicit(unset_key) == "x"
+            assert explicit(set_key) == "new"
+        assert {k: explicit(k) for k in keys} == before
+
+        # restore must also run on exception (finally path)
+        with pytest.raises(RuntimeError):
+            with conf_scope(spark, {aqe: "false", unset_key: "x"}):
+                raise RuntimeError("boom")
+        assert {k: explicit(k) for k in keys} == before
+
+        # nested scopes on one key unwind to the original value
+        for key in (unset_key, set_key):
+            with conf_scope(spark, {key: "outer"}):
+                with conf_scope(spark, {key: "inner"}):
+                    assert explicit(key) == "inner"
+                assert explicit(key) == "outer"
+            assert explicit(key) == before[key]
+    finally:
+        spark.conf.unset(set_key)

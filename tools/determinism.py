@@ -38,17 +38,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from amadou_spark.oracle import _canon  # noqa: E402
 from amadou_spark.queries import REGISTRY, _load  # noqa: E402
-from amadou_spark.session import get_spark  # noqa: E402
+from amadou_spark.session import conf_scope, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: (conf key, layout A value, layout B value) — B forces a different
-#: shuffle fan-in and disables runtime coalescing so partial-aggregate
-#: merge trees genuinely differ.
-_PERTURB = [
-    ("spark.sql.shuffle.partitions", "32", "7"),
-    ("spark.sql.adaptive.coalescePartitions.enabled", "true", "false"),
-]
+#: The two layouts. B forces a different shuffle fan-in and disables
+#: runtime coalescing so partial-aggregate merge trees genuinely differ.
+_LAYOUT_A = {
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+}
+_LAYOUT_B = {
+    "spark.sql.shuffle.partitions": "7",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+}
 
 
 def _multiset(df) -> list:
@@ -72,20 +75,15 @@ def main() -> int:
     for name in names or sorted(REGISTRY):
         fn = REGISTRY[name].fn
         try:
-            for key, a, _ in _PERTURB:
-                spark.conf.set(key, a)
-            ma = _multiset(fn(spark, sf_dir))
-            for key, _, b in _PERTURB:
-                spark.conf.set(key, b)
-            mb = _multiset(fn(spark, sf_dir))
+            with conf_scope(spark, _LAYOUT_A):
+                ma = _multiset(fn(spark, sf_dir))
+            with conf_scope(spark, _LAYOUT_B):
+                mb = _multiset(fn(spark, sf_dir))
         except Exception as exc:
             results[name] = {"ok": False, "detail": f"EXCEPTION: {exc}"[:300]}
             n_bad += 1
             print(f"[ERR ] {name}: {exc}", flush=True)
             continue
-        finally:
-            for key, a, _ in _PERTURB:
-                spark.conf.set(key, a)
         if ma == mb:
             results[name] = {"ok": True, "detail": ""}
             print(f"[ OK ] {name}", flush=True)
