@@ -4,15 +4,16 @@ The reference's pipelines gate stages on schema contracts
 (``core/.../Schema.scala`` asserts StructType equality in tests); the
 row-level complement is an expectations check: not-null rates, value
 ranges, set membership, uniqueness, row-level predicates. This module
-evaluates a whole rule list as conditional aggregates in a single scan
-— no per-rule jobs, no shuffle except uniqueness (which needs one
-by definition, over the checked key only).
+evaluates a whole rule list, uniqueness keys included, as ONE aggregate
+over one scan: one Spark action, no per-rule jobs.
 
-Scale design: N non-uniqueness rules compile to one ``agg`` over one
-scan (map-side partial aggregation, a 1-row result); each uniqueness
-rule adds one hash-shuffle over its key columns ONLY (fixed-width,
-payload never moves). Results come back as a tidy (rule, violations,
-total, pass) table so callers can warn, fail, or write an audit row.
+Scale design: each row rule is a conditional ``sum`` (map-side partial
+aggregation, a 1-row result); each uniqueness key adds one
+``count(DISTINCT struct(key))`` to the same aggregate, so only the key
+columns are shuffled (fixed-width, payload never moves). The report is
+a list of (rule, violations, total, pass) rows read on the driver;
+``check_expectations`` wraps it as a DataFrame for callers that warn,
+fail, or write an audit row.
 """
 
 from __future__ import annotations
@@ -47,10 +48,12 @@ def rule_between(col: str, lo, hi) -> Expectation:
 
 
 def rule_in_set(col: str, allowed) -> Expectation:
+    """Membership check; NULL passes (combine with rule_not_null). A
+    ``None`` in ``allowed`` is dropped: ``x IN (.., NULL)`` is NULL for
+    every non-member ``x``, which would let it through uncounted."""
     c = F.col(col)
-    return Expectation(
-        f"in_set({col})", c.isNotNull() & ~c.isin(list(allowed))
-    )
+    values = [v for v in allowed if v is not None]
+    return Expectation(f"in_set({col})", c.isNotNull() & ~c.isin(values))
 
 
 def rule_matches(col: str, regex: str) -> Expectation:
@@ -66,6 +69,33 @@ def rule_predicate(name: str, good: Column) -> Expectation:
     return Expectation(name, ~F.coalesce(good, F.lit(False)))
 
 
+_REPORT_SCHEMA = "rule string, violations long, total long, pass boolean"
+
+
+def _report(
+    df: DataFrame,
+    rules: list[Expectation],
+    unique_keys: list[list[str]] | None,
+) -> list[tuple[str, int, int, bool]]:
+    """(rule, violations, total, pass) per rule, from ONE aggregate.
+
+    A uniqueness key's violations are ``total - count(DISTINCT
+    struct(cols))``: the rows beyond the first per duplicate key (the
+    number a dedup would drop). A struct is never NULL and groups NULL,
+    NaN and -0.0 fields exactly as ``groupBy(cols)`` does."""
+    keys = unique_keys or []
+    total, *values = df.agg(
+        F.count(F.lit(1)),
+        *[F.sum(r.violated.cast("long")) for r in rules],
+        *[F.count_distinct(F.struct(*cols)) for cols in keys],
+    ).collect()[0]
+    names = [r.name for r in rules] + [f"unique({','.join(c)})" for c in keys]
+    violations = [v or 0 for v in values[: len(rules)]] + [
+        total - distinct for distinct in values[len(rules):]
+    ]
+    return [(n, v, total, v == 0) for n, v in zip(names, violations)]
+
+
 def check_expectations(
     df: DataFrame,
     rules: list[Expectation],
@@ -73,36 +103,12 @@ def check_expectations(
 ) -> DataFrame:
     """Evaluate all rules; returns (rule, violations, total, pass).
 
-    Row-level rules cost ONE scan total. Each entry of ``unique_keys``
-    (a list of column lists) adds a uniqueness check costing one
-    shuffle over those columns: violations = rows beyond the first per
-    duplicate key (the number of rows a dedup would drop).
-    """
-    spark = df.sparkSession
-    aggs = [F.count(F.lit(1)).alias("_total")] + [
-        F.sum(r.violated.cast("long")).alias(f"_v{i}")
-        for i, r in enumerate(rules)
-    ]
-    row = df.agg(*aggs).collect()[0]
-    total = row["_total"]
-    results = [
-        (r.name, int(row[f"_v{i}"] or 0), total) for i, r in enumerate(rules)
-    ]
-    for cols in unique_keys or []:
-        dup = (
-            df.groupBy(*cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .agg(
-                F.coalesce(F.sum(F.col("_n") - 1), F.lit(0)).alias("_dups")
-            )
-            .collect()[0]["_dups"]
-        )
-        results.append((f"unique({','.join(cols)})", int(dup), total))
-    out = spark.createDataFrame(
-        [(n, v, t, v == 0) for n, v, t in results],
-        "rule string, violations long, total long, pass boolean",
+    Every rule, and every entry of ``unique_keys`` (a list of column
+    lists), is counted in one aggregate over one scan; each uniqueness
+    key adds one key-only shuffle to it."""
+    return df.sparkSession.createDataFrame(
+        _report(df, rules, unique_keys), _REPORT_SCHEMA
     )
-    return out
 
 
 def assert_expectations(
@@ -113,12 +119,9 @@ def assert_expectations(
     """Fail-fast variant: raises with every violated rule listed, else
     returns ``df`` unchanged (stage-compose like the reference's sinks
     pass their input through)."""
-    report = check_expectations(df, rules, unique_keys).collect()
-    bad = [r for r in report if not r["pass"]]
+    bad = [r for r in _report(df, rules, unique_keys) if not r[3]]
     if bad:
-        lines = ", ".join(
-            f"{r['rule']}: {r['violations']}/{r['total']}" for r in bad
-        )
+        lines = ", ".join(f"{name}: {v}/{t}" for name, v, t, _ in bad)
         raise ValueError(f"expectations violated — {lines}")
     return df
 
@@ -131,23 +134,25 @@ def check_referential(
 ) -> DataFrame:
     """Foreign-key expectation: rows of ``df`` whose ``col`` has no
     match in ``dim.dim_col`` (NULLs pass — compose with rule_not_null).
-    One left-anti join on the key columns only (fixed-width shuffle;
-    AQE broadcasts the dim side when it fits). Returns the same
-    (rule, violations, total, pass) shape as check_expectations."""
-    spark = df.sparkSession
-    total = df.count()
-    orphans = (
-        df.select(F.col(col)).filter(F.col(col).isNotNull())
-        .join(
-            dim.select(F.col(dim_col).alias(col)).distinct(),
-            on=col,
-            how="left_anti",
+    One action: ``df``'s key column left-joined to the distinct dim
+    keys (fixed-width shuffle; AQE broadcasts the dim side when it
+    fits), counting rows and non-NULL unmatched keys in one aggregate.
+    Returns the same (rule, violations, total, pass) shape as
+    check_expectations."""
+    key, ref = F.col("_key"), F.col("_ref")
+    total, orphans = (
+        df.select(F.col(col).alias("_key"))
+        .join(dim.select(F.col(dim_col).alias("_ref")).distinct(),
+              key == ref, "left")
+        .agg(
+            F.count(F.lit(1)),
+            F.count(F.when(key.isNotNull() & ref.isNull(), 1)),
         )
-        .count()
+        .collect()[0]
     )
-    return spark.createDataFrame(
+    return df.sparkSession.createDataFrame(
         [(f"references({col}->{dim_col})", orphans, total, orphans == 0)],
-        "rule string, violations long, total long, pass boolean",
+        _REPORT_SCHEMA,
     )
 
 

@@ -43,6 +43,20 @@ class SparkJob:
     )
 
 
+def retry_max(config: Config) -> int:
+    """Attempts per stage: ``AMADOU_RETRY_MAX`` when set, else the
+    ``retry.max`` config key. Anything but an integer >= 1 fails here,
+    naming its source, instead of silently meaning one attempt."""
+    value = os.environ.get("AMADOU_RETRY_MAX")
+    source = "AMADOU_RETRY_MAX"
+    if value is None:
+        value, source = config.get("retry.max", 3), "retry.max"
+    text = str(value)
+    if not (text.isascii() and text.isdigit() and int(text) >= 1):
+        raise ValueError(f"{source} must be an integer >= 1, got {value!r}")
+    return int(text)
+
+
 class SparkRunner:
     def __init__(self, job: SparkJob, config: Config | None = None):
         self.job = job
@@ -51,16 +65,14 @@ class SparkRunner:
 
     def run(self, spark: SparkSession | None = None) -> list[DateInterval]:
         """Execute the backfill loop; returns the dates actually run."""
+        retry = RetryPolicy(
+            max_attempts=retry_max(self.config),
+            delay_seconds=float(self.config.get("retry.delay_seconds", 0.0)),
+        )
         own_session = spark is None
         if spark is None:
             spark = get_spark(self.job.name, conf=self.config.spark_conf())
         metrics = MetricsCollector(spark)
-        retry = RetryPolicy(
-            max_attempts=int(
-                os.environ.get("AMADOU_RETRY_MAX", self.config.get("retry.max", 3))
-            ),
-            delay_seconds=float(self.config.get("retry.delay_seconds", 0.0)),
-        )
         dates = backfill_dates(
             self.job.schedule,
             should_run=lambda d: self.job.should_run_for_date(spark, d),

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from amadou_spark.dates import DateInterval, Schedule
 from amadou_spark.io import has_data_for_date, read_csv, write_date_partition
 from amadou_spark.monitoring.messaging import RecordingMessagingSystem
-from amadou_spark.runner import SparkJob, SparkRunner
+from amadou_spark.runner import SparkJob, SparkRunner, retry_max
 from amadou_spark.config import Config, load_config
 from amadou_spark.stage import sink, source, transform
 from amadou_spark.urls import DataUrl
@@ -148,3 +148,41 @@ def test_etl_rerun_is_idempotent_and_skipped(spark, workdir):
         del os.environ["START_DATE"]
     out = spark.read.parquet(clean_root)
     assert out.count() == 3  # not 6 — partition replaced, not appended
+
+
+@pytest.mark.parametrize(
+    "env, configured, source",
+    [
+        ("", 3, "AMADOU_RETRY_MAX"),
+        ("0", 3, "AMADOU_RETRY_MAX"),
+        ("-2", 3, "AMADOU_RETRY_MAX"),
+        ("abc", 3, "AMADOU_RETRY_MAX"),
+        (None, "0", "retry.max"),
+        (None, "abc", "retry.max"),
+        (None, 1.5, "retry.max"),
+    ],
+)
+def test_bad_retry_max_fails_naming_its_source(monkeypatch, env, configured, source):
+    if env is None:
+        monkeypatch.delenv("AMADOU_RETRY_MAX", raising=False)
+    else:
+        monkeypatch.setenv("AMADOU_RETRY_MAX", env)
+    with pytest.raises(ValueError, match=source):
+        retry_max(Config({"retry.max": configured}))
+
+
+def test_retry_max_env_wins_over_config(monkeypatch):
+    monkeypatch.setenv("AMADOU_RETRY_MAX", "2")
+    assert retry_max(Config({"retry.max": 5})) == 2
+    monkeypatch.delenv("AMADOU_RETRY_MAX")
+    assert retry_max(Config({"retry.max": 5})) == 5
+    assert retry_max(Config({})) == 3
+
+
+def test_runner_rejects_bad_retry_max_before_running(spark, monkeypatch, workdir):
+    monkeypatch.setenv("AMADOU_RETRY_MAX", "0")
+    runner = SparkRunner(build_job(os.path.join(workdir, "clean")), Config({}))
+    runner.messaging = RecordingMessagingSystem()
+    with pytest.raises(ValueError, match="AMADOU_RETRY_MAX"):
+        runner.run(spark)
+    assert runner.messaging.events == []

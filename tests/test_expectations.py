@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,6 +97,11 @@ def test_referential_integrity(spark, sf_dir):
     partial = region.filter(F.col("r_regionkey") != 0)
     bad = check_referential(nation, "n_regionkey", partial, "r_regionkey").collect()[0]
     assert not bad["pass"] and bad.violations > 0
+    # a NULL key is not an orphan, but it is a row of the total
+    null_row = spark.createDataFrame([(None,)], "n_regionkey long")
+    with_null = nation.select("n_regionkey").unionByName(null_row)
+    rep = check_referential(with_null, "n_regionkey", region, "r_regionkey").collect()[0]
+    assert (rep.violations, rep.total, rep["pass"]) == (0, nation.count() + 1, True)
 
 
 def test_single_scan_for_row_rules(messy):
@@ -108,3 +115,67 @@ def test_single_scan_for_row_rules(messy):
     )
     plan = agg._jdf.queryExecution().optimizedPlan().toString()
     assert plan.lower().count("logicalrdd") + plan.count("Relation") == 1
+
+
+def test_in_set_with_none_allowed_still_counts_bad_values(messy):
+    # x IN ('gold', NULL) is NULL for x='blue'; the NULL must not hide it
+    rep = check_expectations(messy, [rule_in_set("tier", ["gold", None])]).collect()
+    assert rep[0].violations == 2  # 'blue' and 'silver'
+
+
+_UNIQUE_CASES = {
+    "null_keys": ("k long", [(None,), (None,), (1,), (2,)], ["k"]),
+    "nan_keys": ("k double", [(float("nan"),), (float("nan"),), (1.0,)], ["k"]),
+    "signed_zero": ("k double", [(-0.0,), (0.0,), (0.0,), (1.0,)], ["k"]),
+    "two_cols_null_part": (
+        "a long, b string",
+        [(1, None), (1, None), (None, "x"), (None, None), (None, None), (1, "x")],
+        ["a", "b"],
+    ),
+    "empty": ("a long, b string", [], ["a", "b"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UNIQUE_CASES))
+def test_unique_matches_group_by_definition(spark, case):
+    """unique(cols) violations = rows beyond the first per groupBy key,
+    for keys where distinct counting and grouping could disagree."""
+    schema, rows, cols = _UNIQUE_CASES[case]
+    df = spark.createDataFrame(rows, schema)
+    want = sum(r["count"] - 1 for r in df.groupBy(*cols).count().collect())
+    rep = check_expectations(df, [], unique_keys=[cols]).collect()
+    assert [(r.violations, r.total) for r in rep] == [(want, len(rows))]
+
+
+def _jobs_launched(spark, action) -> int:
+    sc = spark.sparkContext
+    tag = f"expectations-jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        action()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_assert_runs_as_one_aggregate(spark, sf_dir):
+    """assert_expectations with a uniqueness key launches no more Spark
+    jobs than one collect() of the same aggregate: no extra per-key
+    action and no report round trip."""
+    events = load_table(spark, sf_dir, "events")
+    rules = [
+        rule_not_null("event_id"),
+        rule_in_set("event_type", ["click", "view", "purchase", "signup", "error"]),
+    ]
+    agg = events.agg(
+        F.count(F.lit(1)),
+        *[F.sum(r.violated.cast("long")) for r in rules],
+        F.count_distinct(F.struct("event_id")),
+    )
+    reference = _jobs_launched(spark, agg.collect)
+    used = _jobs_launched(
+        spark, lambda: assert_expectations(events, rules, [["event_id"]])
+    )
+    assert reference >= 1 and used <= reference
