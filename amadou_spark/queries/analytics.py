@@ -1891,7 +1891,7 @@ def _km_survival_components(events: DataFrame):
             -- (decimal128 at the Arrow layer); the driver hash is
             -- type-sensitive (q69 r2 precedent), so without the cast the
             -- row can never hash-match Spark's bigint even when every
-            -- value is identical. tools/typeaudit.py flags this class.
+            -- value is identical. The type-parity gate (tools/check.py) flags this class.
             SELECT t, d,
                    CAST((SELECT CAST(count(*) AS BIGINT) FROM durations)
                        - COALESCE(SUM(c) OVER (ORDER BY t
@@ -3378,7 +3378,7 @@ def q149_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             -- (decimal128 at the Arrow layer); the driver hash is
             -- type-sensitive (q69 r2 precedent), so without the cast the
             -- row can never hash-match Spark's bigint even when every
-            -- value is identical. tools/typeaudit.py flags this class.
+            -- value is identical. The type-parity gate (tools/check.py) flags this class.
             SELECT t, d,
                    CAST((SELECT CAST(count(*) AS BIGINT) FROM durations)
                        - COALESCE(SUM(c) OVER (ORDER BY t
@@ -3420,7 +3420,7 @@ def q149_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "an identical scalar op chain in both engines. Both oracle window "
     "sums carry CAST(... AS BIGINT) because DuckDB promotes "
     "BIGINT-SUM(BIGINT) OVER to HUGEINT and the driver hash is "
-    "type-sensitive (the q69 precedent; tools/typeaudit.py gates it)",
+    "type-sensitive (the q69 precedent; the type-parity gate in tools/check.py gates it)",
     tags=("stats", "timeseries", "events"),
 )
 def q151_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -82,7 +82,7 @@ def restore_conf(spark: SparkSession, saved: Mapping[str, str | None]) -> None:
     key was unset (``spark.conf.get(k, None)`` is None only for unset
     keys). Such a key is unset again, never re-set to its effective
     default: that would flip it to explicitly set, which the conf-leak
-    gate in ``oracle.check_all`` reports as a leak."""
+    gate (``oracle.run_query``) reports as a leak."""
     for k, v in saved.items():
         if v is None:
             spark.conf.unset(k)

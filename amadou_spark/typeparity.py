@@ -15,17 +15,17 @@ This module compares the ARROW-level schema of both results. Any pair
 outside the known-equivalent set is a latent driver hash mismatch: fix
 it with explicit CASTs on BOTH sides (the repo convention).
 
-``tools/typeaudit.py`` is the CLI; ``tests/test_typeaudit.py`` runs the
-same check registry-wide so the class is structurally impossible to
-reintroduce (VERDICT r6 'Next round' #2).
+:func:`type_flags` is one of the per-record gates of
+:func:`amadou_spark.oracle.check_all` (``tools/check.py``), and
+``tests/test_typeaudit.py`` runs it registry-wide so the class is
+structurally impossible to reintroduce.
 """
 
 from __future__ import annotations
 
 import duckdb
-from pyspark.sql import SparkSession
 
-from amadou_spark.queries import REGISTRY, _load
+from amadou_spark.queries import REGISTRY
 
 # (spark simpleString, duckdb/arrow type str) pairs that hash the same
 # on the driver (same arrow logical type after its normalization).
@@ -49,16 +49,13 @@ OK_PAIRS = {
 }
 
 
-def spark_arrow_types(sdf) -> dict[str, str]:
-    """Column -> Spark simpleString. Driver-side analysis only (lazy)."""
-    return {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-
-
 def duck_arrow_types(
     con: duckdb.DuckDBPyConnection, sql: str
 ) -> dict[str, str]:
-    """Column -> Arrow type string, as the driver's hasher sees it."""
-    tbl = con.execute(sql).arrow()
+    """Column -> Arrow type string, as the driver's hasher sees it. The
+    types are fixed when the SQL binds, so a zero-row read of the
+    relation gives them without executing the query."""
+    tbl = con.sql(sql).limit(0).arrow()
     return {f.name: str(f.type) for f in tbl.schema}
 
 
@@ -79,21 +76,12 @@ def column_flags(st: dict[str, str], dt: dict[str, str]) -> list[str]:
     return flags
 
 
-def audit_query(
-    spark: SparkSession,
-    con: duckdb.DuckDBPyConnection,
-    name: str,
-    sf_dir: str,
-) -> list[str]:
-    """Flags for one registered query; empty list = type-parity green.
-
-    Queries without an oracle have no driver hash to diverge from and
-    return no flags.
-    """
-    _load()
-    q = REGISTRY[name]
-    if q.oracle is None:
+def type_flags(con: duckdb.DuckDBPyConnection, run) -> list[str]:
+    """Flags for one :class:`amadou_spark.oracle.QueryRun` record; an
+    empty list is type-parity green. Queries without an oracle have no
+    driver hash to diverge from, and a failed run is reported by the
+    oracle gate, so neither is flagged here."""
+    oracle = REGISTRY[run.name].oracle
+    if oracle is None or run.error is not None:
         return []
-    st = spark_arrow_types(q.fn(spark, sf_dir))
-    dt = duck_arrow_types(con, q.oracle)
-    return column_flags(st, dt)
+    return column_flags(run.types, duck_arrow_types(con, oracle))

@@ -24,3 +24,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def query_run(spark, sf_dir):
+    """``query_run(name)`` -> that registry query's
+    :class:`amadou_spark.oracle.QueryRun` at ``sf_dir``. Each query is
+    built and run once per session; every registry gate (oracle, type
+    parity, conf leak, plan hygiene and pins) reads the same record."""
+    from amadou_spark.oracle import run_query
+
+    runs: dict = {}
+
+    def get(name: str):
+        if name not in runs:
+            runs[name] = run_query(spark, name, sf_dir)
+        return runs[name]
+
+    return get

@@ -1,20 +1,24 @@
-"""Session-conf hygiene over the streaming family (r9, VERDICT r8 #2).
+"""Session-conf hygiene, registry-wide.
 
-The r8 bench regression class: an operator that mutates shared session
+The bench regression class: an operator that mutates shared session
 conf as a side effect (running_totals_stream used to flip the
 state-store provider permanently) silently changes the environment
-every LATER query runs under. This test executes every streaming-family
-registry entry end-to-end and asserts the session's SQL conf is
-byte-identical before and after — any new leak in this family turns
-into a red test naming the key, not a bench-drift mystery two rounds
-later.
+every LATER query runs under. Every registry query's shared
+``query_run`` record carries the full before/after diff of the
+session's SQL conf (``oracle.conf_snapshot``: every explicitly-set key
+except the documented one-way ``spark.sql.legacy.parquet.nanosAsLong``),
+so any leak turns into a red test naming the key, not a bench-drift
+mystery two rounds later. The streaming family, where the class was
+found, keeps its own parametrization.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from amadou_spark.queries import REGISTRY, _load
+from amadou_spark.queries import REGISTRY, Query, _load
+
+_load()
 
 STREAMING = [
     "b06_sliding_batch",
@@ -31,21 +35,6 @@ STREAMING = [
     "b09_stream_stream_full_outer",
     "b09_chained_join_window",
 ]
-
-
-def _sql_conf_snapshot(spark) -> dict:
-    # r10 (ADVICE): full-conf snapshot, not a six-key allowlist — SET
-    # lists every explicitly-set SQL conf key, so a leak on ANY key a
-    # query touches and fails to restore diffs red. The only excluded
-    # key is spark.sql.legacy.parquet.nanosAsLong:
-    # catalog.load_table / read_events_stream set it ONE-WAY as a
-    # documented engine-level reader conf (it only widens what parquet
-    # footers the session can read), so it is not a leak. The same
-    # snapshot now also wraps EVERY query in the tools/check.py sweep
-    # (amadou_spark.oracle.check_all), registry-wide.
-    from amadou_spark.oracle import conf_snapshot
-
-    return conf_snapshot(spark)
 
 
 def test_check_all_flags_and_restores_a_conf_leak(spark, sf_dir):
@@ -75,16 +64,40 @@ def test_check_all_flags_and_restores_a_conf_leak(spark, sf_dir):
     assert spark.conf.get(key, None) == before  # blast radius contained
 
 
-@pytest.mark.parametrize("name", STREAMING)
-def test_streaming_query_leaves_session_conf_untouched(spark, sf_dir, name):
-    _load()
-    if name == "b07_tws_running_totals":
-        from amadou_spark.streaming.stateful import protobuf_available
+def _assert_no_leak(run) -> None:
+    assert not run.conf_leak, f"{run.name} leaked session conf: {run.conf_leak}"
 
-        if not protobuf_available():  # pragma: no cover - other images
-            pytest.skip("transformWithState needs google.protobuf")
-    before = _sql_conf_snapshot(spark)
-    REGISTRY[name].fn(spark, sf_dir).count()
-    after = _sql_conf_snapshot(spark)
-    diff = {k: (before[k], after[k]) for k in before if before[k] != after[k]}
-    assert not diff, f"{name} leaked session conf: {diff}"
+
+@pytest.mark.parametrize("name", STREAMING)
+def test_streaming_query_leaves_session_conf_untouched(query_run, name):
+    _assert_no_leak(query_run(name))
+
+
+@pytest.mark.parametrize("name", sorted(set(REGISTRY) - set(STREAMING)))
+def test_query_leaves_session_conf_untouched(query_run, name):
+    _assert_no_leak(query_run(name))
+
+
+def test_sweep_fails_a_conf_leak_naming_the_key_and_restores(spark, sf_dir):
+    """The record-based gate keeps check_all's contract: a leak through
+    the sweep fails the leaking query naming the key, and the session
+    is back to its pre-query conf."""
+    from amadou_spark.oracle import sweep
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key, None)
+
+    def leaky(s, d):
+        s.conf.set(key, "12345b")
+        return s.range(3)
+
+    name = "zz_test_sweep_leak"
+    REGISTRY[name] = Query(name, leaky, None, "test-only leak probe", ())
+    try:
+        (run,) = sweep(spark, sf_dir, [name])
+    finally:
+        REGISTRY.pop(name, None)
+    assert run.conf_leak[key] == (before, "12345b")
+    with pytest.raises(AssertionError, match=key):
+        _assert_no_leak(run)
+    assert spark.conf.get(key, None) == before

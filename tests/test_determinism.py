@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-from amadou_spark.oracle import _canon
+from amadou_spark.oracle import multiset
 from amadou_spark.queries import REGISTRY, _load
 from amadou_spark.session import conf_scope
 
@@ -38,19 +38,11 @@ _PERTURB = {
 }
 
 
-def _multiset(df):
-    cols = df.columns
-    ix = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_canon(r[i], signed=True) for i in ix) for r in df.collect()),
-        key=repr,
-    )
-
-
 @pytest.mark.parametrize("name", SENSITIVE)
-def test_output_is_partition_order_stable(spark, sf_dir, name):
-    fn = REGISTRY[name].fn
-    base = _multiset(fn(spark, sf_dir))
+def test_output_is_partition_order_stable(spark, sf_dir, query_run, name):
+    base = query_run(name)
+    assert base.error is None, base.error
     with conf_scope(spark, _PERTURB):
-        perturbed = _multiset(fn(spark, sf_dir))
-    assert perturbed == base
+        df = REGISTRY[name].fn(spark, sf_dir)
+        perturbed = multiset(df.columns, df.collect(), signed=True)
+    assert perturbed == multiset(base.columns, base.rows, signed=True)

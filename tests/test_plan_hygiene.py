@@ -1,4 +1,4 @@
-"""Plan-hygiene pins for the r2-VERDICT broadcast fixes.
+"""Plan-hygiene pins, starting with the broadcast fixes.
 
 Two queries used to force-broadcast a corpus-dependent table
 (`llm_dedup_lines`: the duplicated-chunk set; `llm_quality_unigram_logprob`:
@@ -19,6 +19,11 @@ from contextlib import redirect_stdout
 
 import pytest
 
+from amadou_spark.oracle import (
+    SP_ALLOWLIST,
+    cartesian_flags,
+    single_partition_flags,
+)
 from amadou_spark.queries import REGISTRY, _load
 
 
@@ -90,71 +95,62 @@ def test_no_document_text_through_exchanges(spark, sf_dir, name):
 @pytest.mark.parametrize(
     "name", ["q96_triangle_count", "q99_link_prediction"]
 )
-def test_graph_wedge_joins_are_equi(spark, sf_dir, name):
+def test_graph_wedge_joins_are_equi(query_run, name):
     """The wedge generators must plan as hash/sort-merge EQUI-joins on
     the shared center node — a CartesianProduct here means the equi-key
     was lost and the query is O(m^2) at scale. q96's two 1-row
     aggregate crossJoins legitimately plan as BroadcastNestedLoopJoin
     (Cross, 1-row build side), so only Inner/outer BNLJs are banned."""
-    _load()
-    df = REGISTRY[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = query_run(name).plan
     assert "CartesianProduct" not in plan
     for line in plan.splitlines():
         if "BroadcastNestedLoopJoin" in line:
             assert "Cross" in line, f"non-cross BNLJ in {name}: {line}"
     # the wedge self-join survived as an equi-join
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan         or "BroadcastHashJoin" in plan
+    assert (
+        "SortMergeJoin" in plan
+        or "ShuffledHashJoin" in plan
+        or "BroadcastHashJoin" in plan
+    )
 
 
-def test_no_single_partition_sorts_outside_allowlist(spark, sf_dir):
-    """r5 VERDICT #3: an unpartitioned window/global rank executes as
+def test_no_single_partition_sorts_outside_allowlist(query_run):
+    """An unpartitioned window/global rank executes as
     `Exchange SinglePartition` + a ONE-TASK sort of its whole input —
     invisible to local benches and linear scale probes (single-task
     time scales linearly too; the failure mode is lost parallelism and
-    per-task memory at cluster scale). This sweep builds every registry
-    query's physical plan and fails on any SinglePartition exchange
+    per-task memory at cluster scale). This reads every registry
+    query's executed plan and fails on any SinglePartition exchange
     feeding a Sort/Window, except the enumerated allowlist of
     provably-BOUNDED grains (value-domain tables, duration grids,
-    bounded histogram tables — see tools/plans.SP_ALLOWLIST). This is
+    bounded histogram tables — see oracle.SP_ALLOWLIST). This is
     the detector whose absence let llm_curriculum_order's docs claim a
-    range-partitioned plan its executed plan did not have."""
-    from tools.plans import SP_ALLOWLIST, single_partition_sort_exchanges
-
+    range-partitioned plan its executed plan did not have. The same
+    sweep pins the registry-wide no-CartesianProduct invariant."""
     _load()
-    bad: dict[str, list[str]] = {}
-    cartesian: list[str] = []
-    for name, q in REGISTRY.items():
-        df = q.fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # piggybacked registry-wide invariant: no CartesianProduct
-        # anywhere — every intentional cross is a 1-row/bounded
-        # broadcast (BroadcastNestedLoopJoin Cross), and a Cartesian
-        # here means a join lost its equi-key (O(n*m) at scale)
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if name in SP_ALLOWLIST:
-            continue
-        hits = single_partition_sort_exchanges(plan)
-        if hits:
-            bad[name] = hits
+    runs = [query_run(name) for name in sorted(REGISTRY)]
+    failed = {r.name: r.error for r in runs if r.error is not None}
+    cartesian = [r.name for r in runs if cartesian_flags(r)]
+    bad = {
+        r.name: hits
+        for r in runs
+        if r.name not in SP_ALLOWLIST and (hits := single_partition_flags(r))
+    }
+    assert not failed, f"queries failed: {failed}"
     assert not cartesian, f"CartesianProduct in: {cartesian}"
     assert not bad, f"unallowlisted SinglePartition sorts: {bad}"
 
 
-def test_allowlisted_single_partition_queries_still_flag(spark, sf_dir):
+def test_allowlisted_single_partition_queries_still_flag(query_run):
     """The allowlist entries must stay HONEST: each names a query whose
     plan really does contain a SinglePartition sort/window (over its
     documented bounded grain). If a rewrite removes the pattern, the
     entry must be deleted — a stale allowlist would mask a future
     regression on that query."""
-    from tools.plans import SP_ALLOWLIST, single_partition_sort_exchanges
-
-    _load()
     for name in SP_ALLOWLIST:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert single_partition_sort_exchanges(plan), (
+        run = query_run(name)
+        assert run.error is None, f"{name}: {run.error}"
+        assert not single_partition_flags(run), (
             f"{name} is allowlisted but its plan has no SinglePartition "
             "sort — remove the stale entry"
         )

@@ -1,4 +1,4 @@
-"""Executed-plan signature pins (VERDICT r7 #7 stretch).
+"""Executed-plan signature pins.
 
 The bench catches a plan regression only as a timing drift on a noisy
 VM; these pins make the SUITE fail instead. For the most expensive /
@@ -57,7 +57,7 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
     # aggregate — no distributed join may reappear. (SinglePartition is
     # NOT forbidden here: the |states|-row final sort and the 1-row
     # renormalization aggregate are allowlisted bounded grains —
-    # tools/plans.py sp_audit owns that nuance.)
+    # oracle.SP_ALLOWLIST owns that nuance.)
     "q164_markov_stationary": (
         ["SortMergeJoin", "CartesianProduct", "BroadcastHashJoin"],
         {"Scan ExistingRDD": 1},
@@ -114,7 +114,7 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
         {"HashAggregate": 2},
     ),
     # bounded-grain SinglePartition (end-only normalization aggregates)
-    # is allowlisted by sp_audit, so only cartesians are pinned here
+    # is in oracle.SP_ALLOWLIST, so only cartesians are pinned here
     "q159_hits": (
         ["CartesianProduct"],
         {},
@@ -193,18 +193,18 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
 TOPK_PINNED = ["q19_top_k", "q120_association_rules"]
 
 
-def _final_plan(spark, sf_dir, name) -> str:
-    _load()
-    df = REGISTRY[name].fn(spark, sf_dir)
-    df.collect()  # force the real AQE final plan, not the template
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.split("Initial Plan")[0]
+def _final_plan(query_run, name) -> str:
+    # the shared record reads the plan after collect(): the real AQE
+    # final plan, not the template
+    run = query_run(name)
+    assert run.error is None, f"{name}: {run.error}"
+    return run.plan.split("Initial Plan")[0]
 
 
 @pytest.mark.parametrize("name", sorted(PINS))
-def test_plan_signature(spark, sf_dir, name):
+def test_plan_signature(query_run, name):
     forbidden, mins = PINS[name]
-    plan = _final_plan(spark, sf_dir, name)
+    plan = _final_plan(query_run, name)
     for bad in forbidden:
         assert bad not in plan, f"{name}: {bad} entered the plan\n{plan[:3000]}"
     for op, n in mins.items():
@@ -215,13 +215,13 @@ def test_plan_signature(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", TOPK_PINNED)
-def test_topk_stays_heap_based(spark, sf_dir, name):
+def test_topk_stays_heap_based(query_run, name):
     """LIMIT+ORDER must plan as TakeOrderedAndProject (per-partition
     heaps); a global range-sort would be an Exchange rangepartitioning
     + Sort over the full input."""
     _load()
     if name not in REGISTRY:
         pytest.skip(f"{name} not registered")
-    plan = _final_plan(spark, sf_dir, name)
+    plan = _final_plan(query_run, name)
     assert "TakeOrderedAndProject" in plan, plan[:3000]
     assert "Exchange rangepartitioning" not in plan, plan[:3000]

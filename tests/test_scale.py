@@ -328,11 +328,7 @@ def test_bounded_domain_ntile_plan_has_no_single_partition_sort(spark):
     """The whole point of the helper: the plan must carry no
     Exchange SinglePartition feeding a Sort/Window (the boundary-run
     tie-break window partitions by value, never globally)."""
-    import sys as _sys
-
-    _sys.path.insert(0, "tools")
-    from plans import single_partition_sort_exchanges
-
+    from amadou_spark.oracle import single_partition_sort_exchanges
     from amadou_spark.scale import bounded_domain_ntile
 
     df = spark.range(500).select(

@@ -1,4 +1,4 @@
-"""Registry-wide Arrow-schema type-parity gate (VERDICT r6 ask #2).
+"""Registry-wide Arrow-schema type-parity gate.
 
 The driver's value hash is TYPE-sensitive while the local oracle gate
 is not: DuckDB silently promotes integer window/aggregate arithmetic to
@@ -9,8 +9,9 @@ precedent). Running the parity check as a pytest gate — not a recipe
 note — makes the class structurally impossible: a new oracle whose
 types diverge fails at registration time.
 
-Spark side is schema-only (lazy analysis, no jobs) for declarative
-queries; DuckDB executes at sf0.001 where the whole sweep is cheap.
+The Spark side reads each query's types from its shared
+``query_run`` record (no rebuild); the DuckDB side binds the oracle SQL
+without executing it.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import pytest
 
 from amadou_spark.oracle import duckdb_connection
 from amadou_spark.queries import REGISTRY, _load
-from amadou_spark.typeparity import audit_query
+from amadou_spark.typeparity import type_flags
 
 _load()
 
@@ -32,8 +33,10 @@ def con(sf_dir):
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_arrow_type_parity(spark, con, sf_dir, name):
-    flags = audit_query(spark, con, name, sf_dir)
+def test_arrow_type_parity(query_run, con, name):
+    run = query_run(name)
+    assert run.error is None, f"{name}: {run.error}"
+    flags = type_flags(con, run)
     assert not flags, (
         f"{name}: Spark/DuckDB output types diverge — the driver hash "
         f"is type-sensitive, so this row can NEVER hash-match even if "

@@ -1,6 +1,13 @@
-"""CLI: run the local oracle-correctness gate.
+"""CLI: run the local correctness gates over one registry sweep.
 
 Usage: python tools/check.py [--vanilla] [sf_dir] [query ...]
+
+Each named query (default: the whole registry) is built and run once,
+and every per-query gate of ``amadou_spark.oracle.check_all`` reads
+that run: DuckDB oracle compare, Spark/DuckDB output-type parity,
+session-conf leak, SinglePartition sorts outside ``SP_ALLOWLIST`` (and
+allowlist entries that no longer flag), and CartesianProduct. The last
+lines count the failures per gate.
 
 ``--vanilla`` reproduces the DRIVER's conditions exactly: a plain
 ``SparkSession.builder.master('local[8]')`` session with NONE of the
@@ -18,7 +25,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from amadou_spark.oracle import check_all
+from amadou_spark.oracle import GATES, check_all
 
 
 def main() -> int:
@@ -49,6 +56,8 @@ def main() -> int:
             print(f"       {r.detail}")
     mode = " (vanilla session)" if vanilla else ""
     print(f"\n{n_ok}/{len(results)} green{mode}")
+    for gate in GATES:
+        print(f"  {gate}: {sum(gate in r.failed for r in results)} failed")
     return 0 if n_ok == len(results) else 1
 
 

@@ -1,8 +1,9 @@
-"""Rotate the sf1 ORACLE slice (VERDICT r8 #3).
+"""Rotate the sf1 ORACLE slice.
 
 BENCH_SF1 times every registered query at the 10x slice; this tool is
-the correctness half: it runs the DuckDB hash-compare gate
-(amadou_spark.oracle.check_all) at ``scale_probe_data/sf1`` for a named
+the correctness half: it runs the per-query gates of
+``amadou_spark.oracle.check_all`` (DuckDB hash-compare, type parity,
+conf leak, plan hygiene) at ``scale_probe_data/sf1`` for a named
 subset and MERGES the rows into CHECK_SF1.json — cumulative coverage,
 one ``round`` vintage stamp per op, this run's outcome winning for the
 ops it touched. The slice rotates like the driver's 50-slot sweep
@@ -41,7 +42,13 @@ def main() -> int:
     rnd = None
     if "--round" in args:
         i = args.index("--round")
-        rnd = int(args[i + 1])
+        value = args[i + 1] if i + 1 < len(args) else ""
+        try:
+            rnd = int(value)
+        except ValueError:
+            raise SystemExit(
+                f"--round needs an integer round number, got {value!r}"
+            ) from None
         del args[i : i + 2]
     names = args
     if not names:

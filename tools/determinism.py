@@ -7,8 +7,8 @@ straddle a rounding boundary under a different
 ``spark.sql.shuffle.partitions`` / AQE plan and flip a rounded cell —
 a query that passes locally and fails (or flakes) on the driver.
 
-This tool executes every audited query under two deliberately
-different layouts in the same session —
+This tool sweeps the audited queries once under each of two
+deliberately different layouts in the same session —
 
 - layout A: the engine defaults (shuffle.partitions=32, AQE on), and
 - layout B: shuffle.partitions=7 with AQE coalescing disabled (odd
@@ -36,8 +36,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from amadou_spark.oracle import _canon  # noqa: E402
-from amadou_spark.queries import REGISTRY, _load  # noqa: E402
+from amadou_spark.oracle import multiset, sweep  # noqa: E402
 from amadou_spark.session import conf_scope, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,52 +53,43 @@ _LAYOUT_B = {
 }
 
 
-def _multiset(df) -> list:
-    cols = df.columns
-    ix = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_canon(r[i], signed=True) for i in ix) for r in df.collect()),
-        key=repr,
-    )
-
-
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     names = [a for a in args if "/" not in a] or None
 
     spark = get_spark("determinism-audit")
-    _load()
+    with conf_scope(spark, _LAYOUT_A):
+        side_a = {run.name: run for run in sweep(spark, sf_dir, names)}
     results: dict[str, dict] = {}
     n_bad = 0
-    for name in names or sorted(REGISTRY):
-        fn = REGISTRY[name].fn
-        try:
-            with conf_scope(spark, _LAYOUT_A):
-                ma = _multiset(fn(spark, sf_dir))
-            with conf_scope(spark, _LAYOUT_B):
-                mb = _multiset(fn(spark, sf_dir))
-        except Exception as exc:
-            results[name] = {"ok": False, "detail": f"EXCEPTION: {exc}"[:300]}
-            n_bad += 1
-            print(f"[ERR ] {name}: {exc}", flush=True)
-            continue
-        if ma == mb:
-            results[name] = {"ok": True, "detail": ""}
-            print(f"[ OK ] {name}", flush=True)
-        else:
-            first = next(
-                (i for i, (x, y) in enumerate(zip(ma, mb)) if x != y), -1
-            )
-            detail = (
-                f"layout-dependent output: {sum(1 for x, y in zip(ma, mb) if x != y)}"
-                f"/{len(ma)} rows differ (lenA={len(ma)} lenB={len(mb)}); "
-                f"first diff @{first}: A={ma[first] if first >= 0 else None} "
-                f"B={mb[first] if first >= 0 else None}"
-            )
-            results[name] = {"ok": False, "detail": detail[:500]}
-            n_bad += 1
-            print(f"[FAIL] {name}: {detail[:200]}", flush=True)
+    with conf_scope(spark, _LAYOUT_B):
+        for b in sweep(spark, sf_dir, names):
+            a = side_a.pop(b.name)
+            name, err = b.name, a.error or b.error
+            if err is not None:
+                results[name] = {"ok": False, "detail": f"EXCEPTION: {err}"[:300]}
+                n_bad += 1
+                print(f"[ERR ] {name}: {err}", flush=True)
+                continue
+            ma = multiset(a.columns, a.rows, signed=True)
+            mb = multiset(b.columns, b.rows, signed=True)
+            if ma == mb:
+                results[name] = {"ok": True, "detail": ""}
+                print(f"[ OK ] {name}", flush=True)
+            else:
+                first = next(
+                    (i for i, (x, y) in enumerate(zip(ma, mb)) if x != y), -1
+                )
+                detail = (
+                    f"layout-dependent output: {sum(1 for x, y in zip(ma, mb) if x != y)}"
+                    f"/{len(ma)} rows differ (lenA={len(ma)} lenB={len(mb)}); "
+                    f"first diff @{first}: A={ma[first] if first >= 0 else None} "
+                    f"B={mb[first] if first >= 0 else None}"
+                )
+                results[name] = {"ok": False, "detail": detail[:500]}
+                n_bad += 1
+                print(f"[FAIL] {name}: {detail[:200]}", flush=True)
 
     # a subset run refreshes its rows INSIDE the full artifact rather
     # than clobbering the registry-wide audit record

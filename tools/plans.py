@@ -4,6 +4,9 @@ Extracts the scale-relevant facts from each executed plan — pushed
 filters, read schemas (pruning), join strategies, top-k operators,
 exchange reuse — as evidence that the declared plans are the plans we
 want at 100 TB, not just plans that pass.
+
+Usage: python tools/plans.py                    (writes PLANS.md, sf0.01)
+       python tools/plans.py --dup-agg-audit    (registry-wide, sf0.001)
 """
 
 from __future__ import annotations
@@ -13,7 +16,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from amadou_spark.queries import REGISTRY, _load
+from amadou_spark.oracle import single_partition_sort_exchanges, sweep
 from amadou_spark.session import get_spark
 
 REVIEW = {
@@ -168,48 +171,6 @@ REVIEW = {
 }
 
 
-def _depth(line: str) -> int:
-    """Tree depth of a plan line in executedPlan().toString() output.
-
-    Spark renders children with 3-char ladder segments (`+- `, `:- `,
-    `:  `, `   `) before the operator name; the marker offset is the
-    depth. Root lines (no marker) are depth -1 so any child nests
-    under them."""
-    m = re.search(r"(\+-|:-) ", line)
-    return m.start() if m else -1
-
-
-def single_partition_sort_exchanges(plan: str) -> list[str]:
-    """Scale-killer detector (r5 VERDICT #3 — the blind spot that let a
-    documented 'range-partitioned' plan ship as a one-task sort):
-    return the parent operator line for every `Exchange SinglePartition`
-    that feeds a Sort or Window, i.e. a GLOBAL one-task sort of its
-    input. Benign SinglePartition exchanges — the final leg of a global
-    aggregate (input = one partial-agg row per partition) or a
-    CollectLimit — have aggregate/limit parents and are not returned.
-    Whether a flagged exchange is acceptable depends on its INPUT being
-    a bounded grain (a value-domain table, a #partitions-row offset
-    table); callers keep that allowlist."""
-    lines = plan.splitlines()
-    flagged = []
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
-            continue
-        d = _depth(line)
-        parent = None
-        for j in range(i - 1, -1, -1):
-            pd = _depth(lines[j])
-            if pd < d:
-                parent = lines[j]
-                d = pd  # keep climbing only through tighter ancestors
-                # nearest ancestor is enough: Sort directly consumes
-                # the exchange when a Window/global sort is realized
-                break
-        if parent is not None and re.search(r"\b(Sort|Window)\b", parent):
-            flagged.append(parent.strip())
-    return flagged
-
-
 def facts(plan: str) -> list[str]:
     out = []
     pushed = [m.group(1) for m in re.finditer(r"PushedFilters: \[([^\]]+)\]", plan) if m.group(1).strip()]
@@ -257,64 +218,8 @@ def facts(plan: str) -> list[str]:
     return out
 
 
-#: Queries whose SinglePartition sort/window exchanges ride a PROVABLY
-#: BOUNDED grain — input row count bounded by a value/config domain,
-#: independent of data size. Every other registry entry must plan with
-#: zero SinglePartition sort/window exchanges (tests/test_plan_hygiene).
-SP_ALLOWLIST: dict[str, str] = {
-    # value-domain prefix sums (q124 shape): input = distinct measure
-    # values, bounded by the measure's fixed precision
-    "q124_ks_test": "collapsed 2-decimal acctbal value domain",
-    # duration grid: one row per distinct day-count, bounded by the
-    # observation window
-    "q131_kaplan_meier": "per-distinct-duration grid (days)",
-    # bounded histogram / group-count tables feeding rank offsets
-    "llm_curriculum_order": "token-length histogram + <=9970 (decile,hash) groups",
-    # r6 additions sharing the two bounded grains above
-    "q145_mann_whitney": "collapsed 2-decimal acctbal value domain (q124 shape)",
-    "q151_hazard_rate": "per-distinct-duration grid (q131 shape)",
-    # whole-dollar price domain: <=~600k distinct values at any scale
-    # factor (bounded by the price range, not the row count).
-    # DECISION (r7, VERDICT r6 #5): ACCEPTED at this grain. With q118
-    # moved off global_rank this is the largest allowlisted single-task
-    # grain; ~600k slim (val, grp, c) rows is a ~20 MB one-task sort —
-    # data-size-independent and far under task limits. Coarsening to
-    # $10 buckets would change the midrank semantics (Kruskal-Wallis H
-    # is tie-corrected on the VALUE grid), so the honest bound stays.
-    "q152_kruskal_wallis": "collapsed whole-dollar totalprice value domain (q124 shape)",
-    # r7 second batch: same duration grid as q131/q151
-    "q165_survival_rmst": "per-distinct-duration grid (q131 shape)",
-    # r8: pairwise-slope grid over the calendar month domain —
-    # <= |months|^2/2 distinct slope values at any sf (~3.5k rows);
-    # the full bound note lives in its REVIEW/PLANS.md entry (r9)
-    "q166_theil_sen": "month-pair slope grid (calendar^2-bounded)",
-}
-
-
-def sp_audit(sf: str = "/root/testdata/sf0.001") -> dict[str, list[str]]:
-    """Build every registry query's physical plan and return
-    {name: [offending parent ops]} for all SinglePartition sort/window
-    exchanges found OUTSIDE the allowlist."""
-    spark = get_spark("sp-audit")
-    _load()
-    bad: dict[str, list[str]] = {}
-    for name, q in REGISTRY.items():
-        if name in SP_ALLOWLIST:
-            continue
-        try:
-            df = q.fn(spark, sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # audit must name the query
-            bad[name] = [f"plan build failed: {exc}"]
-            continue
-        hits = single_partition_sort_exchanges(plan)
-        if hits:
-            bad[name] = hits
-    return bad
-
-
 def dup_agg_audit(sf: str = "/root/testdata/sf0.001") -> dict[str, dict]:
-    """The sharpened duplicate-subtree detector (r7): flag any FINAL
+    """The sharpened duplicate-subtree detector: flag any FINAL
     executed plan containing the SAME fact-grain HashAggregate twice
     (expression ids stripped). This is the exact bug class — a shared
     per-user/per-doc aggregate whose consumers each re-execute it
@@ -322,51 +227,33 @@ def dup_agg_audit(sf: str = "/root/testdata/sf0.001") -> dict[str, dict]:
     false positives of raw scan counting (pruned re-reads are often
     the right plan, and AQE's plan string double-prints scans via the
     Initial Plan section). Caught q131/q151 at 2 scans, under the
-    >=4-scan signal's threshold. Executes each query (collect) so the
-    AQE final plan is real.
+    >=4-scan signal's threshold. Reads each query's sweep record, whose
+    plan is taken after collect(), so the AQE final plan is real.
     """
-    import re as _re
-
-    spark = get_spark("dup-agg-audit")
-    _load()
-    # r8 (ADVICE r7): match the grain column ANYWHERE inside keys=[...]
-    # (composite grains like (arm, user_id) must not escape the gate),
-    # and include the customer grain alongside the user/doc/order ones
-    grain = _re.compile(
+    # the grain column may sit ANYWHERE inside keys=[...] (composite
+    # grains like (arm, user_id) must not escape the gate)
+    grain = re.compile(
         r"HashAggregate\(keys=\[[^\]]*\b(user_id|doc_id|vec_id|o_orderkey"
         r"|l_orderkey|event_id|o_custkey|c_custkey)#"
     )
     bad: dict[str, dict] = {}
-    for name, q in REGISTRY.items():
-        try:
-            df = q.fn(spark, sf)
-            df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:
-            bad[name] = {f"plan build failed: {exc}": 1}
+    for run in sweep(get_spark("dup-agg-audit"), sf):
+        if run.error is not None:
+            bad[run.name] = {f"plan build failed: {run.error}": 1}
             continue
-        final = plan.split("Initial Plan")[0]
         sigs: dict[str, int] = {}
-        for line in final.splitlines():
+        for line in run.plan.split("Initial Plan")[0].splitlines():
             m = grain.search(line)
             if m and "partial" not in line:
-                sig = _re.sub(r"#\d+L?", "", line.strip())
+                sig = re.sub(r"#\d+L?", "", line.strip())
                 sigs[sig] = sigs.get(sig, 0) + 1
         dups = {s[:120]: c for s, c in sigs.items() if c >= 2}
         if dups:
-            bad[name] = dups
+            bad[run.name] = dups
     return bad
 
 
 def main() -> None:
-    if "--sp-audit" in sys.argv:
-        bad = sp_audit()
-        for name, hits in sorted(bad.items()):
-            print(f"{name}:")
-            for h in hits:
-                print(f"  {h}")
-        print(f"{len(bad)} quer(ies) with unallowlisted SinglePartition sorts")
-        raise SystemExit(1 if bad else 0)
     if "--dup-agg-audit" in sys.argv:
         bad = dup_agg_audit()
         for name, dups in sorted(bad.items()):
@@ -375,8 +262,6 @@ def main() -> None:
             f"{len(bad)} quer(ies) re-executing a fact-grain aggregate"
         )
         raise SystemExit(1 if bad else 0)
-    spark = get_spark("plans")
-    _load()
     sf = "/root/testdata/sf0.01"
     lines = [
         "# PLANS — physical-plan review (generated by tools/plans.py)",
@@ -399,20 +284,14 @@ def main() -> None:
         "branch fan-out whose inputs here are pruned scans.",
         "",
     ]
-    for name, commentary in REVIEW.items():
-        df = REGISTRY[name].fn(spark, sf)
-        # r9: collect() on THIS df (not .count(), which wraps a new
-        # plan and leaves df's own queryExecution un-finalized — the
-        # pre-AQE template showed phantom SortMergeJoins here), then
-        # truncate at the "Initial Plan" section so the facts describe
-        # the FINAL AQE plan, same methodology as tests/test_plan_pins
-        df.collect()
-        plan = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("Initial Plan")[0]
-        )
+    runs = sweep(get_spark("plans"), sf, list(REVIEW))
+    for (name, commentary), run in zip(REVIEW.items(), runs):
+        if run.error is not None:
+            raise SystemExit(f"{name}: {run.error}")
+        # the record's plan is read after collect(); truncate at the
+        # "Initial Plan" section so the facts describe the FINAL AQE
+        # plan, same methodology as tests/test_plan_pins
+        plan = run.plan.split("Initial Plan")[0]
         lines.append(f"## {name}")
         lines.append("")
         lines.append(f"**Design intent:** {commentary}")
