@@ -913,9 +913,9 @@ def b07_tws_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir).withColumn(
         "value", F.floor(F.col("value") * 100 + 0.5).cast("double")
     )
-    # RocksDB is required at START (multi-column-family state) and a
-    # vanilla driver session defaults to the HDFS-backed provider; the
-    # conf is set/RESTORED around start so nothing leaks (r9).
+    # RocksDB is required at START (multi-column-family state), and
+    # every session (get_spark or vanilla) defaults to the HDFS-backed
+    # provider; the conf is set/RESTORED around start so nothing leaks.
     out = run_stream_to_table(
         running_totals_stream(stream),
         mode="update",

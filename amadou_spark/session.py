@@ -41,17 +41,19 @@ _DEFAULTS = {
     # local mode = driver-only: this is the whole memory budget. Sized
     # for the 128 GiB container; override with SPARK_GRAFT_DRIVER_MEM.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-    # RocksDB for EVERY stateful streaming operator. The HDFS-backed
-    # provider keeps all state as in-heap maps (state size bounded by
-    # executor heap); RocksDB spills to local disk and supports the
-    # multiple column families transformWithState requires. Choosing it
-    # here, once, also means every stateful query in a session runs under
-    # the SAME store, instead of whichever one the first query picked.
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-    # RocksDB changelog checkpointing. Without it every micro-batch
+    # No state-store provider is set: stateful operators run on Spark's
+    # default in-heap HDFSBackedStateStoreProvider. A RocksDB store pays a
+    # native RocksDB.open of 110-165 ms for each state partition a query
+    # loads, at any data size; on the registry's replayed streams that
+    # open was most of each micro-batch's executor time.
+    # transformWithState needs RocksDB (one column family per state
+    # variable) and asks for it per query (stateful.ROCKSDB_PROVIDER_CONF).
+    # A deployment whose state outgrows the heap sets
+    # spark.sql.streaming.stateStore.providerClass in its job config,
+    # which overrides these defaults.
+    #
+    # RocksDB changelog checkpointing (for the queries that do run on
+    # RocksDB). Without it every micro-batch
     # commit uploads a full SST snapshot per state store (16-36 s of
     # summed commitTimeMs per batch across the b06/b09 family for ~40k
     # rows of state). With it, commit writes only the batch's state

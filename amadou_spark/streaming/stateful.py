@@ -7,18 +7,18 @@ evolvability — the API a NEW deployment should target. This module
 keeps a running per-key aggregate as a ValueState and emits the updated
 running totals each micro-batch.
 
-State-store posture at scale: state lives in the executor-local store
-(RocksDB-backed in production confs), partitioned by the grouping key —
+State-store posture at scale: state lives in the executor-local RocksDB
+store (transformWithState requires it; see ``ROCKSDB_PROVIDER_CONF``),
+partitioned by the grouping key —
 the same shuffle partitioning as any groupBy, so state size per
 executor is bounded by key-space share, not stream length. TTL (or
 timers) is what keeps abandoned keys from accumulating forever.
 
 Runtime requirement: transformWithState's control channel is
 protobuf-based; `google.protobuf` must be importable on driver and
-executors (`protobuf_available()` probes this — the test image lacks
-it, so the pytest coverage skips there and the legacy
-applyInPandasWithState path in tier_b stays the in-container-verified
-stateful op).
+executors. `protobuf_available()` probes this, first arming the compat
+shim (amadou_spark/compat) where no native install exists; callers
+skip or fail when it returns False.
 """
 
 from __future__ import annotations
@@ -33,9 +33,11 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 
-# The conf a transformWithState query must see at START. get_spark
-# sessions carry it by default (session.py); vanilla-session callers
-# pass it to run_stream_to_table's confs= (set/restored around start).
+# The conf a transformWithState query must see at START. No session
+# carries it by default (session.py: the in-heap store avoids a native
+# RocksDB open per state partition); callers pass it to
+# run_stream_to_table's confs= (set/restored around start), or wrap
+# their own writeStream.start() in session.conf_scope.
 ROCKSDB_PROVIDER_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
@@ -90,16 +92,16 @@ def running_totals_stream(events: DataFrame) -> DataFrame:
     (user, micro-batch that touched it). Update output mode: downstream
     sinks see the LATEST running value per key.
 
-    State-store REQUIREMENT (not set here — r9, ADVICE): this operator
-    needs the RocksDB provider at query START — transformWithState
-    keeps each state variable in its own column family, which the
-    default HDFSBackedStateStoreProvider rejects
+    State-store REQUIREMENT (not set here, so building the DataFrame
+    mutates no shared session conf): this operator needs the RocksDB
+    provider at query START — transformWithState keeps each state
+    variable in its own column family, which the default
+    HDFSBackedStateStoreProvider rejects
     ([UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES]).
-    ``session.get_spark`` sessions already run RocksDB engine-wide
-    (session.py _DEFAULTS); on a vanilla session, pass
-    ``confs=ROCKSDB_PROVIDER_CONF`` to ``run_stream_to_table`` (or
-    set/restore the conf around your own ``writeStream.start()``).
-    Building the DataFrame no longer mutates shared session conf."""
+    Neither ``session.get_spark`` nor a vanilla session selects it, so
+    pass ``confs=ROCKSDB_PROVIDER_CONF`` to ``run_stream_to_table``, or
+    wrap your own ``writeStream.start()`` in
+    ``session.conf_scope(spark, ROCKSDB_PROVIDER_CONF)``."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")

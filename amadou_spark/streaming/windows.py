@@ -68,16 +68,19 @@ def run_stream_to_table(
     Spark pins one state store per shuffle partition at query START,
     and every microbatch pays a task per store — with the batch-tuned
     32-partition default, stateful queries here spent 2× longer on
-    store bookkeeping than on data (measured 7.7s → 1.2s at sf0.1).
+    store bookkeeping than on data (measured 7.7s → 1.2s at sf0.1, on
+    the RocksDB store, where each instance also pays a native open).
     Size it to expected STATE, not batch shuffle width. The two
     PYTHON-stateful queries (applyInPandasWithState,
     transformWithState) pass 8: their per-partition work crosses the
-    Python boundary and was measured ~30% SLOWER at 4.
+    Python boundary and was measured ~30% SLOWER at 4 (also on
+    RocksDB; transformWithState still runs there).
 
     ``confs``: extra session confs the query must see at START (e.g.
-    ``stateful.ROCKSDB_PROVIDER_CONF`` for transformWithState on a
-    vanilla session). All start confs are set only around ``start()``
-    and then restored, so nothing leaks into later queries."""
+    ``stateful.ROCKSDB_PROVIDER_CONF`` for transformWithState, which
+    the default in-heap store cannot run). All start confs are set only
+    around ``start()`` and then restored, so nothing leaks into later
+    queries."""
     spark = stream_df.sparkSession
     name = f"amadou_stream_{uuid.uuid4().hex[:8]}"
     # Changelog checkpointing must be ON at query start for the commit

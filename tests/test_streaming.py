@@ -186,7 +186,12 @@ def test_transform_with_state_running_totals(spark, sf_dir, tmp_path):
     import pytest
 
     from amadou_spark.catalog import load_table
-    from amadou_spark.streaming.stateful import protobuf_available, running_totals_stream
+    from amadou_spark.session import conf_scope
+    from amadou_spark.streaming.stateful import (
+        ROCKSDB_PROVIDER_CONF,
+        protobuf_available,
+        running_totals_stream,
+    )
 
     if not protobuf_available():
         # r8: protobuf_available() now arms the compat shim (cloudsdk
@@ -207,14 +212,17 @@ def test_transform_with_state_running_totals(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     name = "twstate_out"
-    q = (
-        running_totals_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # transformWithState needs the RocksDB store at START; the session
+    # default is the in-heap store.
+    with conf_scope(spark, ROCKSDB_PROVIDER_CONF):
+        q = (
+            running_totals_stream(stream)
+            .writeStream.outputMode("update")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination()
 
     out = spark.table(name).toPandas()
@@ -326,9 +334,10 @@ def test_kafka_read_path_decodes_and_windows(spark, sf_dir, tmp_path):
 
 
 def test_run_stream_to_table_restores_extra_confs(spark, sf_dir):
-    """r9 (VERDICT r8 #2): confs passed for query START must be
-    set/RESTORED around start — no stateful operator may leak session
-    conf into later queries (the r8 RocksDB provider flip)."""
+    """Confs passed for query START must be set/RESTORED around start —
+    no stateful operator may leak session conf into later queries (a
+    leaked provider key would silently move every later stateful query
+    onto RocksDB)."""
     from amadou_spark.streaming.windows import (
         read_events_stream,
         run_stream_to_table,
@@ -343,6 +352,8 @@ def test_run_stream_to_table_restores_extra_confs(spark, sf_dir):
             "RocksDBStateStoreProvider"
         )
     }
+    # a sentinel equal to the session value could not show a leak
+    assert before != sentinel[key]
     out = run_stream_to_table(
         tumbling_counts(read_events_stream(spark, sf_dir)),
         mode="complete",
@@ -350,6 +361,68 @@ def test_run_stream_to_table_restores_extra_confs(spark, sf_dir):
     )
     assert out.count() > 0
     assert spark.conf.get(key) == before
+
+
+def test_stateful_queries_use_in_heap_store_unless_rocksdb_asked(spark, sf_dir):
+    """A stateful run_stream_to_table query runs on Spark's in-heap
+    state store by default (no per-partition RocksDB open); the same
+    query with ROCKSDB_PROVIDER_CONF, which b07_tws_running_totals
+    passes, runs on RocksDB. Read from the state operator's progress:
+    only a RocksDB store reports rocksdb* custom metrics."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from amadou_spark.streaming.stateful import ROCKSDB_PROVIDER_CONF
+
+    class StateMetrics(StreamingQueryListener):
+        def __init__(self):
+            self.metrics: dict = {}
+            self.done: set = set()
+            self.cond = threading.Condition()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                with self.cond:
+                    keys = self.metrics.setdefault(str(event.progress.id), set())
+                    keys.update(ops[0].customMetrics)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.cond:
+                self.done.add(str(event.id))
+                self.cond.notify_all()
+
+    def state_metric_keys(confs):
+        seen = set(listener.done)
+        run_stream_to_table(
+            tumbling_counts(read_events_stream(spark, sf_dir)),
+            mode="complete",
+            confs=confs,
+        )
+        # listener events arrive asynchronously; termination comes last
+        with listener.cond:
+            assert listener.cond.wait_for(lambda: listener.done - seen, 60)
+            (qid,) = listener.done - seen
+            return listener.metrics.get(qid, set())
+
+    listener = StateMetrics()
+    spark.streams.addListener(listener)
+    try:
+        default_keys = state_metric_keys(None)
+        rocksdb_keys = state_metric_keys(ROCKSDB_PROVIDER_CONF)
+    finally:
+        spark.streams.removeListener(listener)
+    assert default_keys, "no state-operator progress was reported"
+    assert not {k for k in default_keys if k.startswith("rocksdb")}, default_keys
+    assert "loadedMapCacheHitCount" in default_keys
+    assert {k for k in rocksdb_keys if k.startswith("rocksdb")}, rocksdb_keys
 
 
 def test_repo_google_path_tracks_late_syspath_additions(tmp_path):
