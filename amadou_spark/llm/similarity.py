@@ -1,10 +1,10 @@
 """Similarity search over an embedding column (array<float>).
 
 Two paths, as the north star prescribes:
-- brute-force cosine top-k — the exact baseline. All arithmetic is
-  JVM-side (`aggregate`/`zip_with` higher-order functions — no Python,
-  no UDF): a broadcast of the (small) query set against a full scan of
-  the corpus, then a per-query top-k window. At 100 TB this is the
+- brute-force cosine top-k — the exact baseline. The dot products are
+  an Arrow-batched numpy einsum (a scalar pandas UDF, one Python
+  crossing per batch): a broadcast of the (small) query set against a
+  full scan of the corpus, then a per-query top-k window. At 100 TB this is the
   right plan when |queries| is small: one corpus scan, no shuffle of
   the corpus itself (the window partitions by query id, and the rows
   entering the shuffle are already filtered to candidate scores).
@@ -20,19 +20,9 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def cosine_topk_bruteforce(

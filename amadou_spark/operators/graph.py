@@ -1,25 +1,30 @@
-"""Connected components over an edge list — the step that turns
-near-duplicate PAIRS into duplicate CLUSTERS (one canonical keep-id per
-group), completing the dedup story: shingle → candidate pair → verify →
-cluster → keep one.
+"""Graph operators over Spark edge lists.
 
-Algorithm: iterative min-label propagation to a fixpoint. Each round
-every node adopts the minimum label among itself and its neighbours;
+Connected components turn near-duplicate PAIRS into duplicate CLUSTERS
+(one canonical keep-id per group), completing the dedup story: shingle
+→ candidate pair → verify → cluster → keep one. The algorithm is
+iterative min-label propagation to a fixpoint: each round every node
+adopts the minimum label among itself and its neighbours, so
 convergence takes O(component diameter) rounds. Near-dup graphs have
 tiny diameters (dup clusters are cliques or near-cliques), so this
 terminates in 2-4 rounds in practice. Each round is ONE shuffle join on
 the edge key plus a groupBy min — no driver-side graph materialization,
-so it scales to edge lists that don't fit on any single node. For
-adversarially long path graphs, the diameter-independent
+so it scales to edge lists that don't fit on any single node. When
+propagation hits its round cap unconverged (adversarially long paths),
+:func:`connected_components` falls back to the diameter-independent
 large-star/small-star contraction (Kiveris et al., "Connected
-Components in MapReduce and Beyond") is IMPLEMENTED as
-:func:`_star_fixpoint` — ``algorithm="auto"`` falls back to it when
-propagation hits its round cap unconverged, ``algorithm="star"`` runs
-it directly.
+Components in MapReduce and Beyond"), :func:`_star_fixpoint`.
 
-The loop persists each round's labels and unpersists the previous
-round (lineage would otherwise grow linearly and re-run every prior
-round per action).
+The undirected operators (:func:`triangle_stats`,
+:func:`local_clustering`, :func:`bfs_levels`, :func:`kcore`,
+:func:`adamic_adar`, :func:`label_propagation`) take an edge list with
+columns (u, v) of integral node ids. Each reads it through
+:func:`_undirected`, so reversed duplicates, repeated edges and
+self-loops never change a result, and node ids come out as BIGINT.
+
+Iterative loops materialize each round and release the previous one
+(lineage would otherwise grow every round and re-run every prior round
+per action).
 """
 
 from __future__ import annotations
@@ -206,7 +211,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 20,
     local_threshold: int = LOCAL_CC_MAX_EDGES,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Return (node, cluster_id) for every node in ``edges``, where
     cluster_id is the minimum node id in the node's connected
@@ -220,23 +224,17 @@ def connected_components(
     exceeds solving the whole problem centrally); larger → iterative
     min-label propagation, one edge-key shuffle per round, O(diameter)
     rounds — the cheap winner on near-dup graphs, whose components are
-    near-cliques with diameter 2-4.
-
-    ``algorithm``: ``"auto"`` (default) runs label propagation and, if
-    the graph's diameter exceeds ``max_iter`` rounds, falls back to the
+    near-cliques with diameter 2-4. If propagation has not converged
+    after ``max_iter`` rounds (the graph's diameter is larger), the
     diameter-independent large-star/small-star contraction
-    (:func:`_star_fixpoint`) instead of returning unconverged labels;
-    ``"star"`` skips straight to the contraction (pick it when the
-    graph is known to have long paths); ``"label"`` raises on
-    non-convergence rather than falling back (explicit-cost mode)."""
+    (:func:`_star_fixpoint`) finishes the job instead of returning
+    unconverged labels; ``max_iter=0`` goes straight to it."""
     # Materialize the directed edge list BEFORE the symmetric union reads
     # it twice: persist alone is not enough — the union's two branches can
     # run concurrently in one job, each missing the still-empty cache and
     # re-running the (possibly expensive) upstream pair-generation lineage,
     # e.g. a shingle self-join. The count also gives the edge cardinality
     # that sizes the loop's shuffle width.
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     directed.persist()
     n_edges = directed.count()
@@ -269,72 +267,55 @@ def connected_components(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().repartition(n_part, "b")
     sym.persist()
-    if algorithm == "star":
-        # the propagation loop's label table would be discarded unused —
-        # just materialize sym before releasing the directed cache
-        labels = None
-        sym.count()
-    else:
-        labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
-            "label", F.col("node")
-        ).repartition(n_part, "node")
-        labels.persist()
-        labels.count()
+    labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
+        "label", F.col("node")
+    ).repartition(n_part, "node")
+    labels.persist()
+    labels.count()
     directed.unpersist()
     # Loop conf hygiene — AQE off (its per-exchange query-stage
     # materialization adds whole jobs per round to a loop whose width
     # n_part is already decided from the real edge count), shuffle
     # width pinned to n_part, codegen off below the size gate.
     with conf_scope(spark, loop_confs(spark, n_edges)):
-        converged = False
-        if algorithm in ("auto", "label"):
-            for _ in range(max_iter):
-                nbr_min = (
-                    sym.join(labels, sym["b"] == labels["node"])
-                    .groupBy("a")
-                    .agg(F.min("label").alias("_nbr"))
+        for _ in range(max_iter):
+            nbr_min = (
+                sym.join(labels, sym["b"] == labels["node"])
+                .groupBy("a")
+                .agg(F.min("label").alias("_nbr"))
+            )
+            # Keep the previous label alongside the new one so
+            # convergence is a filter-count on this same DataFrame —
+            # not a third join.
+            stepped = (
+                labels.select("node", F.col("label").alias("_old"))
+                .join(nbr_min, F.col("node") == F.col("a"), "left")
+                .select(
+                    "node",
+                    "_old",
+                    F.least(
+                        F.col("_old"), F.coalesce(F.col("_nbr"), F.col("_old"))
+                    ).alias("label"),
                 )
-                # Keep the previous label alongside the new one so
-                # convergence is a filter-count on this same DataFrame —
-                # not a third join.
-                stepped = (
-                    labels.select("node", F.col("label").alias("_old"))
-                    .join(nbr_min, F.col("node") == F.col("a"), "left")
-                    .select(
-                        "node",
-                        "_old",
-                        F.least(
-                            F.col("_old"), F.coalesce(F.col("_nbr"), F.col("_old"))
-                        ).alias("label"),
-                    )
-                )
-                # eager localCheckpoint: materialize AND truncate
-                # lineage — persist alone leaves each round's analyzed
-                # plan containing the previous round's (cache pruning
-                # happens after analysis), which grows plan-build time
-                # exponentially over rounds (see _star_fixpoint note)
-                stepped = materialize_shared(stepped)
-                changed = stepped.filter(F.col("label") != F.col("_old")).count()
-                _release(labels)
-                labels = stepped
-                if changed == 0:
-                    converged = True
-                    break
-        if not converged:
-            # Diameter > max_iter (or algorithm="star"): returning the
-            # partially-propagated labels would be silently WRONG, so
-            # switch to the diameter-independent contraction. Near-dup
-            # graphs never get here (clique-like, 2-4 rounds); long-path
-            # graphs pay the capped label rounds then O(log² n) more.
-            if labels is not None:
-                _release(labels)
-            if algorithm == "label":
-                sym.unpersist()
-                raise RuntimeError(
-                    f"min-label propagation did not converge within "
-                    f"max_iter={max_iter} rounds (graph diameter too "
-                    "large); use algorithm='star' or 'auto'"
-                )
+            )
+            # eager localCheckpoint: materialize AND truncate lineage —
+            # persist alone leaves each round's analyzed plan containing
+            # the previous round's (cache pruning happens after
+            # analysis), which grows plan-build time exponentially over
+            # rounds (see _star_fixpoint note)
+            stepped = materialize_shared(stepped)
+            changed = stepped.filter(F.col("label") != F.col("_old")).count()
+            _release(labels)
+            labels = stepped
+            if changed == 0:
+                break
+        else:
+            # Diameter > max_iter: returning the partially-propagated
+            # labels would be silently WRONG, so switch to the
+            # diameter-independent contraction. Near-dup graphs never
+            # get here (clique-like, 2-4 rounds); long-path graphs pay
+            # the capped label rounds then O(log² n) more.
+            _release(labels)
             labels = _star_fixpoint(sym).select(
                 "node", F.col("cluster_id").alias("label")
             )
@@ -395,7 +376,7 @@ def pagerank(
         # out-of-contract dangling node (outdeg 0, appears only as dst)
         # is therefore excluded from the output and from the 1/N
         # normalization by BOTH physical strategies — the size gate
-        # never changes the result set (r2 ADVICE item).
+        # never changes the result set.
         src_arr = pdf["src"].to_numpy()
         dst_arr = pdf["dst"].to_numpy()
         nodes, src_c = np.unique(src_arr, return_inverse=True)
@@ -538,8 +519,8 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
 
     Lineage: every intermediate score table feeds exactly ONE consumer
     (the next round's join), so the unrolled plan grows LINEARLY and
-    lazy chaining is safe — no per-round checkpoint (r7; the r6 loop
-    paid one materialize job per round for a 2^depth risk this
+    lazy chaining is safe — no per-round checkpoint (a per-round
+    materialize job would pay for a 2^depth plan-growth risk this
     alternating chain doesn't have). Cuts happen only where branching
     actually occurs — the FINAL auth and hub (each read by its totals
     agg and the output projection) — plus every 4th round as an
@@ -550,7 +531,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """
     if n_iter < 1:
         # auth is only bound inside the loop; zero rounds would crash
-        # on auth.agg below with a confusing NoneType error (ADVICE r6)
+        # on auth.agg below with a confusing NoneType error
         raise ValueError(f"hits() needs n_iter >= 1, got {n_iter}")
     e = materialize_shared(edges.distinct())
     n_edges = e.count()  # over materialized blocks; sizes the loop
@@ -600,118 +581,67 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     )
 
 
-def local_clustering(edges: DataFrame) -> DataFrame:
-    """Per-node triangle count + local clustering coefficient.
-
-    Same degree-oriented enumeration as :func:`triangle_stats` (every
-    out-degree capped at O(sqrt(m)), wedge join bounded at O(m^1.5)
-    rows total), but instead of counting triangles globally each found
-    triangle (a, b, c) is exploded to its three corners and counted
-    per node. lcc(v) = 2*T(v) / (d(v)*(d(v)-1)) for d >= 2.
-
-    Returns (node BIGINT, d BIGINT, n_tri BIGINT, lcc DOUBLE) for
-    every node with degree >= 2; lcc is a single correctly-rounded
-    division of exact integers, so it is bit-identical across engines.
-    """
-    e = materialize_shared(
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    du, dv = deg.alias("du"), deg.alias("dv")
-    keep_uv = (F.col("du.d") < F.col("dv.d")) | (
-        (F.col("du.d") == F.col("dv.d")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        e.join(du, F.col("u") == F.col("du.node"))
-        .join(dv, F.col("v") == F.col("dv.node"))
-        .select(
-            F.when(keep_uv, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(keep_uv, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(keep_uv, F.col("dv.d")).otherwise(F.col("du.d")).alias(
-                "dst_d"
-            ),
-        )
-    )
-    oriented = materialize_shared(oriented)
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedge_lt = (F.col("e1.dst_d") < F.col("e2.dst_d")) | (
-        (F.col("e1.dst_d") == F.col("e2.dst_d"))
-        & (F.col("e1.dst") < F.col("e2.dst"))
-    )
-    wedges = e1.join(
-        e2, (F.col("e1.src") == F.col("e2.src")) & wedge_lt
-    ).select(
-        F.col("e1.src").alias("a"),
-        F.col("e1.dst").alias("b"),
-        F.col("e2.dst").alias("c"),
-    )
-    closing = oriented.select(
-        F.col("src").alias("b"), F.col("dst").alias("c")
-    )
-    corners = wedges.join(closing, ["b", "c"]).select(
-        F.explode(F.array("a", "b", "c")).alias("node")
-    )
-    tri = corners.groupBy("node").agg(F.count("*").alias("n_tri"))
-    lcc = 2.0 * F.coalesce(F.col("n_tri"), F.lit(0)) / (
-        F.col("d") * (F.col("d") - 1)
-    )
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Canonical undirected edge set of a (u, v) edge list: each edge
+    once as (least, greatest) BIGINT ids, self-loops dropped — so
+    reversed duplicates, repeated edges and self-loops cannot inflate
+    any count downstream."""
     return (
-        deg.join(tri, "node", "left")
-        .filter(F.col("d") >= 2)
-        .select(
-            F.col("node").cast("bigint").alias("node"),
-            F.col("d").cast("bigint").alias("d"),
-            F.coalesce(F.col("n_tri"), F.lit(0))
-            .cast("bigint")
-            .alias("n_tri"),
-            lcc.alias("lcc"),
-        )
-    )
-
-
-def triangle_stats(edges: DataFrame) -> DataFrame:
-    """Exact triangle count + global clustering coefficient of an
-    undirected graph, via the degree-oriented node-iterator algorithm
-    (Suri & Vassilvitskii, WWW'11 — the MapReduce-friendly variant).
-
-    ``edges`` must have columns (u, v). Self-loops are dropped and the
-    edge set is canonicalized to u<v + distinct, so multi-edges cannot
-    inflate counts.
-
-    Why degree orientation matters at 100 TB: the naive wedge join
-    fans out quadratically on hub nodes (a node of degree d yields
-    d*(d-1)/2 wedges — a power-law graph's hottest key explodes).
-    Orienting every edge from the (degree, id)-smaller endpoint to the
-    larger caps every out-degree at O(sqrt(m)), so the wedge self-join
-    produces at most O(m^1.5) rows TOTAL and no single key dominates.
-    Three shuffles end-to-end: degree agg, wedge self-join on src,
-    wedge-closure equi-join on (b, c).
-
-    Returns one row: (n_nodes, n_edges, n_triangles, clustering) where
-    clustering = 3*triangles / wedges (NULL for a wedge-free graph).
-    """
-    e = materialize_shared(
         edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+            F.least("u", "v").cast("bigint").alias("u"),
+            F.greatest("u", "v").cast("bigint").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-    )  # feeds deg, oriented AND totals: without this the caller's
-    # edge-builder join re-executes for each consumer
-    # One pass over 2|E| endpoint rows; partial agg collapses map-side.
-    deg = (
+    )
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    """Directed (src, dst) adjacency of an :func:`_undirected` edge set:
+    each edge in both directions, from ONE explode over one scan (a
+    union would read ``e`` twice)."""
+    return e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+def _degrees(e: DataFrame, name: str = "d") -> DataFrame:
+    """(node, degree) of an :func:`_undirected` edge set: one pass over
+    its 2|E| endpoint rows; the partial agg collapses them map-side."""
+    return (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
-        .agg(F.count("*").alias("d"))
+        .agg(F.count("*").alias(name))
     )
+
+
+def _oriented_wedges(
+    e: DataFrame, deg: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Degree-oriented wedges of an :func:`_undirected` edge set ``e``
+    with degrees ``deg`` (Suri & Vassilvitskii, WWW'11 — the
+    MapReduce-friendly node-iterator).
+
+    Why orientation matters at 100 TB: the naive wedge join fans out
+    quadratically on hub nodes (a node of degree d yields d*(d-1)/2
+    wedges — a power-law graph's hottest key explodes). Orienting every
+    edge from the (degree, id)-smaller endpoint to the larger caps every
+    out-degree at O(sqrt(m)), so the wedge self-join produces at most
+    O(m^1.5) rows TOTAL and no single key dominates.
+
+    Returns ``(wedges, closing)``: the wedges (a, b, c) — two oriented
+    edges a→b, a→c out of one node, each unordered pair once — and the
+    oriented edges as (b, c), so ``wedges.join(closing, ["b", "c"])``
+    yields every triangle exactly once. Both read the materialized
+    oriented list, whose checkpoint blocks must stay alive until the
+    caller's action; the ContextCleaner reclaims them once the frames
+    are unreferenced.
+    """
     du, dv = deg.alias("du"), deg.alias("dv")
     keep_uv = (F.col("du.d") < F.col("dv.d")) | (
         (F.col("du.d") == F.col("dv.d")) & (F.col("u") < F.col("v"))
@@ -737,10 +667,68 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
     wedges = e1.join(
         e2, (F.col("e1.src") == F.col("e2.src")) & wedge_lt
-    ).select(F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c"))
-    closing = oriented.select(
-        F.col("src").alias("b"), F.col("dst").alias("c")
+    ).select(
+        F.col("e1.src").alias("a"),
+        F.col("e1.dst").alias("b"),
+        F.col("e2.dst").alias("c"),
     )
+    closing = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    return wedges, closing
+
+
+def local_clustering(edges: DataFrame) -> DataFrame:
+    """Per-node triangle count + local clustering coefficient of the
+    undirected graph ``edges`` (u, v), with integral node ids.
+
+    Same degree-oriented enumeration as :func:`triangle_stats`
+    (:func:`_oriented_wedges`), but instead of counting triangles
+    globally each found triangle (a, b, c) is exploded to its three
+    corners and counted per node. lcc(v) = 2*T(v) / (d(v)*(d(v)-1)) for
+    d >= 2.
+
+    Returns (node BIGINT, d BIGINT, n_tri BIGINT, lcc DOUBLE) for
+    every node with degree >= 2; lcc is a single correctly-rounded
+    division of exact integers, so it is bit-identical across engines.
+    """
+    e = materialize_shared(_undirected(edges))
+    deg = _degrees(e)
+    wedges, closing = _oriented_wedges(e, deg)
+    corners = wedges.join(closing, ["b", "c"]).select(
+        F.explode(F.array("a", "b", "c")).alias("node")
+    )
+    tri = corners.groupBy("node").agg(F.count("*").alias("n_tri"))
+    lcc = 2.0 * F.coalesce(F.col("n_tri"), F.lit(0)) / (
+        F.col("d") * (F.col("d") - 1)
+    )
+    return (
+        deg.join(tri, "node", "left")
+        .filter(F.col("d") >= 2)
+        .select(
+            F.col("node").cast("bigint").alias("node"),
+            F.col("d").cast("bigint").alias("d"),
+            F.coalesce(F.col("n_tri"), F.lit(0))
+            .cast("bigint")
+            .alias("n_tri"),
+            lcc.alias("lcc"),
+        )
+    )
+
+
+def triangle_stats(edges: DataFrame) -> DataFrame:
+    """Exact triangle count + global clustering coefficient of the
+    undirected graph ``edges`` (u, v), with integral node ids, via the
+    degree-oriented wedge join of :func:`_oriented_wedges`. Three
+    shuffles end-to-end: degree agg, wedge self-join on src,
+    wedge-closure equi-join on (b, c).
+
+    Returns one row: (n_nodes, n_edges, n_triangles, clustering) where
+    clustering = 3*triangles / wedges (NULL for a wedge-free graph).
+    """
+    # materialized: feeds deg, oriented AND totals — without it the
+    # caller's edge-builder join re-executes for each consumer
+    e = materialize_shared(_undirected(edges))
+    deg = _degrees(e)
+    wedges, closing = _oriented_wedges(e, deg)
     tri = wedges.join(closing, ["b", "c"]).agg(
         F.count("*").alias("n_triangles")
     )
@@ -750,9 +738,6 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
             F.sum(F.col("d") * (F.col("d") - 1) / 2.0).alias("n_wedges"),
         )
     )
-    # NOTE: `oriented`'s checkpoint blocks back the returned (lazy)
-    # frame — they must stay alive until the caller's action; the
-    # ContextCleaner reclaims them once the frame is unreferenced.
     return tri.crossJoin(F.broadcast(totals)).select(
         F.col("n_nodes").cast("bigint"),
         F.col("n_edges").cast("bigint"),
@@ -771,10 +756,10 @@ def bfs_levels(
     """Single-source BFS levels over an undirected graph, bounded at
     ``max_depth`` rounds.
 
-    ``edges`` has columns (u, v); ``source`` defaults to the smallest
-    node id (deterministic at any scale factor). Returns (node BIGINT,
-    level INT) for every node within ``max_depth`` hops, where level is
-    the minimal hop distance.
+    ``edges`` has columns (u, v) of integral node ids; ``source``
+    defaults to the smallest node id (deterministic at any scale
+    factor). Returns (node BIGINT, level INT) for every node within
+    ``max_depth`` hops, where level is the minimal hop distance.
 
     Frontier-expansion shape — the distributed BFS that survives wide
     graphs: each round is ONE equi-join of the current frontier against
@@ -786,24 +771,7 @@ def bfs_levels(
     loops; the loop exits early when a frontier is exhausted.
     """
     spark = edges.sparkSession
-    sym = (
-        edges.select(
-            F.least("u", "v").cast("bigint").alias("u"),
-            F.greatest("u", "v").cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                    F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
-    sym = materialize_shared(sym)
+    sym = materialize_shared(_both_ways(_undirected(edges)))
     if source is None:
         # 1-row control job
         source = sym.agg(F.min("src")).collect()[0][0]
@@ -912,25 +880,19 @@ def kcore(
     edges: DataFrame,
     k: int = 14,
     max_rounds: int = 8,
-    on_exhausted: str = "raise",
 ) -> DataFrame:
-    """Iterative k-core peeling: repeatedly drop nodes with degree < k
-    (and their edges) until fixpoint or ``max_rounds``. Returns the
-    surviving (node BIGINT, degree BIGINT) table — the subgraph where
-    every node keeps >= k neighbors once converged.
+    """Iterative k-core peeling of the undirected graph ``edges`` (u, v),
+    with integral node ids: repeatedly drop nodes with degree < k (and
+    their edges) until fixpoint. Returns the surviving (node BIGINT,
+    degree BIGINT) table — the subgraph where every node keeps >= k
+    neighbors.
 
-    Convergence contract (VERDICT r4 #5): if ``max_rounds`` is
-    exhausted BEFORE fixpoint, the surviving table is a strict
-    supergraph of the true k-core — silently returning it used to be
-    indistinguishable from convergence. Now exhaustion triggers one
-    extra degree check; if any survivor still has degree < k the
-    behavior follows ``on_exhausted``:
-
-    - ``"raise"`` (default): RuntimeError naming the bound — the safe
-      default at 100x scale, where deeper peeling chains get likelier;
-    - ``"return"``: return the bounded ("partial peel") result, for
-      callers that mirror the bound exactly the way the q98 unrolled
-      oracle does.
+    Convergence contract: if ``max_rounds`` is exhausted BEFORE
+    fixpoint, the surviving table is a strict supergraph of the true
+    k-core, which would be indistinguishable from convergence if
+    returned. So exhaustion triggers one extra degree check, and if any
+    survivor still has degree < k the call raises a RuntimeError naming
+    the bound — at 100x scale deeper peeling chains get likelier.
 
     The peeling shape at scale: each round is one endpoint-explode
     degree aggregation plus two semi-joins restricting the edge list to
@@ -941,17 +903,7 @@ def kcore(
     unrolled oracle, so early exit cannot diverge from it). Lineage is
     cut per round like the CC/PageRank/BFS loops.
     """
-    if on_exhausted not in ("raise", "return"):
-        raise ValueError(f"on_exhausted must be 'raise' or 'return', got {on_exhausted!r}")
-    e = (
-        edges.select(
-            F.least("u", "v").cast("bigint").alias("u"),
-            F.greatest("u", "v").cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = materialize_shared(e)
+    e = materialize_shared(_undirected(edges))
     n_edges = e.count()
     converged = False
     # The peeling rounds run under full AQE, with no loop_confs pin:
@@ -960,12 +912,7 @@ def kcore(
     # can only sort-merge both sides every round. A wide pin is worse
     # still; see LOOP_ROWS_PER_PARTITION in scale.py.
     for _ in range(max_rounds):
-        deg = (
-            e.select(F.explode(F.array("u", "v")).alias("node"))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("node")
+        keep = _degrees(e).filter(F.col("d") >= k).select("node")
         new_e = materialize_shared(
             e.join(keep, e["u"] == keep["node"], "left_semi").join(
                 keep, F.col("v") == keep["node"], "left_semi"
@@ -980,28 +927,14 @@ def kcore(
         # the last allowed round still removed edges; one extra degree
         # check decides whether it happened to LAND on the fixpoint
         # (1-row control action, only on the exhaustion path)
-        below = (
-            e.select(F.explode(F.array("u", "v")).alias("node"))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-            .filter(F.col("d") < k)
-            .limit(1)
-            .count()
-        )
-        if below > 0 and on_exhausted == "raise":
+        if _degrees(e).filter(F.col("d") < k).limit(1).count() > 0:
             raise RuntimeError(
                 f"kcore(k={k}) did not reach fixpoint within "
                 f"max_rounds={max_rounds}: the surviving subgraph still "
                 "has nodes below degree k (a strict supergraph of the "
-                "true k-core). Raise max_rounds, or pass "
-                "on_exhausted='return' to accept the bounded peel."
+                "true k-core). Raise max_rounds."
             )
-    return (
-        e.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-        .orderBy("node")
-    )
+    return _degrees(e, "degree").orderBy("node")
 
 
 def _blocked_adjacency(sym: DataFrame, chunk: int) -> DataFrame:
@@ -1045,27 +978,18 @@ def _hash_not_sort(
 
     ``rows``: aggregate Column over ``sized`` estimating ``side``'s row
     count — REQUIRED when ``side`` is an expansion of ``sized`` rather
-    than a projection of it (r9, ADVICE: the adamic-adar build leg is
-    ``adj`` exploded (blk+1)× per row, so ``adj.count()`` undersized it
-    on hub-heavy graphs and the "clearly under threshold → unhinted"
+    than a projection of it (the adamic-adar build leg is ``adj``
+    exploded (blk+1)× per row, so ``adj.count()`` would undersize it on
+    hub-heavy graphs and the "clearly under threshold → unhinted"
     branch could still let AQE fall into sort-merge). Defaults to
     ``count(*)``.
+
+    The threshold is the one Spark's planner uses, already parsed from
+    the session conf (every byte-size suffix, ``-1`` for disabled).
     """
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).lower()
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if raw.rstrip("b").endswith(suffix):
-            mult = m
-            raw = raw.rstrip("b")[:-1]
-            break
-    else:
-        raw = raw.rstrip("b")
-    try:
-        threshold = int(raw) * mult
-    except ValueError:  # pragma: no cover - conf format guard
-        threshold = 10 << 20
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
     if threshold <= 0:  # broadcast disabled -> always hash
         return side.hint("shuffle_hash")
     n = sized.agg((rows if rows is not None else F.count("*")).alias("n")).first()["n"]
@@ -1085,10 +1009,12 @@ def adamic_adar(edges: DataFrame, chunk: int = 32) -> DataFrame:
     Returns (node_a BIGINT, node_b BIGINT, adamic_adar DOUBLE rounded
     to 6, common_neighbors BIGINT) with node_a < node_b, unordered.
 
-    The hub-safe wedge generator (VERDICT r4 #2): unlike triangle
-    counting, the wedge self-join here CANNOT be degree-oriented —
-    every wedge contributes to the score — so a naive self-join on the
-    center key puts a degree-d hub's d^2/2 wedges under ONE join key
+    ``edges`` has columns (u, v) of integral node ids.
+
+    The hub-safe wedge generator: unlike triangle counting, the wedge
+    self-join here CANNOT be degree-oriented — every wedge contributes
+    to the score — so a naive self-join on the center key puts a
+    degree-d hub's d^2/2 wedges under ONE join key
     (AQE skew-join splits the straggler but the aggregate Σd² volume
     still funnels through hub keys). Fix: salt-split each adjacency
     list into ceil(d/chunk) hash blocks and self-join block PAIRS —
@@ -1103,24 +1029,10 @@ def adamic_adar(edges: DataFrame, chunk: int = 32) -> DataFrame:
     Replication cost: a degree-d node's edges fan out ~ceil(d/chunk)/2
     times per leg — only hubs pay, exactly where the skew win is.
     """
-    e = materialize_shared(
-        edges.select(
-            F.least("u", "v").cast("bigint").alias("u"),
-            F.greatest("u", "v").cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )  # feeds sym (via blocking) AND the existing-edge anti-join
-    sym = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("x")
-    ).select("x.src", "x.dst")
+    # feeds the adjacency (via blocking) AND the existing-edge anti-join
+    e = materialize_shared(_undirected(edges))
     # blocked adjacency feeds both join legs: materialize once
-    adj = materialize_shared(_blocked_adjacency(sym, chunk))
+    adj = materialize_shared(_blocked_adjacency(_both_ways(e), chunk))
     left = adj.select(
         "src",
         "dst",
@@ -1134,7 +1046,7 @@ def adamic_adar(edges: DataFrame, chunk: int = 32) -> DataFrame:
         F.col("blk").alias("r_blk"),
         F.explode(F.expr("sequence(0, blk)")).alias("i"),
     )
-    # r8 (BENCH_SF1): never let the wedge-grain joins run as SORT-MERGE.
+    # Never let the wedge-grain joins run as SORT-MERGE.
     # Left unhinted, AQE flips them between broadcast (fast) and
     # sort-merge near the 10 MB stats boundary, and the sort-merge mode
     # SORTS the fanned-out adjacency and the full wedge stream — the
@@ -1194,12 +1106,12 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected graph, fixed ``rounds`` sweeps, fully deterministic.
 
-    ``edges`` has columns (u, v). Every node starts with its own id as
-    label; each round reassigns every node the label that is most
-    frequent among its NEIGHBORS (self excluded), breaking count ties
-    toward the smallest label — the deterministic variant of LPA's
-    random tie-break, so results are identical across engines, reshards
-    and retries. Returns (node BIGINT, community BIGINT).
+    ``edges`` has columns (u, v) of integral node ids. Every node starts
+    with its own id as label; each round reassigns every node the label
+    that is most frequent among its NEIGHBORS (self excluded), breaking
+    count ties toward the smallest label — the deterministic variant of
+    LPA's random tie-break, so results are identical across engines,
+    reshards and retries. Returns (node BIGINT, community BIGINT).
 
     Scale shape (the same per-round contract as :func:`pagerank` /
     :func:`bfs_levels`): one equi-join of the symmetrized edge list
@@ -1210,48 +1122,22 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     materialized per round to cut lineage. Per-round cost O(|E|),
     rounds fixed by contract — the oracle unrolls the same rounds.
     """
-    sym = (
-        edges.select(
-            F.least("u", "v").cast("bigint").alias("u"),
-            F.greatest("u", "v").cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                    F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
     if rounds < 1:
         raise ValueError("label_propagation needs rounds >= 1")
-    sym = materialize_shared(sym)
+    sym = materialize_shared(_both_ways(_undirected(edges)))
     # Sweeps run under full AQE, with no loop_confs pin: a pin freezes
     # the label join as a static SortMergeJoin where AQE broadcasts the
     # |V|-row label table at run time. See kcore's note.
-    labels = _lpa_rounds(sym, rounds)
-    return labels.select("node", F.col("label").alias("community"))
-
-
-def _lpa_rounds(sym: DataFrame, rounds: int) -> DataFrame:
-    labels = None
-    for rnd in range(rounds):
-        if rnd == 0:
-            # identity-label fast path: with label(v) = v and the edge
-            # list deduped, every neighbor label occurs exactly once,
-            # so argmax-with-min-tie degenerates to MIN(neighbor) —
-            # one map-side-combined agg, no join. Result-identical to
-            # the generic round (the oracle keeps the generic form).
-            labels = materialize_shared(
-                sym.groupBy(F.col("src").alias("node")).agg(
-                    F.min("dst").alias("label")
-                )
-            )
-            continue
+    #
+    # Round 1 is the identity-label fast path: with label(v) = v and the
+    # edge list deduped, every neighbor label occurs exactly once, so
+    # argmax-with-min-tie degenerates to MIN(neighbor) — one
+    # map-side-combined agg, no join. Result-identical to the generic
+    # round (the oracle keeps the generic form).
+    labels = materialize_shared(
+        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("label"))
+    )
+    for _ in range(rounds - 1):
         cnt = (
             sym.join(labels, sym["dst"] == labels["node"])
             .groupBy(F.col("src"), F.col("label"))
@@ -1268,4 +1154,4 @@ def _lpa_rounds(sym: DataFrame, rounds: int) -> DataFrame:
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("label").alias("label"))
         )
-    return labels
+    return labels.select("node", F.col("label").alias("community"))

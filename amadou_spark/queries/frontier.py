@@ -816,7 +816,7 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     description="k-core peeling (k=14, 8 rounds — converged at both "
     "gate SFs: min surviving degree equals k; non-convergence would "
     "RAISE by contract rather than silently return a supergraph, see "
-    "operators/graph.py kcore on_exhausted) over the sampled part "
+    "operators/graph.py kcore) over the sampled part "
     "co-order graph: per round one endpoint-explode degree agg + two "
     "semi-joins restrict the edge list to surviving nodes; the list "
     "only shrinks so round cost is monotone decreasing, and the loop "

@@ -270,24 +270,13 @@ def llm_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY query_id, rank
     """,
     description="brute-force cosine top-5 for 20 query vectors: broadcast "
-    "queries × corpus scan, dot product via JVM zip_with/aggregate fold "
-    "(double precision, sequential — reproducible), per-query top-k window",
+    "queries × corpus scan, dot product via an Arrow-batched numpy einsum "
+    "(pandas UDF; ROUND(·, 6) absorbs summation-order float noise), "
+    "per-query top-k window",
 )
 def llm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = register_tables(spark, sf_dir)
     return cosine_topk_bruteforce(t["embeddings"], query_ids=list(range(20)), k=5)
-
-
-# Deregistered r5 (VERDICT r4 #4): the raw ANN neighbor lists are
-# engine-specific (no SQL oracle exists) and recorded `err: no_oracle`
-# every round. The quality contract is the hash-checked
-# llm_similarity_*_recall gates below, which execute the SAME approx
-# pipelines against brute force — so deregistering removes the
-# permanent amber rows without losing any driver-checked coverage.
-def llm_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw LSH ANN entry point (ex-registry llm_similarity_lsh)."""
-    t = register_tables(spark, sf_dir)
-    return cosine_topk_lsh(t["embeddings"], query_ids=list(range(20)), k=5)
 
 
 #: 32 fixed query vectors for the ANN recall gates (vec_id is dense
@@ -828,26 +817,6 @@ def llm_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 40)
         .orderBy("lang", "rn")
     )
-
-
-# Deregistered r5 (VERDICT r4 #4) — see llm_lsh above; quality contract
-# is the hash-checked llm_similarity_ivf_recall gate.
-def llm_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw IVF ANN entry point (ex-registry llm_similarity_ivf)."""
-    from amadou_spark.llm.similarity import cosine_topk_ivf
-
-    t = register_tables(spark, sf_dir)
-    return cosine_topk_ivf(t["embeddings"], query_ids=list(range(20)), k=5)
-
-
-# Deregistered r5 (VERDICT r4 #4) — see llm_lsh above; quality contract
-# is the hash-checked llm_similarity_pq_recall gate.
-def llm_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw PQ-ADC ANN entry point (ex-registry llm_similarity_pq)."""
-    from amadou_spark.llm.similarity import pq_topk
-
-    t = register_tables(spark, sf_dir)
-    return pq_topk(t["embeddings"], query_ids=list(range(20)), k=5)
 
 
 @query(

@@ -550,10 +550,7 @@ def b07_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amadou_spark.streaming.windows import stateful_user_counts
 
     stream = read_events_stream(spark, sf_dir)
-    # state_partitions=8: Python-stateful — see run_stream_to_table
-    out = run_stream_to_table(
-        stateful_user_counts(stream), mode="update", state_partitions=8
-    )
+    out = run_stream_to_table(stateful_user_counts(stream), mode="update")
     return out.orderBy("user_id")
 
 
@@ -919,7 +916,6 @@ def b07_tws_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_stream_to_table(
         running_totals_stream(stream),
         mode="update",
-        state_partitions=8,  # Python-stateful — see run_stream_to_table
         confs=ROCKSDB_PROVIDER_CONF,
     )
     return out.withColumnRenamed("total_value", "total_cents").orderBy(

@@ -27,6 +27,19 @@ _CHANGELOG_KEY = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
 
+# Shuffle width a streaming query starts with, which fixes its number
+# of state-store instances: Spark pins one state store per shuffle
+# partition at query START, and every microbatch pays a task per store.
+# With the batch-tuned 32-partition default, stateful queries here spent
+# 2× longer on store bookkeeping than on data (7.7 s → 1.2 s at sf0.1,
+# measured on the RocksDB store). Sized to expected STATE, not batch
+# shuffle width. The Python-stateful queries (applyInPandasWithState,
+# transformWithState on RocksDB) are no slower at 4 than at 8: bench.py
+# at sf0.1 on a 4-core host, min of 3, two alternating pairs gave
+# b07_stateful_counts 1.02/0.97 s at 4 vs 1.12/1.27 s at 8 and
+# b07_tws_running_totals 3.06/2.41 s vs 3.67/3.13 s.
+STATE_PARTITIONS = 4
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events table as a stream.
@@ -57,24 +70,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_stream_to_table(
     stream_df: DataFrame,
     mode: str = "complete",
-    state_partitions: int = 4,
     confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Drive a (finite) streaming query to completion through a memory
     sink and return the result as a batch DataFrame. Test/verification
     harness — a production deployment writes to Kafka/parquet instead.
-
-    ``state_partitions`` bounds the number of state-store instances:
-    Spark pins one state store per shuffle partition at query START,
-    and every microbatch pays a task per store — with the batch-tuned
-    32-partition default, stateful queries here spent 2× longer on
-    store bookkeeping than on data (measured 7.7s → 1.2s at sf0.1, on
-    the RocksDB store, where each instance also pays a native open).
-    Size it to expected STATE, not batch shuffle width. The two
-    PYTHON-stateful queries (applyInPandasWithState,
-    transformWithState) pass 8: their per-partition work crosses the
-    Python boundary and was measured ~30% SLOWER at 4 (also on
-    RocksDB; transformWithState still runs there).
+    The query starts with ``STATE_PARTITIONS`` shuffle partitions, so
+    that many state-store instances.
 
     ``confs``: extra session confs the query must see at START (e.g.
     ``stateful.ROCKSDB_PROVIDER_CONF`` for transformWithState, which
@@ -90,7 +92,7 @@ def run_stream_to_table(
     start_confs = {
         _CHANGELOG_KEY: spark.conf.get(_CHANGELOG_KEY, "true"),
         **(confs or {}),
-        "spark.sql.shuffle.partitions": str(state_partitions),
+        "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
     }
     with conf_scope(spark, start_confs):
         q = (

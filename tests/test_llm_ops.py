@@ -561,12 +561,11 @@ def test_duplicated_spans_planted(spark):
 
 
 def test_kcore_raises_on_unconverged_bound(spark):
-    """Convergence contract (VERDICT r4 #5): a path graph peels one
+    """Convergence contract: a path graph peels one
     layer per round under k=2, so max_rounds=1 cannot reach fixpoint —
     the bounded result is a strict supergraph of the (empty) 2-core and
-    must RAISE by default instead of silently returning it;
-    on_exhausted='return' opts into the bounded peel (the q98-oracle
-    mirror mode), and a generous bound converges to the true answer."""
+    must RAISE instead of silently returning it, and a generous bound
+    converges to the true answer."""
     import pytest as _pytest
 
     from amadou_spark.operators.graph import kcore
@@ -576,8 +575,6 @@ def test_kcore_raises_on_unconverged_bound(spark):
     )
     with _pytest.raises(RuntimeError, match="fixpoint"):
         kcore(path, k=2, max_rounds=1)
-    partial = kcore(path, k=2, max_rounds=1, on_exhausted="return")
-    assert partial.count() > 0  # supergraph of the empty true 2-core
     assert kcore(path, k=2, max_rounds=10).count() == 0
     # a graph that IS its own k-core converges in one round regardless
     tri = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "u long, v long")

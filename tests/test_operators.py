@@ -381,8 +381,9 @@ def test_pagerank_matches_numpy_reference(spark, local_threshold):
 
 
 def test_cc_star_matches_unionfind_on_random_graph(spark):
-    """large-star/small-star (distributed, forced via local_threshold=0)
-    must equal the driver union-find on a seeded random graph."""
+    """large-star/small-star (distributed, forced via local_threshold=0;
+    max_iter=0 skips label propagation) must equal the driver
+    union-find on a seeded random graph."""
     import random
 
     from amadou_spark.operators.graph import (
@@ -397,9 +398,7 @@ def test_cc_star_matches_unionfind_on_random_graph(spark):
     edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
     want = dict(_local_components(pairs))
     got = dict(
-        connected_components(
-            edges, local_threshold=0, algorithm="star"
-        ).collect()
+        connected_components(edges, local_threshold=0, max_iter=0).collect()
     )
     assert got == want
 
@@ -416,7 +415,7 @@ def test_cc_self_loop_node_all_strategies_agree(spark):
     for kwargs in (
         {"local_threshold": 1_000},            # driver union-find
         {"local_threshold": 0},                # label propagation
-        {"local_threshold": 0, "algorithm": "star"},
+        {"local_threshold": 0, "max_iter": 0},  # star contraction
     ):
         got = dict(connected_components(edges, **kwargs).collect())
         assert got == expect, kwargs
@@ -424,11 +423,8 @@ def test_cc_self_loop_node_all_strategies_agree(spark):
 
 def test_cc_long_path_fallback_converges(spark):
     """A path graph's diameter exceeds the label-propagation round cap;
-    'auto' must fall back to the star contraction and return CORRECT
-    labels (the pre-r3 loop silently returned unconverged ones), and
-    'label' must refuse loudly."""
-    import pytest as _pytest
-
+    connected_components must fall back to the star contraction and
+    return CORRECT labels, not the unconverged propagation ones."""
     from amadou_spark.operators.graph import connected_components
 
     n = 16
@@ -436,15 +432,65 @@ def test_cc_long_path_fallback_converges(spark):
         [(i, i + 1) for i in range(n)], ["id_a", "id_b"]
     )
     got = dict(
-        connected_components(
-            edges, local_threshold=0, max_iter=2, algorithm="auto"
-        ).collect()
+        connected_components(edges, local_threshold=0, max_iter=2).collect()
     )
     assert got == {i: 0 for i in range(n + 1)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            edges, local_threshold=0, max_iter=2, algorithm="label"
-        ).collect()
+
+
+def test_hash_not_sort_reads_spark_parsed_broadcast_threshold(spark):
+    """The broadcast gate reads the threshold Spark itself parsed, so
+    every byte-size suffix counts: a 100 MB build side sits far below
+    "1t" (1 TB, not a 10 MB fallback) and stays unhinted; with
+    broadcast disabled it is always shuffle_hash-hinted."""
+    from amadou_spark.operators.graph import _hash_not_sort
+    from amadou_spark.session import conf_scope
+
+    df = spark.range(1)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with conf_scope(spark, {key: "1t"}):
+        assert _hash_not_sort(df, df, 100 << 20, spark) is df
+    with conf_scope(spark, {key: "-1"}):
+        hinted = _hash_not_sort(df, df, 100 << 20, spark)
+    assert hinted is not df
+    assert "shuffle_hash" in hinted._jdf.queryExecution().logical().toString()
+
+
+_K4_TAIL = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "triangle_stats",
+        "local_clustering",
+        "bfs_levels",
+        "kcore",
+        "adamic_adar",
+        "label_propagation",
+    ],
+)
+def test_undirected_ops_ignore_messy_edges(spark, op):
+    """Every undirected operator returns the same rows for a messy edge
+    list (reversed duplicates, repeated edges, self-loops — one on a
+    node with no other edge) as for its canonical u < v form."""
+    from amadou_spark.operators import graph
+
+    fn = getattr(graph, op)
+    kwargs = {"k": 2} if op == "kcore" else {}
+    messy = (
+        _K4_TAIL
+        + [(v, u) for u, v in _K4_TAIL[::2]]
+        + _K4_TAIL[:3]
+        + [(2, 2), (6, 6), (9, 9)]
+    )
+
+    def rows(pairs):
+        df = spark.createDataFrame(pairs, "u int, v int")
+        return sorted(tuple(r) for r in fn(df, **kwargs).collect())
+
+    canonical = rows(_K4_TAIL)
+    assert canonical  # every operator has output on this graph
+    assert rows(messy) == canonical
 
 
 def test_pagerank_dangling_node_same_universe_both_paths(spark):
