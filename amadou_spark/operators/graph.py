@@ -876,11 +876,7 @@ def sssp(
     return dist.orderBy("node")
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 14,
-    max_rounds: int = 8,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
     """Iterative k-core peeling of the undirected graph ``edges`` (u, v),
     with integral node ids: repeatedly drop nodes with degree < k (and
     their edges) until fixpoint. Returns the surviving (node BIGINT,
@@ -905,7 +901,6 @@ def kcore(
     """
     e = materialize_shared(_undirected(edges))
     n_edges = e.count()
-    converged = False
     # The peeling rounds run under full AQE, with no loop_confs pin:
     # AQE's run-time re-planning turns each round's two semi-joins into
     # BROADCASTs of the surviving-node table, where a static pinned plan
@@ -920,10 +915,9 @@ def kcore(
         )
         n_new = new_e.count()
         if n_new == n_edges:
-            converged = True
             break
         e, n_edges = new_e, n_new
-    if not converged:
+    else:
         # the last allowed round still removed edges; one extra degree
         # check decides whether it happened to LAND on the fixpoint
         # (1-row control action, only on the exhaustion path)
