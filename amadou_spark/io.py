@@ -6,12 +6,28 @@ conventions baked in: explicit schemas (no production inferSchema),
 Hive-style date partitioning on writes, and idempotent overwrite of
 single date partitions (the scale-safe incremental sink: re-running a
 date replaces exactly that partition, nothing else).
+
+Parquet schemas are inferred once per file version. Spark infers a
+parquet schema with a footer-reading job on every ``spark.read.parquet``;
+:func:`read_parquet` remembers the ``StructType`` it got, process-wide
+and across sessions, under the key (each path's qualified name, length
+and modification time; the reader options; the session values of
+``_INFERENCE_CONFS``), and a later read with the same key passes it to
+``spark.read.schema`` and launches no job. Only reads whose every path
+is a plain file are remembered: a directory's files can change while
+its own status does not, and checking them would cost a second listing,
+so directories, globs and missing paths go through Spark's inference
+(and its error text) every time.
 """
 
 from __future__ import annotations
 
+import copy
+import threading
+from collections import OrderedDict
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,8 +67,76 @@ def read_json(
     return reader.json(_paths(urls))
 
 
+# Session SQL confs whose values change the schema parquet inference
+# returns (nanos as long, binary as string, INT96 as timestamp, NTZ
+# inference, footer merging): a remembered schema is served only under
+# the values it was inferred with.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# Remembered schemas, least recently used first. A session reads about
+# a dozen distinct files; the bound only keeps a long-lived process that
+# reads many dated files from growing without limit.
+_SCHEMAS_MAX = 256
+_SCHEMAS: OrderedDict[tuple, T.StructType] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+# Characters that make Hadoop expand a path as a glob.
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def _file_versions(spark: SparkSession, paths: list[str]) -> tuple | None:
+    """(qualified name, length, modification time) of each path, or
+    None unless every path is a plain, existing file."""
+    if any(_GLOB_CHARS.intersection(p) for p in paths):
+        return None
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    versions = []
+    for p in paths:
+        path = jvm.org.apache.hadoop.fs.Path(p)
+        try:
+            status = path.getFileSystem(conf).getFileStatus(path)
+        except Py4JJavaError:  # e.g. FileNotFoundException: Spark reports it
+            return None
+        if not status.isFile():
+            return None
+        versions.append(
+            (status.getPath().toString(), status.getLen(), status.getModificationTime())
+        )
+    return tuple(versions)
+
+
 def read_parquet(spark: SparkSession, *urls: DataUrl | str, **options: Any) -> DataFrame:
-    return spark.read.options(**options).parquet(*_paths(urls))
+    """``spark.read.parquet`` that infers a file's schema once per file
+    version (see the module docstring)."""
+    paths = _paths(urls)
+    reader = spark.read.options(**options)
+    versions = _file_versions(spark, paths)
+    if versions is None:
+        return reader.parquet(*paths)
+    key = (
+        versions,
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    df = reader.parquet(*paths)
+    # a copy: df.schema is cached on df, and a caller may mutate it
+    schema = copy.deepcopy(df.schema)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = schema
+        if len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    return df
 
 
 def read_orc(spark: SparkSession, *urls: DataUrl | str, **options: Any) -> DataFrame:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from amadou_spark import io
 from amadou_spark.session import conf_scope
 
 _CHANGELOG_KEY = (
@@ -46,16 +47,18 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FileStreamSource requires an explicit schema and a
     directory-resolvable path, so the exact file is matched with a
-    one-character glob (`events.parque[t]`). The schema is taken from a
-    batch footer read of the same file rather than hard-coded: the
-    testdata's `ts` column has shipped both as TIMESTAMP(NANOS) (read
-    as long under nanosAsLong, then rebuilt) and as plain
+    one-character glob (`events.parque[t]`). The schema is the one a
+    batch read of the same file infers, rather than a hard-coded one:
+    the testdata's `ts` column has shipped both as TIMESTAMP(NANOS)
+    (read as long under nanosAsLong, then rebuilt) and as plain
     timestamp[us] — the stream must follow whichever the file has,
-    matching amadou_spark.catalog.load_table.
+    matching amadou_spark.catalog.load_table. That read goes through
+    ``io.read_parquet``, so it reads the footer only the first time
+    the process sees this version of the file.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     exact = f"{sf_dir.rstrip('/')}/events.parquet"
-    schema = spark.read.parquet(exact).schema
+    schema = io.read_parquet(spark, exact).schema
     path = f"{sf_dir.rstrip('/')}/events.parque[t]"
     stream = spark.readStream.schema(schema).parquet(path)
     if isinstance(schema["ts"].dataType, T.LongType):

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 import tempfile
 from datetime import date
 
@@ -78,6 +80,99 @@ class TestRoundTrips:
         write_date_partition(df, f"{workdir}/t", d)
         assert has_data_for_date(spark, f"{workdir}/t", d)
         assert not has_data_for_date(spark, f"{workdir}/t", d.next())
+
+
+# Runs in its own interpreter: stopping the shared test session would
+# break every later test that uses it.
+_RESTART_SCRIPT = """
+import json, sys, uuid
+sys.path.insert(0, sys.argv[1])
+from amadou_spark.catalog import register_tables
+from amadou_spark.session import get_spark
+
+sf_dir = sys.argv[2]
+conf = {"spark.driver.memory": "1g", "spark.sql.shuffle.partitions": "2"}
+spark = get_spark("amadou-restart", master="local[2]", conf=conf)
+inferred = {n: df.schema for n, df in register_tables(spark, sf_dir).items()}
+spark.stop()
+spark = get_spark("amadou-restart", master="local[2]", conf=conf)
+sc = spark.sparkContext
+tag = "restart-" + uuid.uuid4().hex
+sc.addJobTag(tag)
+try:
+    tables = register_tables(spark, sf_dir)
+finally:
+    sc.removeJobTag(tag)
+jsc = sc._jsc.sc()
+jsc.listenerBus().waitUntilEmpty()
+jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
+differ = sorted(n for n, df in tables.items() if df.schema != inferred[n])
+spark.stop()
+print(json.dumps({"jobs": jobs, "tables": len(tables), "differ": differ}))
+"""
+
+
+class TestRememberedParquetSchema:
+    """io.read_parquet infers a plain file's schema once per file
+    version and conf values; everything else reads as Spark reads it."""
+
+    def test_restarted_session_registers_tables_without_jobs(self, sf_dir):
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        proc = subprocess.run(
+            [sys.executable, "-c", _RESTART_SCRIPT, repo, sf_dir],
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        got = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert got == {"jobs": 0, "tables": 10, "differ": []}
+
+    def test_file_rewritten_in_place_is_inferred_again(self, spark, workdir):
+        pa = pytest.importorskip("pyarrow")
+        pq = pytest.importorskip("pyarrow.parquet")
+        path = f"{workdir}/t.parquet"
+        pq.write_table(pa.table({"a": [1, 2]}), path)
+        assert read_parquet(spark, path).columns == ["a"]
+        pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+        rows = read_parquet(spark, path).orderBy("a").collect()
+        assert [tuple(r) for r in rows] == [(1, "x"), (2, "y")]
+
+    def test_schema_is_never_served_under_other_conf_values(self, spark, workdir):
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import types as T
+
+        from amadou_spark.session import conf_scope
+
+        pa = pytest.importorskip("pyarrow")
+        pq = pytest.importorskip("pyarrow.parquet")
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        for order in (("true", "false", "true"), ("false", "true", "false")):
+            path = f"{workdir}/ns_{order[0]}.parquet"
+            pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), path)
+            for value in order:
+                with conf_scope(spark, {key: value}):
+                    if value == "true":
+                        df = read_parquet(spark, path)
+                        assert isinstance(df.schema["ts"].dataType, T.LongType)
+                        continue
+                    with pytest.raises(AnalysisException) as plain:
+                        spark.read.parquet(path)
+                    with pytest.raises(AnalysisException) as ours:
+                        read_parquet(spark, path)
+                    assert plain.value.getCondition() == "PARQUET_TYPE_ILLEGAL"
+                    assert ours.value.getCondition() == "PARQUET_TYPE_ILLEGAL"
+
+    def test_directory_is_inferred_on_every_read(self, spark, workdir):
+        write_parquet(spark.createDataFrame([(1,)], "a LONG"), f"{workdir}/d")
+        assert read_parquet(spark, f"{workdir}/d").columns == ["a"]
+        write_parquet(spark.createDataFrame([(1, "x")], "a LONG, b STRING"), f"{workdir}/d")
+        assert read_parquet(spark, f"{workdir}/d").columns == ["a", "b"]
+
+    def test_missing_path_raises_sparks_error(self, spark, workdir):
+        from pyspark.errors import AnalysisException
+
+        with pytest.raises(AnalysisException) as err:
+            read_parquet(spark, f"{workdir}/absent.parquet")
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
 
 
 class TestConfig:

@@ -29,7 +29,7 @@ REVIEW = {
     "q17_ranking_windows": "two window specs share one shuffle+sort on o_custkey",
     "llm_dedup_minhash": "banded LSH: candidates from an equi-join on (band, sig rows); no cross join",
     "llm_dedup_ngram_jaccard": "inverted-index self-join on 8-byte hashed shingles; shingle set materialized ONCE (eager checkpoint — broadcast consumers defeat ReusedExchange) and count joins hinted only under a provable row-bound gate, else AQE",
-    "llm_similarity_topk": "corpus scanned once; query side broadcast; JVM fold for the dot product",
+    "llm_similarity_topk": "corpus scanned once; query side broadcast; dot product as one numpy einsum per Arrow batch in a pandas UDF",
     "q31_asof_join": "as-of = tag-union + last() window: ONE shuffle on the key, no range explosion",
     "llm_similarity_lsh_recall": "LSH path under its recall gate: signature+norm = one ArrowEvalPython (batched matmul); candidates from (band,value) equi-join; exact side broadcast-joined for the hit count",
     "llm_dedup_simhash_pairs": "64-bit sig, 4×16-bit bands: 65,536 buckets/band equi-join, bit_count verify",
