@@ -87,12 +87,6 @@ def exploded_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> Da
     return main.union(fallback)
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Expression form (small inputs / tests). Hot paths use
-    ``exploded_shingles`` to avoid re-evaluating the split per element."""
-    return shingles_of(tokens(text), text, n)
-
-
 # Planning-time broadcast gate for join sides with a provable row-count
 # bound (per-doc shingle counts are ≤ |docs|; the stop-shingle set is
 # ≤ |doc-shingle pairs|/max_shingle_freq). Same pattern as

@@ -1,6 +1,7 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths, as the north star prescribes:
+Four top-k paths, one exact and three approximate, plus hard-negative
+mining built on the exact one:
 - brute-force cosine top-k — the exact baseline. The dot products are
   an Arrow-batched numpy einsum (a scalar pandas UDF, one Python
   crossing per batch): a broadcast of the (small) query set against a
@@ -12,6 +13,21 @@ Two paths, as the north star prescribes:
   path when |queries| is large: candidate pairs come from an equi-join
   on signature bands instead of a cross join. Recall is tunable via
   (n_planes, n_bands); tests pin recall ≥ threshold vs brute force.
+- product quantization with asymmetric distance computation (PQ-ADC) —
+  the memory-bound path: each vector compresses to ``m`` one-byte
+  codes, candidates are scored by table lookups and the shortlist is
+  re-ranked exactly.
+- IVF (inverted file index) — a k-means coarse quantizer trained on a
+  bounded sample assigns every vector to a list; each query probes its
+  ``n_probe`` nearest lists and re-ranks them exactly.
+- hard-negative mining — per anchor, the most similar vectors with a
+  different label and the margin against the best same-label one, for
+  contrastive training batches.
+
+PQ and IVF train their quantizers driver-side on a bounded seeded
+sample and LSH draws seeded hyperplanes, so every path is
+deterministic; tests pin each approximate path's recall against brute
+force.
 """
 
 from __future__ import annotations

@@ -799,9 +799,9 @@ def q117_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tie-break pins both engines to identical quartile boundaries), "
     "then the 4x4x4 segment census with value totals — the lifecycle-"
     "marketing workhorse. The oracle says ntile(4); the Spark side "
-    "computes the SAME buckets with ZERO fact-grain sorts (r6 VERDICT "
-    "#4): every measure rides a value-domain ntile lookup table "
-    "(ntile_domain_tables_local — one melted domain-sized collect off "
+    "computes the SAME buckets with ZERO fact-grain sorts: one "
+    "bounded_domain_ntile call scores all three measures off value-"
+    "domain ntile lookup tables (one melted domain-sized collect off "
     "the checkpoint, prefix sums in Python, LocalRelation broadcasts; "
     "never an ordered window). Recency and frequency "
     "domains are naturally bounded (observation-window dates, "
@@ -814,12 +814,12 @@ def q117_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "each sit inside one bucket aggregate straight off the broadcast "
     "tables; only the <=3 boundary-crossing runs per measure detour "
     "through per-run row_number windows (filtered BEFORE the "
-    "shuffle), and the union happens at the 64-cell census grain — "
+    "shuffle), and both branches feed ONE 64-cell census aggregate — "
     "at 100 TB nothing larger than a boundary run is ever sorted",
     tags=("stats", "windows"),
 )
 def q118_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from amadou_spark.scale import materialize_shared
+    from amadou_spark.scale import bounded_domain_ntile, materialize_shared
 
     t = register_tables(spark, sf_dir)
     rfm = materialize_shared(
@@ -843,79 +843,23 @@ def q118_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "m_kilo", F.floor(F.col("mon_c") / 100000).cast("bigint")
         )
     )
-    # All three measures ride value-domain prefix sums — ZERO fact-
-    # grain sorts, TWO branches total (the union happens at the
-    # 64-cell CENSUS grain, not the fact grain): rows whose three tie
-    # runs each sit inside one bucket (everything except the <= 3
-    # boundary runs per measure) take their buckets straight off the
-    # broadcast tables and aggregate once; only boundary-run rows
-    # detour through the per-run row_number tie-break windows —
-    # filtered BEFORE the window shuffles, so the sorted volume is
-    # boundary runs only. rfm is CHECKPOINTED because exchange reuse
-    # cannot dedup it: column pruning specializes each
-    # consumer's copy (both branches keep different columns, so the
-    # agg exchanges are not canonically equal — measured: 21 duplicate
-    # o_custkey exchanges without the materialize). One orders scan +
-    # one fact-grain shuffle total (persist was tried in r8 and is
-    # SLOWER: columnar cache fill + cache-manager growth across calls).
-    from pyspark.sql.window import Window as Wd
-
-    from amadou_spark.scale import ntile_domain_tables_local, ntile_from_rank
-
-    # r8: the three lookup tables are LOCAL RELATIONS — one melted
-    # domain-sized collect off the checkpoint blocks (bounded by value
-    # domain, not data size), replacing six broadcast/crossJoin
-    # exchange jobs with job-free LocalTableScan broadcasts (VERDICT
-    # r7 "what's wrong" #1).
-    tabs = ntile_domain_tables_local(
-        rfm, [("last_order", 4, "r"), ("freq", 4, "f"), ("m_kilo", 4, "m")]
+    # rfm is CHECKPOINTED because exchange reuse cannot dedup it:
+    # bounded_domain_ntile reads it twice (the domain melt, then the
+    # join), and column pruning specializes each consumer's copy of the
+    # agg, so the agg exchanges are not canonically equal (measured: 21
+    # duplicate o_custkey exchanges without the materialize). One
+    # orders scan + one fact-grain shuffle total; persist measured
+    # SLOWER (columnar cache fill + cache-manager growth across calls).
+    scored = bounded_domain_ntile(
+        rfm,
+        [
+            ("last_order", ["o_custkey"], 4, "r"),
+            ("freq", ["o_custkey"], 4, "f"),
+            ("m_kilo", ["mon_c", "o_custkey"], 4, "m"),
+        ],
     )
-    tr, tf, tm = tabs["r"], tabs["f"], tabs["m"]
-    base = (
-        rfm.join(F.broadcast(tr), F.col("last_order") == F.col("r_v"))
-        .join(F.broadcast(tf), F.col("freq") == F.col("f_v"))
-        .join(F.broadcast(tm), F.col("m_kilo") == F.col("m_v"))
-    )
-    crossing_any = (
-        (F.col("r_lo") != F.col("r_hi"))
-        | (F.col("f_lo") != F.col("f_hi"))
-        | (F.col("m_lo") != F.col("m_hi"))
-    )
-    main = base.filter(~crossing_any).select(
-        "monetary",
-        F.col("r_lo").alias("r"),
-        F.col("f_lo").alias("f"),
-        F.col("m_lo").alias("m"),
-    )
-    # a run that crosses in ANY measure is included WHOLE for that
-    # measure (every member shares lo != hi), so the within-partition
-    # row_number over this subset equals the within-run rank over the
-    # full data; measures whose run does not cross ignore their
-    # (partial-partition) row_number via the lo == hi branch
-    wr = Wd.partitionBy("r_v").orderBy("o_custkey")
-    wf = Wd.partitionBy("f_v").orderBy("o_custkey")
-    wm = Wd.partitionBy("m_v").orderBy("mon_c", "o_custkey")
-
-    def bucket(lo, hi, before, n, w):
-        rw = F.row_number().over(w).cast("bigint")
-        return F.when(F.col(lo) == F.col(hi), F.col(lo)).otherwise(
-            ntile_from_rank(F.col(before) + rw, n, 4)
-        )
-
-    crossing = base.filter(crossing_any).select(
-        "monetary",
-        bucket("r_lo", "r_hi", "r_before", "r_n", wr).alias("r"),
-        bucket("f_lo", "f_hi", "f_before", "f_n", wf).alias("f"),
-        bucket("m_lo", "m_hi", "m_before", "m_n", wm).alias("m"),
-    )
-    # r8: union at ROW grain, ONE census aggregate — the per-branch
-    # aggregates bought nothing (the union re-aggregated anyway) and
-    # each cost an AQE shuffle stage + job dispatch. The main branch
-    # feeds the partial agg map-side; only the tiny crossing subset
-    # rides the window shuffles first.
     return (
-        main.unionByName(crossing)
-        .groupBy("r", "f", "m")
+        scored.groupBy("r", "f", "m")
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),
             F.round(F.sum("monetary"), 2).alias("segment_value"),
@@ -4098,9 +4042,10 @@ def q158_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the monotone coarsening trick (q118): the value domain is the "
     "$1000 price grid (bounded by the PRICE RANGE, data-size-"
     "independent), rows whose grid run sits inside one decile take it "
-    "straight off the broadcast lookup table, and only the <= 9 "
-    "boundary-crossing runs get the (cents, orderkey) tie-break "
-    "window — filtered before the shuffle. Band revenue sums exact "
+    "straight off the broadcast LocalRelation lookup table (one "
+    "domain-sized collect builds it; its broadcast runs no job), and "
+    "only the <= 9 boundary-crossing runs get the (cents, orderkey) "
+    "tie-break window — filtered before the shuffle. Band revenue sums exact "
     "BIGINT cents (order-free), divided once at output. Unlike q118 "
     "(whose input is an AGGREGATE worth checkpointing), the branch "
     "re-reads here are pruned 1-2 column parquet scans — at any scale "
@@ -4120,7 +4065,7 @@ def q160_price_decile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band", F.floor(F.col("cents") / 100000).cast("bigint")
     )
     scored = bounded_domain_ntile(
-        o, "band", ["cents", "o_orderkey"], 10, "decile"
+        o, [("band", ["cents", "o_orderkey"], 10, "decile")]
     )
     return (
         scored.groupBy("decile")

@@ -218,115 +218,37 @@ def ntile_from_rank(rank_col, n_col, k: int):
     ).otherwise(r + F.floor((rn - big + q - 1) / q)).cast("int")
 
 
-def ntile_domain_table(
-    counts_input: DataFrame,
-    value_col: str,
-    k: int,
-    prefix: str,
-) -> DataFrame:
-    """Domain-sized ntile lookup table for a bounded-domain measure:
-    one row per distinct ``value_col`` with columns ``{prefix}_v``
-    (the value), ``{prefix}_c`` (its row count), ``{prefix}_before``
-    (prefix-sum of counts over smaller values), ``{prefix}_n`` (grand
-    total) and ``{prefix}_lo``/``{prefix}_hi`` — the ntile(k) bucket of
-    the tie run's FIRST and LAST global rank (:func:`ntile_from_rank`
-    sizing). ``lo == hi`` means the whole run lands in one bucket.
-
-    Plan shape: one map-side-combinable count agg, then ONE
-    domain x domain broadcast nested-loop pass computing the prefix
-    sum AND the grand total as conditional sums (|domain|^2
-    intermediate rows, data-size-independent) — never an ordered
-    window, never an Exchange SinglePartition. The ``prefix`` makes
-    several measures' tables joinable onto one frame without column
-    collisions (the q118 assembly).
-    """
-    counts = counts_input.groupBy(F.col(value_col).alias(f"{prefix}_v")).agg(
-        F.count("*").cast("bigint").alias(f"{prefix}_c")
-    )
-    other = counts.select(
-        F.col(f"{prefix}_v").alias("_ndt_v2"),
-        F.col(f"{prefix}_c").alias("_ndt_c2"),
-    )
-    pre = (
-        counts.crossJoin(F.broadcast(other))
-        .groupBy(f"{prefix}_v", f"{prefix}_c")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("_ndt_v2") < F.col(f"{prefix}_v"),
-                    F.col("_ndt_c2"),
-                )
-            ).alias("_ndt_raw_before"),
-            F.sum("_ndt_c2").cast("bigint").alias(f"{prefix}_n"),
-        )
-        .select(
-            f"{prefix}_v",
-            f"{prefix}_c",
-            f"{prefix}_n",
-            F.coalesce(F.col("_ndt_raw_before"), F.lit(0)).alias(
-                f"{prefix}_before"
-            ),
-        )
-    )
-    return pre.select(
-        f"{prefix}_v",
-        f"{prefix}_c",
-        f"{prefix}_n",
-        f"{prefix}_before",
-        ntile_from_rank(
-            F.col(f"{prefix}_before") + 1, f"{prefix}_n", k
-        ).alias(f"{prefix}_lo"),
-        ntile_from_rank(
-            F.col(f"{prefix}_before") + F.col(f"{prefix}_c"),
-            f"{prefix}_n",
-            k,
-        ).alias(f"{prefix}_hi"),
-    )
-
-
-def ntile_from_rank_py(rank: int, n: int, k: int) -> int:
-    """Driver-side twin of :func:`ntile_from_rank` — identical sizing
-    (first ``n % k`` buckets hold ``ceil(n/k)`` rows). Used by
-    :func:`ntile_domain_tables_local` to stamp bucket bounds while
-    building a local-relation lookup table."""
-    q, r = n // k, n % k
-    big = r * (q + 1)
-    if rank <= big:
-        return (rank + q) // (q + 1)
-    return r + (rank - big + q - 1) // q
-
-
 def ntile_domain_tables_local(
     counts_input: DataFrame,
     specs: list[tuple[str, int, str]],
 ) -> dict[str, DataFrame]:
-    """:func:`ntile_domain_table`, materialized as driver-side LOCAL
-    RELATIONS for SEVERAL measures with ONE job: melt the measures to
-    ``(measure, value)`` long form, count distinct values map-side,
-    collect the bounded result (|domain| rows per measure — a
-    value-domain table: observation-window dates, small-int counts, a
-    fixed price grid — data-size-independent by construction, same
-    class as the registry's 1-row argmax actions), compute prefix sums
-    and ntile bounds in plain Python, and return one
-    pandas-Arrow-backed DataFrame per measure.
+    """Domain-sized ntile lookup tables for SEVERAL bounded-domain
+    measures, built with ONE job: melt the measures to ``(measure,
+    value)`` long form, count distinct values map-side, collect the
+    bounded result (|domain| rows per measure — observation-window
+    dates, small-int counts, a fixed price grid — data-size-independent
+    by construction), take the prefix sums in plain Python and return
+    one driver-local DataFrame per measure.
 
-    ``specs`` is ``[(value_col, k, prefix), ...]``; the result maps
-    each ``prefix`` to a table with the :func:`ntile_domain_table`
-    schema (``{prefix}_v/_c/_n/_before/_lo/_hi``). Point
-    ``counts_input`` at a checkpointed frame so the melt never
-    re-executes a fact-grain plan.
+    ``specs`` is ``[(value_col, k, prefix), ...]``; the result maps each
+    ``prefix`` to a table with one row per distinct value and columns
+    ``{prefix}_v`` (the value), ``{prefix}_c`` (its row count),
+    ``{prefix}_n`` (grand total), ``{prefix}_before`` (rows with a
+    smaller value) and ``{prefix}_lo``/``{prefix}_hi`` — the ntile(k)
+    bucket of the tie run's FIRST and LAST global rank, stamped by
+    :func:`ntile_from_rank`. ``lo == hi`` means the whole run lands in
+    one bucket. Point ``counts_input`` at a checkpointed frame when it
+    is an aggregate, so the melt never re-executes it.
 
-    Why local relations: the cluster-side variant pays a crossJoin
-    stage plus a broadcast-exchange JOB per table per consumer (column
-    pruning specializes each consumer's copy, so ReuseExchange cannot
-    dedup them — measured: 6 one-per-branch broadcast jobs in q118);
-    an Arrow-backed ``createDataFrame(pandas)`` plans as a true
-    ``LocalRelation``, whose broadcast build is a driver-side
-    ``executeCollect`` with NO job. Supported value types: DateType
-    and integral types (the bounded-domain cases). Determinism: counts
-    are collected unordered but keyed by DISTINCT values and sorted in
-    Python before the prefix sum — identical tables for any partition
-    layout.
+    Why local relations: an Arrow-backed ``createDataFrame(pandas)``
+    plans as a ``LocalRelation`` (the bucket projection folds into it),
+    whose broadcast build is a driver-side ``executeCollect`` with NO
+    job — where a Spark-side table pays a broadcast-exchange job per
+    table per consumer. Supported value types: DateType, TimestampType
+    and integral types (the bounded-domain cases). NULL values raise:
+    they have no rank. Determinism: counts are keyed by DISTINCT values
+    and sorted in Python before the prefix sum — identical tables for
+    any partition layout.
     """
     import datetime as _dt
 
@@ -364,10 +286,9 @@ def ntile_domain_tables_local(
                 f"for {value_col}; bounded domains are dates or integers"
             )
         melt_args.extend([F.lit(prefix), enc])
-    n_m = len(specs)
     melted = (
         counts_input.select(
-            F.stack(F.lit(n_m), *melt_args).alias("_m", "_v")
+            F.stack(F.lit(len(specs)), *melt_args).alias("_m", "_v")
         )
         .groupBy("_m", "_v")
         .agg(F.count("*").alias("_c"))
@@ -377,11 +298,9 @@ def ntile_domain_tables_local(
     col_of = {p: c for c, _, p in specs}
     for r in melted:
         if r["_v"] is None:
-            # r9 (ADVICE): fail loudly with the column name instead of
-            # the opaque None-vs-int TypeError sorted() would raise —
-            # NULL has no defined rank/bucket in either ntile builder
-            # (the cluster-side one silently drops it from every
-            # prefix-sum comparison), so refuse it explicitly.
+            # fail loudly with the column name instead of the opaque
+            # None-vs-int TypeError sorted() would raise: NULL has no
+            # defined rank, so it has no bucket
             raise ValueError(
                 "ntile_domain_tables_local: NULL in measure column "
                 f"{col_of[r['_m']]!r} — ntile domains must be NULL-free; "
@@ -389,88 +308,67 @@ def ntile_domain_tables_local(
             )
         by_prefix[r["_m"]].append((r["_v"], r["_c"]))
     out: dict[str, DataFrame] = {}
-    for value_col, k, prefix in specs:
+    for _value_col, k, prefix in specs:
         rows = sorted(by_prefix[prefix])
         n = sum(c for _, c in rows)
         vdt, dec = decoders[prefix]
         rec, before = [], 0
         for v, c in rows:
-            rec.append(
-                (
-                    dec(v),
-                    c,
-                    n,
-                    before,
-                    ntile_from_rank_py(before + 1, n, k),
-                    ntile_from_rank_py(before + c, n, k),
-                )
-            )
+            rec.append((dec(v), c, n, before))
             before += c
+        names = [f"{prefix}_{s}" for s in ("v", "c", "n", "before")]
         schema = T.StructType(
-            [
-                T.StructField(f"{prefix}_v", vdt, False),
-                T.StructField(f"{prefix}_c", T.LongType(), False),
-                T.StructField(f"{prefix}_n", T.LongType(), False),
-                T.StructField(f"{prefix}_before", T.LongType(), False),
-                T.StructField(f"{prefix}_lo", T.IntegerType(), False),
-                T.StructField(f"{prefix}_hi", T.IntegerType(), False),
-            ]
+            [T.StructField(names[0], vdt, False)]
+            + [T.StructField(s, T.LongType(), False) for s in names[1:]]
         )
-        pdf = pd.DataFrame(
-            rec,
-            columns=[
-                f"{prefix}_v",
-                f"{prefix}_c",
-                f"{prefix}_n",
-                f"{prefix}_before",
-                f"{prefix}_lo",
-                f"{prefix}_hi",
-            ],
+        counts = spark.createDataFrame(pd.DataFrame(rec, columns=names), schema)
+        # the bucket projection folds into the LocalRelation at planning
+        first = F.col(f"{prefix}_before") + 1
+        last = F.col(f"{prefix}_before") + F.col(f"{prefix}_c")
+        out[prefix] = counts.select(
+            *names,
+            ntile_from_rank(first, f"{prefix}_n", k).alias(f"{prefix}_lo"),
+            ntile_from_rank(last, f"{prefix}_n", k).alias(f"{prefix}_hi"),
         )
-        out[prefix] = spark.createDataFrame(pdf, schema)
     return out
 
 
 def bounded_domain_ntile(
     df: DataFrame,
-    value_col: str,
-    tiebreak_col: str | list[str],
-    k: int,
-    out_name: str,
-    keep_n: str | None = None,
-    counts_input: DataFrame | None = None,
+    specs: list[tuple[str, list[str], int, str]],
 ) -> DataFrame:
-    """Per-row SQL-standard ``ntile(k) OVER (ORDER BY value_col,
-    tiebreak_col)`` for a measure whose VALUE DOMAIN is bounded (dates
-    inside an observation window, small-int counts, fixed-precision
-    money) — the cheap alternative to :func:`global_rank` when the
-    domain collapses (VERDICT r6 #4: a bounded domain never needs a
-    full range-exchange sort of the fact grain).
+    """``df`` plus one column per spec: the SQL-standard ``ntile(k) OVER
+    (ORDER BY value_col, *tiebreak_cols)`` of each row, for measures
+    whose VALUE DOMAIN is bounded (dates inside an observation window,
+    small-int counts, fixed-precision money) — the cheap alternative to
+    :func:`global_rank` when the domain collapses: a bounded domain
+    never needs a full range-exchange sort of the fact grain.
 
+    ``specs`` is ``[(value_col, tiebreak_cols, k, out_name), ...]``.
     Plan shape (zero data-sized sorts, zero SinglePartition):
 
-    1. Collapse to per-distinct-value counts (map-side combinable).
-    2. Prefix sums over the value domain via the broadcast theta
-       self-join trick (``before(v) = SUM(c(v') FOR v' < v)``) —
-       BroadcastNestedLoopJoin over domain-sized tables, never an
-       ordered window, never an Exchange SinglePartition.
-    3. Each tie run covers global ranks ``(before, before+c]``; the
-       ntile bucket of its first and last rank comes from the
-       closed-form :func:`ntile_from_rank`. Runs that sit inside ONE
-       bucket (the overwhelming majority — at most k-1 runs can cross
-       a boundary) take that bucket straight off the broadcast join.
-    4. Only boundary-crossing runs need the tie-break: those rows get
-       ``row_number() OVER (PARTITION BY value ORDER BY tiebreak)`` —
-       a window over at most k-1 partitions of one tie run each,
-       filtered BEFORE the shuffle so the sorted volume is the
-       boundary runs only, never the fact grain.
+    1. Every measure's lookup table comes from ONE
+       :func:`ntile_domain_tables_local` call (one melted, domain-sized
+       collect); the tables join broadcast as LocalRelations.
+    2. Each tie run covers global ranks ``(before, before+c]``. Rows
+       whose run sits inside ONE bucket in every measure (the
+       overwhelming majority — at most k-1 runs per measure cross a
+       boundary) take their buckets straight off the tables.
+    3. Only rows whose run crosses a boundary in at least one measure
+       get the tie-break: ``row_number() OVER (PARTITION BY value ORDER
+       BY tiebreaks)`` per measure, filtered BEFORE the shuffle so the
+       sorted volume is the boundary runs only. A run that crosses in
+       a measure is in this subset WHOLE (every member shares
+       ``lo != hi``), so its within-partition row number is its rank
+       inside the run; a measure whose run does not cross keeps ``lo``.
 
-    Requires ``value_col`` non-null and ``tiebreak_col`` (one column
-    name or a list whose combination with ``value_col`` is unique —
-    e.g. ``["exact_measure", "pk"]`` when ``value_col`` is a monotone
-    COARSENING of an unbounded measure) forming a total order (the
-    standard ntile contract). Matches Spark's and DuckDB's ntile
-    sizing exactly (first n%k buckets hold one extra row).
+    Requires every ``value_col`` non-null (NULLs raise ``ValueError``)
+    and ``(value_col, *tiebreak_cols)`` a total order (the standard
+    ntile contract). Matches Spark's and DuckDB's ntile sizing exactly
+    (first n%k buckets hold one extra row). ``df`` is read twice (the
+    melt, then the join): checkpoint it first when it is an aggregate
+    (:func:`materialize_shared`) — column pruning specializes each
+    consumer's copy, so exchange reuse cannot dedup them.
 
     The coarsening trick: ``ntile(ORDER BY x, pk)`` equals
     ``ntile(ORDER BY floor(g(x)), x, pk)`` for any monotone ``g`` — so
@@ -479,61 +377,47 @@ def bounded_domain_ntile(
     keeping the exact measure in the tie-break: the domain table stays
     range-bounded and only the <= k-1 grid runs straddling a boundary
     ever get sorted.
-
-    ``keep_n``: optionally retain the total row count as a column of
-    that name on the output — it rides the broadcast table for free,
-    so callers that need ``n`` downstream (e.g. a sibling
-    :func:`ntile_from_rank` on an unbounded measure) skip a separate
-    count job over the input.
-
-    ``counts_input``: build the value-count table from this frame
-    instead of ``df``. When chaining several calls, each call's output
-    is a row-preserving permutation of the original frame, so the
-    counts are identical — pointing every call's counts at the ROOT
-    frame keeps the stage DAG wide (the count tables materialize in
-    parallel) instead of serializing each table behind the previous
-    call's union. MUST have the same row multiset on ``value_col`` as
-    ``df`` — anything else silently mis-buckets. NOTE: if the root is
-    an AGGREGATE with several consumers, checkpoint it first
-    (:func:`materialize_shared`) — column pruning specializes each
-    consumer's copy of the agg, so exchange reuse can NOT dedup them
-    (measured: 21 duplicate exchanges in q118 before its checkpoint);
-    a pruned RAW SCAN root is fine to re-read.
     """
+    from functools import reduce
+
     from pyspark.sql.window import Window
 
-    table = ntile_domain_table(
-        counts_input if counts_input is not None else df,
-        value_col,
-        k,
-        prefix="_bd",
+    prefixes = [f"_bd{i}" for i in range(len(specs))]
+    tables = ntile_domain_tables_local(
+        df, [(v, k, p) for (v, _, k, _), p in zip(specs, prefixes)]
     )
-    joined = df.join(
-        F.broadcast(table), F.col(value_col) == F.col("_bd_v")
-    )
-    inside = joined.filter(F.col("_bd_lo") == F.col("_bd_hi")).withColumn(
-        out_name, F.col("_bd_lo")
-    )
-    tiebreaks = (
-        [tiebreak_col] if isinstance(tiebreak_col, str) else list(tiebreak_col)
-    )
-    w = Window.partitionBy("_bd_v").orderBy(*tiebreaks)
-    crossing = (
-        joined.filter(F.col("_bd_lo") != F.col("_bd_hi"))
-        .withColumn("_bd_rw", F.row_number().over(w).cast("bigint"))
-        .withColumn(
-            out_name,
-            ntile_from_rank(F.col("_bd_before") + F.col("_bd_rw"), "_bd_n", k),
+    joined = df
+    for (value_col, _, _, _), p in zip(specs, prefixes):
+        joined = joined.join(
+            F.broadcast(tables[p]), F.col(value_col) == F.col(f"{p}_v")
         )
-        .drop("_bd_rw")
+    crossing_any = reduce(
+        lambda a, b: a | b,
+        [F.col(f"{p}_lo") != F.col(f"{p}_hi") for p in prefixes],
     )
-    out = inside.unionByName(crossing)
-    if keep_n:
-        out = out.withColumnRenamed("_bd_n", keep_n)
-        return out.drop("_bd_v", "_bd_c", "_bd_before", "_bd_lo", "_bd_hi")
-    return out.drop(
-        "_bd_v", "_bd_c", "_bd_before", "_bd_n", "_bd_lo", "_bd_hi"
+    inside = joined.filter(~crossing_any).select(
+        *df.columns,
+        *[
+            F.col(f"{p}_lo").alias(out)
+            for (_, _, _, out), p in zip(specs, prefixes)
+        ],
     )
+
+    def bucket(p: str, tiebreaks: list[str], k: int):
+        w = Window.partitionBy(f"{p}_v").orderBy(*tiebreaks)
+        rank = F.col(f"{p}_before") + F.row_number().over(w)
+        return F.when(
+            F.col(f"{p}_lo") == F.col(f"{p}_hi"), F.col(f"{p}_lo")
+        ).otherwise(ntile_from_rank(rank, f"{p}_n", k))
+
+    crossing = joined.filter(crossing_any).select(
+        *df.columns,
+        *[
+            bucket(p, tiebreaks, k).alias(out)
+            for (_, tiebreaks, k, out), p in zip(specs, prefixes)
+        ],
+    )
+    return inside.unionByName(crossing)
 
 
 def salted_join(

@@ -51,6 +51,16 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
         ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
         {"BroadcastHashJoin": 3, "LocalTableScan": 3},
     ),
+    # price deciles: the $1000-grid lookup table is a LocalRelation
+    # joined broadcast; only the <=9 boundary runs reach a window
+    "q160_price_decile_bands": (
+        [
+            "BroadcastNestedLoopJoin",
+            "CartesianProduct",
+            "Exchange SinglePartition",
+        ],
+        {"LocalTableScan": 1},
+    ),
     # r10: the 8 power iterations run driver-side over the collected
     # bounded |types|^2 matrix, so the returned plan is the local
     # stationary vector renormalized against a 1-row broadcast

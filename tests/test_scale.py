@@ -313,7 +313,7 @@ def test_bounded_domain_ntile_matches_spark_ntile(spark):
     for k in (1, 3, 4, 7, 50):
         got = {
             r["id"]: r["b"]
-            for r in bounded_domain_ntile(df, "v", "id", k, "b").collect()
+            for r in bounded_domain_ntile(df, [("v", ["id"], k, "b")]).collect()
         }
         want = {
             r["id"]: r["b"]
@@ -322,6 +322,77 @@ def test_bounded_domain_ntile_matches_spark_ntile(spark):
             ).collect()
         }
         assert got == want, f"k={k}"
+
+
+def test_bounded_domain_ntile_many_measures(spark):
+    """Several specs in one call: each output column must equal its own
+    ntile(k) OVER (ORDER BY value, tiebreaks) window, including rows
+    whose tie run crosses a bucket boundary in one measure but sits
+    inside one bucket in another (those rows take the tie-break path
+    for the crossing measure only)."""
+    import datetime
+
+    from pyspark.sql import Window as W
+
+    from amadou_spark.scale import bounded_domain_ntile
+
+    rows = [
+        (
+            i,
+            i % 4,
+            (i * 7) % 11,
+            (i * 13) % 17,
+            datetime.date(2020, 1, 1) + datetime.timedelta(days=i // 7),
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "id int, a long, b int, x int, d date")
+    specs = [
+        ("a", ["id"], 3, "ra"),
+        ("b", ["x", "id"], 4, "rb"),
+        ("d", ["id"], 7, "rd"),
+    ]
+    got = {
+        r["id"]: r for r in bounded_domain_ntile(df, specs).collect()
+    }
+    assert len(got) == len(rows)
+    crossing = {}
+    for value_col, tiebreaks, k, out in specs:
+        want = {
+            r["id"]: (r[value_col], r["w"])
+            for r in df.withColumn(
+                "w", F.ntile(k).over(W.orderBy(value_col, *tiebreaks))
+            ).collect()
+        }
+        assert {i: r[out] for i, r in got.items()} == {
+            i: w for i, (_, w) in want.items()
+        }, out
+        buckets: dict = {}
+        for v, w in want.values():
+            buckets.setdefault(v, set()).add(w)
+        crossing[out] = {
+            i for i, (v, _) in want.items() if len(buckets[v]) > 1
+        }
+    # the data exercises mixed rows: a crossing run in one measure,
+    # an inside run in another
+    assert crossing["ra"] - crossing["rb"]
+    assert crossing["rb"] - crossing["ra"]
+    assert crossing["rd"] - crossing["ra"]
+
+
+def test_bounded_domain_ntile_rejects_null_measure(spark):
+    """A NULL in a measure has no rank: the call must raise a
+    ValueError naming the column, not drop the row from the output
+    and shift every other row's bucket."""
+    import pytest
+
+    from amadou_spark.scale import bounded_domain_ntile
+
+    df = spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30), (4, 40)], "id int, a long"
+    )
+    with pytest.raises(ValueError, match="'a'"):
+        bounded_domain_ntile(df, [("a", ["id"], 3, "b")]).collect()
 
 
 def test_bounded_domain_ntile_plan_has_no_single_partition_sort(spark):
@@ -334,7 +405,7 @@ def test_bounded_domain_ntile_plan_has_no_single_partition_sort(spark):
     df = spark.range(500).select(
         F.col("id"), (F.col("id") % 13).alias("v")
     )
-    out = bounded_domain_ntile(df, "v", "id", 4, "b")
+    out = bounded_domain_ntile(df, [("v", ["id"], 4, "b")])
     out.count()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert single_partition_sort_exchanges(plan) == []
@@ -358,7 +429,7 @@ def test_bounded_domain_ntile_monotone_coarsening(spark):
         got = {
             r["id"]: r["b"]
             for r in bounded_domain_ntile(
-                df, "g", ["x", "id"], k, "b"
+                df, [("g", ["x", "id"], k, "b")]
             ).collect()
         }
         want = {
@@ -371,17 +442,17 @@ def test_bounded_domain_ntile_monotone_coarsening(spark):
 
 
 def test_ntile_domain_tables_local_matches_cluster_side(spark):
-    """The r8 local-relation lookup tables must be VALUE-identical to
-    the broadcast-nested-loop ntile_domain_table they replaced (q118
-    rides them interchangeably), across integer and date domains and
-    bucket counts, and must plan as a LocalTableScan (the whole point:
+    """The local-relation lookup tables must match Spark's own ntile()
+    window: per value, ``c`` is its row count, ``before`` the rows with
+    a smaller value, ``lo``/``hi`` the smallest and largest bucket its
+    rows get — across integer and date domains and bucket counts. The
+    table must plan as a LocalTableScan (the whole point: the
     broadcast builds with no job)."""
     import datetime
 
-    from amadou_spark.scale import (
-        ntile_domain_table,
-        ntile_domain_tables_local,
-    )
+    from pyspark.sql import Window as W
+
+    from amadou_spark.scale import ntile_domain_tables_local
 
     vals = [7, 1, 7, 3, 9, 1, 1, 12, 3, 7, 7, 2] * 5
     rows = [
@@ -390,10 +461,25 @@ def test_ntile_domain_tables_local_matches_cluster_side(spark):
     ]
     df = spark.createDataFrame(rows, "id int, v long, d date")
     for col, k in (("v", 4), ("v", 3), ("d", 4)):
-        want = sorted(
-            map(tuple, ntile_domain_table(df, col, k, "p").collect())
+        per_value = (
+            df.withColumn("b", F.ntile(k).over(W.orderBy(col, "id")))
+            .groupBy(col)
+            .agg(
+                F.count("*").alias("c"),
+                F.min("b").alias("lo"),
+                F.max("b").alias("hi"),
+            )
+            .orderBy(col)
+            .collect()
         )
+        want, before = [], 0
+        for r in per_value:
+            want.append((r[col], r["c"], len(rows), before, r["lo"], r["hi"]))
+            before += r["c"]
         local = ntile_domain_tables_local(df, [(col, k, "p")])["p"]
+        assert local.columns == [
+            "p_v", "p_c", "p_n", "p_before", "p_lo", "p_hi"
+        ]
         got = sorted(map(tuple, local.collect()))
         assert got == want, (col, k)
         assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
@@ -418,7 +504,7 @@ def test_ntile_domain_tables_local_one_melt_many_measures(spark):
 
 
 def test_ntile_domain_tables_local_rejects_nulls_by_name(spark):
-    """r9 (ADVICE): a NULL in the measure column must raise a
+    """A NULL in the measure column must raise a
     ValueError NAMING the column, not the opaque None-vs-int
     TypeError sorted() used to throw."""
     import pytest

@@ -96,7 +96,7 @@ REVIEW = {
     "q115_heavy_hitters": "MG summaries inside MapInPandas emit <=k rows/partition; recount behind a broadcast semi-join — only candidate rows ever shuffle. r10 (VERDICT r9 'what's wrong' #1): the r9 bench row's 0.79->1.25 s move was audited — no code change to operators/sketch.py, and a clean-session min-of-4 at sf0.1 under r10 code lands at 0.92 s with the same plan. The plan is now PINNED (tests/test_plan_pins.py: broadcast semi-join required, sort-merge/cartesian forbidden, >=2 HashAggregates), so any future drift on this row with a green pin is host noise by construction. Root cause of the r9 reading: in-bench late-sweep noise (mapInPandas pays Python-worker-pool churn mid-sweep after heavy graph ops — the known 3-4x in-bench-vs-clean-session band). Case closed",
     "q116_bitmap_intersection": "bitmap (type,bucket)->word table materialized once; pair overlap = bucket equi-join + bit_count sum, 64x smaller than distinct pairs",
     "q117_seasonal_index": "daily rollup is the only pass over raw events; per-type base joins back as a broadcast",
-    "q118_rfm_segments": "orders collapse to the customer grain ONCE (checkpointed — column pruning specializes each consumer's copy of the agg, so exchange reuse can't dedup it: 21 duplicate exchanges measured without the materialize); ALL THREE quartile measures then ride value-domain ntile LOCAL-RELATION lookup tables (r8 per VERDICT r7: one melted domain-sized collect off the checkpoint, prefix sums in Python, LocalTableScan broadcasts build job-free; recency/frequency naturally bounded, monetary via exact-cents + monotone $1000 coarsening), boundary-run tie-breaks filtered before their windows, union at ROW grain into ONE census aggregate (r8: the per-branch aggregates each cost an AQE stage for nothing) — zero fact-grain sorts, zero Exchange SinglePartition (2.72s -> ~1.5-1.7s at sf0.1)",
+    "q118_rfm_segments": "orders collapse to the customer grain ONCE (checkpointed — column pruning specializes each consumer's copy of the agg, so exchange reuse can't dedup it: 21 duplicate exchanges measured without the materialize); ONE bounded_domain_ntile call then scores all three quartile measures off value-domain ntile LOCAL-RELATION lookup tables (one melted domain-sized collect off the checkpoint, prefix sums in Python, LocalTableScan broadcasts build job-free; recency/frequency naturally bounded, monetary via exact-cents + monotone $1000 coarsening), boundary-run tie-breaks filtered before their windows, both branches unioned at ROW grain into ONE census aggregate — zero fact-grain sorts, zero Exchange SinglePartition",
     "q119_rolling_distinct": "rolling 7d COUNT DISTINCT without a range join: (user,day) grain materialized once, bounded 7x sequence() fan-out, day list broadcast semi-join, one distinct agg",
     "q120_association_rules": "basket table materialized once feeds pair/item/total; a-priori ITEM prune semi-joins sub-threshold items out BEFORE the pair self-join (r6), min-support HAVING prunes again at the pair agg; supports broadcast back; top-25 by lift",
     "q121_snaive_backtest": "forecast = lag(7) so backtest is daily rollup + ONE window + one agg — zero joins",
@@ -148,7 +148,7 @@ REVIEW = {
     "q157_levene_test": "q148 shape on |x - group median|: exact 5-row median table broadcast back, ONE map-side-combined moment agg over the deviations",
     "q158_psi_drift": "bounds = 1-row broadcast; everything collapses to the <=2x10x|types| cell grid in ONE map-side-combined agg; PSI closed-form on the grid",
     "q159_hits": "q70 shape: per round exactly two equi-joins vs node-score tables + two map-side sums; L1 normalize ONCE at the end (scalars cancel through linear updates); lineage cut per round",
-    "q160_price_decile_bands": "deciles off a broadcast $1000-grid lookup table (bounded by the price range); only the <=9 boundary-crossing grid runs reach the tie-break window, filtered before the shuffle; band revenue = exact BIGINT cents sums",
+    "q160_price_decile_bands": "deciles off the $1000-grid lookup table (bounded by the price range), a LocalRelation built from one domain-sized collect and broadcast with no job (the one-measure case of q118's bounded_domain_ntile); only the <=9 boundary-crossing grid runs reach the tie-break window, filtered before the shuffle; band revenue = exact BIGINT cents sums",
     "llm_corpus_length_gini": "q105 shape: docs collapse to per-(lang, distinct token count) cells; tie-run rank sums in closed form off a per-lang prefix sum — no doc-grain rank window",
     "q161_mutual_information": "ONE map-side-combined contingency agg checkpointed at the |nations|x|segments| grain; marginals/total are exact regroups of the checkpoint (zero fact scans in the final plan); MI terms are e12 fixed-point BIGINTs",
     "q162_logrank_test": "q131 shape: per-user agg then the (arm x duration) grid checkpointed; prefix-sum windows PARTITIONED BY ARM on the bounded grid; hypergeometric terms e12 fixed-point",
@@ -276,7 +276,7 @@ def main() -> None:
         "fact-grain AGGREGATE or JOIN re-executed (q118, q153, q154, q57,",
         "q63, q112, llm_text_bm25 — checkpointed); the flags that remain",
         "are audited shapes where re-reading beats materializing — pruned",
-        "1-2 column raw-scan re-reads (q160, llm_dedup_cross_source),",
+        "1-2 column raw-scan re-reads (llm_dedup_cross_source),",
         "exact-bounds/percentile two-pass plans (q158, q64, llm_quality_mad)",
         "and token-grain explode reuse where checkpointing the token grain",
         "would dwarf the re-scan (llm_token_pmi, llm_quality_bigram_logprob,",
