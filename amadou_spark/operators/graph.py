@@ -410,7 +410,7 @@ def pagerank(
     # stage materialization and a batch-sized shuffle width cost more
     # than the rounds themselves. Codegen-off is gated on graph size —
     # interpreting millions of edge rows per round costs more than the
-    # per-round janino compilation it saves.
+    # per-round code generation it saves (LOOP_CODEGEN_OFF_MAX_ROWS).
     with conf_scope(spark, loop_confs(spark, n_edges)):
         if small_v:
             # Broadcast loop: the (rank, outdeg) vector — |V| rows — is

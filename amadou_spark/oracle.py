@@ -123,6 +123,7 @@ def run_query(spark: SparkSession, name: str, sf_dir: str) -> QueryRun:
     every later query runs under the leaked setting (its before-snapshot
     already includes the leak, so it passes while silently measuring a
     different plan)."""
+    _load()
     before = conf_snapshot(spark)
     columns, rows, types, plan, error = (), (), {}, "", None
     try:

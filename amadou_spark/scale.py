@@ -17,9 +17,13 @@ from pyspark.sql import functions as F
 from amadou_spark.session import conf_scope
 
 # Below this many rows per round, a pinned fixpoint loop runs with
-# whole-stage codegen off: every round is a NEW plan, so codegen would
-# recompile each stage each round (~100 ms of janino apiece); above it
-# the interpreted-evaluation penalty dominates.
+# whole-stage codegen off. The session's codegen cache already spares
+# each round's new plan a Janino compile, yet the pin still pays: without
+# it (bench.py, min of 3, 8 alternating pairs at sf0.01 and sf0.1) the BPE
+# merge loop was slower in 6 pairs and the sum of the four registry users
+# in 5, plausibly because whole-stage codegen still generates each
+# stage's source every round to look it up. Above this size the
+# interpreted-evaluation penalty dominates.
 LOOP_CODEGEN_OFF_MAX_ROWS = 200_000
 
 # Rows per shuffle partition in a pinned fixpoint loop. Do not widen

@@ -79,6 +79,24 @@ def test_metrics_snapshot_shape(spark):
     assert snap["default_parallelism"] > 0
 
 
+def test_metrics_snapshot_counts_codegen_compiles(spark):
+    """Every snapshot carries ``codegen_compiles``, the JVM-wide count of
+    Janino compilations: a counter, so it never decreases, and a query
+    whose generated code no earlier query produced raises it."""
+    import uuid
+
+    from amadou_spark.metrics import MetricsCollector
+
+    collector = MetricsCollector(spark)
+    before = collector.snapshot()["codegen_compiles"]
+    # a literal no other query uses makes generated source no cache holds
+    novel = uuid.uuid4().int % 1_000_000_007
+    spark.range(10).selectExpr(f"id * {novel} AS x").filter("x >= 0").count()
+    after = collector.snapshot()["codegen_compiles"]
+    assert after > before >= 0
+    assert collector.snapshot()["codegen_compiles"] >= after
+
+
 def test_metrics_per_task_io_counters(spark, sf_dir):
     """SparkRunner.scala:202-216 parity: after a real parquet scan the
     per-task input byte/record totals accumulated by the JVM listener

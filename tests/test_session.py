@@ -1,5 +1,6 @@
 """Session factory: SPARK_GRAFT_CPUS is validated where the session is
-built, naming the variable, instead of failing deep inside Spark."""
+built, naming the variable, instead of failing deep inside Spark; the
+codegen cache holds a repeated query's compiled classes."""
 
 from __future__ import annotations
 
@@ -20,3 +21,35 @@ def test_cpus_env_sets_the_local_master(monkeypatch):
     assert default_master() == "local[3]"
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert default_master() == "local[*]"
+
+
+def test_repeated_queries_compile_no_new_classes(spark, sf_dir):
+    """The iterative benchmark's four queries, run again in the same
+    session, find their generated classes in Spark's codegen cache:
+    Janino runs 0 times. With Spark's default cache of 100 classes every
+    repeat recompiled 104-105 of the 134 at sf0.001."""
+    from amadou_spark.metrics import MetricsCollector
+    from amadou_spark.oracle import run_query
+
+    names = [
+        "q150_label_propagation",
+        "llm_dedup_minhash",
+        "b06_tumbling_stream",
+        "llm_similarity_topk",
+    ]
+    collector = MetricsCollector(spark)
+
+    def compiles_in_one_round() -> float:
+        before = collector.codegen_compiles()["codegen_compiles"]
+        for name in names:
+            assert run_query(spark, name, sf_dir).error is None, name
+        return collector.codegen_compiles()["codegen_compiles"] - before
+
+    compiles_in_one_round()
+    # A repeat may still meet a plan no earlier round produced: AQE takes
+    # a broadcast join's build side from whichever shuffle stage finishes
+    # first, so q150's label join has two shapes, each compiled once.
+    repeats = []
+    while len(repeats) < 3 and 0 not in repeats:
+        repeats.append(compiles_in_one_round())
+    assert 0 in repeats, f"compiles per repeated round: {repeats}"

@@ -7,7 +7,8 @@ and every per-query gate of ``amadou_spark.oracle.check_all`` reads
 that run: DuckDB oracle compare, Spark/DuckDB output-type parity,
 session-conf leak, SinglePartition sorts outside ``SP_ALLOWLIST`` (and
 allowlist entries that no longer flag), and CartesianProduct. The last
-lines count the failures per gate.
+lines count the failures per gate, then the Janino compilations the
+sweep ran (the registry's codegen working set when the cache holds it).
 
 ``--vanilla`` reproduces the DRIVER's conditions exactly: a plain
 ``SparkSession.builder.master('local[8]')`` session with NONE of the
@@ -25,6 +26,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from amadou_spark.metrics import MetricsCollector
 from amadou_spark.oracle import GATES, check_all
 
 
@@ -47,7 +49,10 @@ def main() -> int:
         from amadou_spark.session import get_spark
 
         spark = get_spark("oracle-check")
+    collector = MetricsCollector(spark)
+    compiles_before = collector.codegen_compiles()
     results = check_all(spark, sf_dir, names)
+    compiles_after = collector.codegen_compiles()
     n_ok = sum(r.ok for r in results)
     for r in results:
         mark = "PASS" if r.ok else "FAIL"
@@ -58,6 +63,9 @@ def main() -> int:
     print(f"\n{n_ok}/{len(results)} green{mode}")
     for gate in GATES:
         print(f"  {gate}: {sum(gate in r.failed for r in results)} failed")
+    if compiles_before and compiles_after:
+        n = compiles_after["codegen_compiles"] - compiles_before["codegen_compiles"]
+        print(f"codegen: {n:.0f} Janino compilations in the sweep")
     return 0 if n_ok == len(results) else 1
 
 
