@@ -1044,8 +1044,8 @@ def adamic_adar(edges: DataFrame, chunk: int = 32) -> DataFrame:
     # Left unhinted, AQE flips them between broadcast (fast) and
     # sort-merge near the 10 MB stats boundary, and the sort-merge mode
     # SORTS the fanned-out adjacency and the full wedge stream — the
-    # measured 13s-vs-135s bimodality at the sf1 slice (BENCH_SCALE's
-    # min-of-N had been masking the slow mode). Decision is SIZE-GATED
+    # measured 13s-vs-135s bimodality at the sf1 slice (a min-of-N
+    # timing such as BENCH_SF1's masks the slow mode). Decision is SIZE-GATED
     # on the already-materialized build side (one cheap count over
     # checkpoint blocks): clearly under the broadcast threshold → leave
     # unhinted so AQE broadcasts (a blanket shuffle_hash hint measured

@@ -188,12 +188,15 @@ def q41_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q42_tpch_q9",
     oracle="""
-        SELECT nation, o_year, ROUND(SUM(amount), 2) AS sum_profit
+        SELECT nation, o_year,
+               CAST(ROUND(SUM(amount), 2) AS DOUBLE) AS sum_profit
         FROM (
             SELECT n_name AS nation,
                    CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
-                   l_extendedprice * (1 - l_discount)
-                     - p_retailprice * l_quantity AS amount
+                   CAST(l_extendedprice AS DECIMAL(15, 2))
+                     * (1 - CAST(l_discount AS DECIMAL(15, 2)))
+                     - CAST(p_retailprice AS DECIMAL(15, 2))
+                     * CAST(l_quantity AS DECIMAL(15, 2)) AS amount
             FROM lineitem
             JOIN part     ON p_partkey = l_partkey
             JOIN supplier ON s_suppkey = l_suppkey
@@ -207,7 +210,9 @@ def q41_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="TPC-H Q9 shape (product-type profit; p_retailprice stands in "
     "for ps_supplycost — no partsupp table): LIKE-filtered part dim broadcast "
     "into the fact, profit = revenue minus cost, grouped by supplier nation "
-    "and order year",
+    "and order year. The profit is summed as an exact DECIMAL: each amount "
+    "has 4 decimals, so about 1 group in 100 sums to an exact half cent, "
+    "and a DOUBLE sum lands on either side of it by summation order",
 )
 def q42_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = register_tables(spark, sf_dir)
@@ -217,9 +222,13 @@ def q42_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = t["supplier"].join(
         F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", F.col("n_name").alias("nation"))
-    amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
+
+    def dec(c: str):
+        return F.col(c).cast("decimal(15,2)")
+
+    amount = dec("l_extendedprice") * (1 - dec("l_discount")) - dec(
         "p_retailprice"
-    ) * F.col("l_quantity")
+    ) * dec("l_quantity")
     return (
         t["lineitem"]
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
@@ -227,7 +236,7 @@ def q42_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
         .select("nation", F.year("o_orderdate").alias("o_year"), amount.alias("amount"))
         .groupBy("nation", "o_year")
-        .agg(F.round(F.sum("amount"), 2).alias("sum_profit"))
+        .agg(F.round(F.sum("amount"), 2).cast("double").alias("sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 

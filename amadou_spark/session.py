@@ -24,6 +24,7 @@ Spark's 100.
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 from typing import Mapping
 
@@ -47,9 +48,6 @@ _DEFAULTS = {
     # checkpoint-filesystem usage (we also delete eagerly in
     # operators/graph.py _release — this is the GC-path backstop).
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
-    # local mode = driver-only: this is the whole memory budget. Sized
-    # for the 128 GiB container; override with SPARK_GRAFT_DRIVER_MEM.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
     # No state-store provider is set: stateful operators run on Spark's
     # default in-heap HDFSBackedStateStoreProvider. A RocksDB store pays a
     # native RocksDB.open of 110-165 ms for each state partition a query
@@ -97,6 +95,21 @@ def default_master() -> str:
             f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}"
         )
     return f"local[{int(cpus)}]"
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, or 32g when it is not set. In local
+    mode the driver is the whole memory budget; 32g is sized for a
+    128 GiB host. A value outside Spark's size syntax (digits, then an
+    optional b/k/kb/m/mb/g/gb/t/tb/p/pb suffix in any case) fails here,
+    naming the variable, instead of as a JVM that exits before the
+    Java gateway starts."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    if not re.fullmatch(r"[0-9]+[kmgtp]?b?", mem, re.IGNORECASE):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be a size like 2g or 512m, got {mem!r}"
+        )
+    return mem
 
 
 def restore_conf(spark: SparkSession, saved: Mapping[str, str | None]) -> None:
@@ -160,7 +173,7 @@ def get_spark(
     except Exception:
         pass
     builder = SparkSession.builder.appName(app_name).master(master or default_master())
-    merged = dict(_DEFAULTS)
+    merged = {**_DEFAULTS, "spark.driver.memory": driver_memory()}
     if conf:
         merged.update(conf)
     for key, value in merged.items():

@@ -48,6 +48,31 @@ from amadou_spark.queries import REGISTRY, _load  # noqa: E402
 from amadou_spark.session import get_spark  # noqa: E402
 
 
+def warm_up(spark, sf_dirs) -> None:
+    """Take one-time costs out of the first timed query: JVM start-up,
+    the parquet footer caches of every dir in ``sf_dirs``, and the
+    Python/Arrow worker pool, whose start would otherwise cost the first
+    pandas-UDF query about 6 s."""
+    for sf_dir in sf_dirs:
+        REGISTRY["q01_scan_projection"].fn(spark, sf_dir).count()
+
+    @pandas_udf("double")
+    def _warm(a: pd.Series) -> pd.Series:
+        return a.astype(float)
+
+    spark.range(1024).repartition(32).select(_warm(F.col("id"))).count()
+
+
+def cleanup(spark) -> None:
+    """Release leftovers so one query's debris (streaming memory-sink
+    tables, cached relations) can't degrade the next measurement."""
+    for table in spark.catalog.listTables():
+        if table.name.startswith("amadou_stream_"):
+            spark.catalog.dropTempView(table.name)
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+
 def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _load()
@@ -57,28 +82,11 @@ def main(names: list[str]) -> None:
         sys.exit(f"unknown queries: {unknown}; duplicate queries: {duplicate}")
     spark = get_spark("amadou-bench")
 
-    # warmup: JVM + parquet footer caches
-    REGISTRY["q01_scan_projection"].fn(spark, sf_dir).count()
-    # warmup: spawn the Python/Arrow worker pool before any timed query
-    @pandas_udf("double")
-    def _warm(a: pd.Series) -> pd.Series:
-        return a.astype(float)
+    warm_up(spark, [sf_dir])
 
-    spark.range(1024).repartition(32).select(_warm(F.col("id"))).count()
-
-    def cleanup() -> None:
-        """Release leftovers so one query's debris (streaming memory-sink
-        tables, cached relations) can't degrade the next measurement."""
-        for table in spark.catalog.listTables():
-            if table.name.startswith("amadou_stream_"):
-                spark.catalog.dropTempView(table.name)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-
-    # Repeated-measure (VERDICT r3 #4): the r3 driver and builder runs of
-    # IDENTICAL code disagreed by up to 4.8x per query — single-sample
-    # timing on a noisy VM can't distinguish a regression from a noisy
-    # neighbor. Run each query N times (default 3) and report the MIN
+    # Repeated measures: two runs of IDENTICAL code on a noisy VM have
+    # disagreed by up to 4.8x per query, so single-sample timing can't
+    # distinguish a regression from a noisy neighbor. Run each query N times (default 3) and report the MIN
     # (the run least polluted by interference); keep every sample in
     # BENCH_DETAIL for dispersion analysis. Full rounds of the whole
     # suite (A,B,C,A,B,C... not A,A,A,B,B,B) so a transient system-wide
@@ -94,7 +102,7 @@ def main(names: list[str]) -> None:
             fn(spark, sf_dir).count()
             elapsed = time.perf_counter() - started
             samples[name].append(round(elapsed, 3))
-            cleanup()
+            cleanup(spark)
     timings = {name: min(vals) for name, vals in samples.items()}
     if subset:
         print(json.dumps({
@@ -107,9 +115,8 @@ def main(names: list[str]) -> None:
     # headline metric = the declared benchmark set (BASELINE.md): SURVEY
     # §2.2 Tier A (Q01-Q30). Tier B / LLM / extension timings are still
     # reported per-query and summed in value_all.
-    # (full numeric prefix, not k[1:3]: the 2-char slice let q100+ leak
-    # into the Q01-Q30 headline — q100_trend_fit inflated r4's value by
-    # ~0.5 s and q101-q103 would distort it further)
+    # (full numeric prefix, not k[1:3]: a 2-char slice lets q100+ leak
+    # into the Q01-Q30 headline)
     def _tier_a_num(k: str) -> int:
         m = re.match(r"q(\d+)", k)
         return int(m.group(1)) if m else 999
@@ -131,11 +138,10 @@ def main(names: list[str]) -> None:
             "spark.driver.memory",
         )
     }
-    # Stamp the RESOLVED master (VERDICT r7 #5): the builder's local
-    # iteration runs use local[*] while the driver pins local[32] via
-    # SPARK_GRAFT_CPUS — on the same host these are the same session,
-    # and stamping the resolved thread count makes a post-HEAD restamp
-    # byte-comparable (a diff in timing values only).
+    # Stamp the RESOLVED master: local[*] and SPARK_GRAFT_CPUS=<cores>
+    # are the same session on one host, and stamping the resolved thread
+    # count keeps their details byte-comparable (a diff in timing values
+    # only).
     if conf.get("spark.master") == "local[*]":
         conf["spark.master"] = (
             f"local[{spark.sparkContext.defaultParallelism}]"
@@ -158,9 +164,9 @@ def main(names: list[str]) -> None:
 
     # The round this run belongs to: one past the newest driver-written
     # BENCH_r{N}.json. Needed BOTH for the per-round detail stamp below
-    # and to keep the drift comparison honest (VERDICT r7 #5: an
-    # earlier same-round stamp must never become the drift baseline —
-    # the field exists to name the PRIOR round being compared against).
+    # and to keep the drift comparison honest: an earlier same-round
+    # stamp must never become the drift baseline, since the field names
+    # the PRIOR round being compared against.
     rounds = [
         int(m.group(1))
         for fn in os.listdir(here)
@@ -168,8 +174,8 @@ def main(names: list[str]) -> None:
     ]
     this_round = (max(rounds) + 1) if rounds else 1
 
-    # Host-drift factor IN the artifact (VERDICT r6 #6: the r6 judge had
-    # to reverse-engineer the 1.35x VM drift from the detail files):
+    # Host-drift factor IN the artifact, so a reader need not
+    # reverse-engineer VM drift from the detail files:
     # median per-query ratio vs the newest PRIOR-round same-sf detail.
     # Median over 200+ queries isolates the uniform host factor from
     # individual regressions; consumers divide by it before comparing.

@@ -1,19 +1,40 @@
-"""Session factory: SPARK_GRAFT_CPUS is validated where the session is
-built, naming the variable, instead of failing deep inside Spark; the
-codegen cache holds a repeated query's compiled classes."""
+"""Session factory: SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM are
+validated where the session is built, naming the variable, instead of
+failing deep inside Spark; the codegen cache holds a repeated query's
+compiled classes."""
 
 from __future__ import annotations
 
 import pytest
 
-from amadou_spark.session import default_master, get_spark
+from amadou_spark.session import default_master, driver_memory, get_spark
 
 
-@pytest.mark.parametrize("value", ["", "0", "abc"])
-def test_bad_cpus_env_fails_when_the_session_is_built(monkeypatch, value):
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
-        get_spark("amadou-bad-cpus")
+@pytest.mark.parametrize(
+    ("var", "value"),
+    [
+        pytest.param("SPARK_GRAFT_CPUS", "", id=""),
+        pytest.param("SPARK_GRAFT_CPUS", "0", id="0"),
+        pytest.param("SPARK_GRAFT_CPUS", "abc", id="abc"),
+        pytest.param("SPARK_GRAFT_DRIVER_MEM", "lots", id="driver_mem-lots"),
+        pytest.param("SPARK_GRAFT_DRIVER_MEM", "", id="driver_mem-empty"),
+        pytest.param("SPARK_GRAFT_DRIVER_MEM", "2.5g", id="driver_mem-2.5g"),
+        pytest.param("SPARK_GRAFT_DRIVER_MEM", "-1g", id="driver_mem--1g"),
+        pytest.param("SPARK_GRAFT_DRIVER_MEM", "4gbb", id="driver_mem-4gbb"),
+    ],
+)
+def test_bad_cpus_env_fails_when_the_session_is_built(monkeypatch, var, value):
+    monkeypatch.setenv(var, value)
+    with pytest.raises(ValueError, match=var):
+        get_spark("amadou-bad-env")
+
+
+@pytest.mark.parametrize("value", ["512m", "2G", "4gb", "1024", "1Tb"])
+def test_driver_mem_env_accepts_spark_sizes(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
+    assert driver_memory() == value
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert driver_memory() == "32g"
 
 
 def test_cpus_env_sets_the_local_master(monkeypatch):

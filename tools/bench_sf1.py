@@ -1,27 +1,27 @@
-"""Full-registry wall-clock at the sf1 slice (VERDICT r7 #4).
+"""Time registry queries at sf0.1 and at the 10x sf1 slice.
 
-BENCH_SCALE probes 65 ops a decade above the driver bench; this tool
-covers ALL registered queries once: each query is timed at sf0.1 AND at
-the 10x sf1 slice (``scale_probe_data/sf1`` — built by
-``tools/scale_probe.py``; lineitem/documents/events/customer/orders/
-embeddings/part are 10x key-shifted disjoint replicas, region/nation/
-supplier are the sf0.1 files)
-IN THE SAME SESSION, interleaved (A@0.1, A@1, B@0.1, B@1, ...) so the
-per-query sf1/sf0.1 ratio is host-drift-free by construction. Queries
-are forced with count() like bench.py; min-of-N per (query, sf).
+The slice is built by ``tools/sf1_slice.py`` (on first use, if it is
+missing): every table but region and nation is 10 key-shifted disjoint
+replicas of sf0.1. Each query runs at sf0.1 and at sf1 IN THE SAME
+SESSION, interleaved (A@0.1, A@1, B@0.1, B@1, ...), so the per-query
+sf1/sf0.1 ratio is free of host drift by construction. Queries are
+forced with count() after bench.py's warm-ups and cleanup; each
+(query, sf) keeps the min of :data:`RUNS` samples.
 
-Writes BENCH_SF1.json: per-query sf0.1/sf1 seconds + ratio, flagging
-any ratio above the gate (10x data + amortized fixed overhead; the
-probe suite's experience is that sf0.1 runs are overhead-dominated, so
-most ratios land FAR below 10). A flagged op means its real curve
-bends — it gets a PLANS.md note or a fix, not a shrug.
+Writes BENCH_SF1.json: per-query sf0.1/sf1 seconds and their ratio,
+flagging a ratio above :data:`GATE` (10x data plus amortized fixed
+overhead; sf0.1 runs are overhead-dominated, so most ratios land far
+below 10) or above the query's :data:`GATE_OVERRIDES` entry. A flagged
+query's real curve bends: it gets a PLANS.md note or a fix.
 
-Usage: python tools/bench_sf1.py [--runs N] [--gate R] [query ...]
+With query names the run refreshes those queries' rows inside the
+existing BENCH_SF1.json (:func:`merge_subset`).
+
+Usage: python tools/bench_sf1.py [query ...]
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -29,79 +29,75 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.functions import pandas_udf  # noqa: E402
-
 from amadou_spark.queries import REGISTRY, _load  # noqa: E402
 from amadou_spark.session import get_spark  # noqa: E402
+from bench import cleanup, warm_up  # noqa: E402
+from tools.sf1_slice import SF01, SF1_DIR, ensure_sf1  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF01 = "/root/testdata/sf0.1"
-SF1 = os.path.join(REPO, "scale_probe_data", "sf1")
+PATH = os.path.join(REPO, "BENCH_SF1.json")
+RUNS = 2
+GATE = 13.0
 
-#: per-query gate overrides (r10) for ops whose WORK is documented
-#: superlinear in data size — mirrors tools/scale_probe.py's
-#: per-op exponent gates. q12: theta-join pair volume is quadratic in
-#: |part| (10x parts per brand => ~100x pairs flow through the
-#: residual + partial agg even though the output is brand-grain).
+#: Queries whose WORK is superlinear in data size by design.
 GATE_OVERRIDES = {
+    # theta-join pair volume is quadratic in parts per brand: 10x parts
+    # => ~100x pairs through the residual and partial agg, though the
+    # output is brand-grain
     "q12_theta_join": 130.0,
+    # pair volume grows with event rate squared at a fixed window:
+    # 10x denser events => ~100x pairs
+    "q168_range_join_bucketed": 130.0,
+    # many-to-many join on an 8-value key: pair volume is
+    # |customer| x |supplier| / 8, so 10x both sides => ~100x pairs
+    # before the aggregate
+    "q76_null_safe_join": 130.0,
 }
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument(
-        "--gate",
-        type=float,
-        default=13.0,
-        help="flag sf1/sf0.1 wall ratio above this (10x data + overhead)",
-    )
-    ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
+def merge_subset(
+    prior_doc: dict, rows: dict, errors: dict, names
+) -> tuple[dict, dict]:
+    """Merge a run over ``names`` into the prior BENCH_SF1 document and
+    return its ``(queries, errors)``. The queries this run touched take
+    this run's outcome: a query that errored loses its stale timing row,
+    a query that passed loses its old error. Every other query keeps
+    both its row and its error."""
+    merged_rows = {
+        n: v for n, v in prior_doc.get("queries", {}).items() if n not in names
+    }
+    merged_rows.update(rows)
+    merged_errors = {
+        n: e for n, e in prior_doc.get("errors", {}).items() if n not in names
+    }
+    merged_errors.update(errors)
+    return merged_rows, merged_errors
 
-    if not os.path.isdir(SF1):
-        raise SystemExit(
-            "sf1 slice missing - run tools/scale_probe.py first"
-        )
 
-    spark = get_spark("amadou-bench-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
+def main(names: list[str]) -> None:
     _load()
-    names = args.queries or sorted(REGISTRY)
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
+    subset = bool(names)
+    names = names or sorted(REGISTRY)
 
-    # warmups: JVM/parquet footers on both dirs + Python worker pool
-    REGISTRY["q01_scan_projection"].fn(spark, SF01).count()
-    REGISTRY["q01_scan_projection"].fn(spark, SF1).count()
-
-    @pandas_udf("double")
-    def _warm(a: pd.Series) -> pd.Series:
-        return a.astype(float)
-
-    spark.range(1024).repartition(32).select(_warm(F.col("id"))).count()
-
-    def cleanup() -> None:
-        for table in spark.catalog.listTables():
-            if table.name.startswith("amadou_stream_"):
-                spark.catalog.dropTempView(table.name)
-        spark.catalog.clearCache()
+    spark = get_spark("amadou-bench-sf1")
+    spark.sparkContext.setLogLevel("ERROR")
+    ensure_sf1(spark)
+    warm_up(spark, [SF01, SF1_DIR])
 
     t_small: dict[str, float] = {}
     t_big: dict[str, float] = {}
     errs: dict[str, str] = {}
-    for r in range(args.runs):
+    for r in range(RUNS):
         for name in names:
             if name in errs:
                 continue
             fn = REGISTRY[name].fn
             try:
-                for sf_dir, acc in ((SF01, t_small), (SF1, t_big)):
-                    cleanup()
+                for sf_dir, acc in ((SF01, t_small), (SF1_DIR, t_big)):
+                    cleanup(spark)
                     t0 = time.time()
                     fn(spark, sf_dir).count()
                     dt = time.time() - t0
@@ -124,50 +120,26 @@ def main() -> None:
             "ratio": round(t_big[n] / max(t_small[n], 1e-9), 2),
         }
         for n in t_big
-        # a query that succeeded in an early round but errored later
-        # must not carry a timing row — errors win (r10, review)
+        # a query that succeeded in an early run but errored later
+        # carries no timing row: errors win
         if n in t_small and n not in errs
     }
     # a subset run refreshes its rows INSIDE the full artifact rather
-    # than clobbering the registry-wide record (the determinism.py rule)
-    path = os.path.join(REPO, "BENCH_SF1.json")
-    if args.queries and os.path.exists(path):
-        with open(path) as fh:
-            prior_doc = json.load(fh)
-        prior = prior_doc.get("queries", {})
-        # r10 (ADVICE): a query that errored THIS run must also lose its
-        # stale prior timing row, mirroring the error-merge rule below —
-        # otherwise totals/ratio/flagged silently reflect the previous
-        # run for a now-failing query.
-        for n in errs:
-            prior.pop(n, None)
-        prior.update(queries)
-        queries = prior
-        # r9 (ADVICE): merge prior errors the same way prior rows are
-        # merged — a subset re-run must not silently drop error records
-        # from queries it didn't touch. This run's outcome wins for the
-        # queries it DID run (a now-passing query clears its old error).
-        prior_errs = prior_doc.get("errors", {})
-        for n in names:
-            prior_errs.pop(n, None)
-        prior_errs.update(errs)
-        errs = prior_errs
+    # than clobbering the registry-wide record
+    if subset and os.path.exists(PATH):
+        with open(PATH) as fh:
+            queries, errs = merge_subset(json.load(fh), queries, errs, names)
     flagged = sorted(
-        n
-        for n, v in queries.items()
-        if v["ratio"] > GATE_OVERRIDES.get(n, args.gate)
+        n for n, v in queries.items() if v["ratio"] > GATE_OVERRIDES.get(n, GATE)
     )
     out = {
         "bench": "full-registry wall clock, sf0.1 vs the 10x sf1 slice "
-        "(scale_probe_data/sf1), interleaved same-session min-of-"
-        f"{args.runs} — per-query ratios are host-drift-free by "
-        "construction",
-        "slice_note": "lineitem/documents/events/customer/orders/"
-        "embeddings/part are 10x disjoint replicas (embeddings since "
-        "layout v3/r9, part since v4/r10); region/nation/supplier are "
-        "the sf0.1 files (queries reading only those see 1x data and "
-        "ratios near 1)",
-        "gate": args.gate,
+        f"(tools/sf1_slice.py), interleaved same-session min-of-{RUNS} — "
+        "per-query ratios are host-drift-free by construction",
+        "slice_note": "lineitem/orders/customer/part/supplier/events/"
+        "documents/embeddings are 10x disjoint replicas (supplier since "
+        "layout v5); region/nation are the sf0.1 files",
+        "gate": GATE,
         "gate_overrides": GATE_OVERRIDES,
         "n_queries": len(queries),
         "n_errors": len(errs),
@@ -177,7 +149,7 @@ def main() -> None:
         "errors": errs,
         "queries": dict(sorted(queries.items())),
     }
-    with open(path, "w") as f:
+    with open(PATH, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(
         json.dumps(
@@ -197,4 +169,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -1,13 +1,14 @@
 """Rotate the sf1 ORACLE slice.
 
-BENCH_SF1 times every registered query at the 10x slice; this tool is
-the correctness half: it runs the per-query gates of
+``tools/bench_sf1.py`` times registry queries at the 10x sf1 slice;
+this tool is the correctness half: it runs the per-query gates of
 ``amadou_spark.oracle.check_all`` (DuckDB hash-compare, type parity,
-conf leak, plan hygiene) at ``scale_probe_data/sf1`` for a named
-subset and MERGES the rows into CHECK_SF1.json — cumulative coverage,
-one ``round`` vintage stamp per op, this run's outcome winning for the
-ops it touched. The slice rotates like the driver's 50-slot sweep
-until every oracle-bearing op has at least one >=sf1 proof.
+conf leak, plan hygiene) at the slice (``tools/sf1_slice.py``, built
+on first use) for a named subset and MERGES the rows into
+CHECK_SF1.json — cumulative coverage, one ``round`` vintage stamp per
+op, this run's outcome winning for the ops it touched. The slice
+rotates through the registry until every oracle-bearing op has at
+least one >=sf1 proof.
 
 Usage: python tools/check_sf1.py [--round N] query [query ...]
        python tools/check_sf1.py --list-uncovered
@@ -21,8 +22,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.sf1_slice import SF1_DIR, ensure_sf1  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF1 = os.path.join(REPO, "scale_probe_data", "sf1")
 PATH = os.path.join(REPO, "CHECK_SF1.json")
 
 
@@ -53,15 +55,14 @@ def main() -> int:
     names = args
     if not names:
         raise SystemExit("no queries given (see --list-uncovered)")
-    if not os.path.isdir(SF1):
-        raise SystemExit("sf1 slice missing - run tools/scale_probe.py first")
 
     from amadou_spark.oracle import check_all
     from amadou_spark.session import get_spark
 
     spark = get_spark("check-sf1")
     spark.sparkContext.setLogLevel("ERROR")
-    results = check_all(spark, SF1, names)
+    ensure_sf1(spark)
+    results = check_all(spark, SF1_DIR, names)
 
     doc = {"ops": {}}
     if os.path.exists(PATH):
@@ -81,16 +82,15 @@ def main() -> int:
     doc["ops"] = dict(sorted(ops.items()))
     doc["n_ops"] = len(ops)
     doc["n_green"] = sum(1 for v in ops.values() if v["ok"])
-    doc["gate"] = "DuckDB oracle hash-compare (tools/check.py) at the sf1 probe slice"
+    doc["gate"] = "DuckDB oracle hash-compare (tools/check.py) at the sf1 slice"
     doc["slice"] = (
-        "scale_probe_data/sf1 — 10x key-shifted disjoint replicas of "
-        "sf0.1 (see tools/scale_probe.py)"
+        "10x key-shifted disjoint replicas of sf0.1 (see tools/sf1_slice.py)"
     )
     doc["why"] = (
-        "correctness evidence one decade above the driver gate, "
-        "CUMULATIVE across rounds (rows carry a 'round' vintage stamp "
-        "from r9 on): the engine-stability armor and the scale rewrites "
-        "hold on 10x data and different value grids, not just at sf0.01"
+        "correctness evidence one decade above sf0.01, CUMULATIVE across "
+        "runs (rows carry a 'round' vintage stamp): the engine-stability "
+        "armor and the scale rewrites hold on 10x data and different "
+        "value grids, not just at sf0.01"
     )
     with open(PATH, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
