@@ -34,11 +34,29 @@ except ImportError:
     _HAVE_PROM = False
 
 
+#: io_totals key -> the AppStatusStore StageData getter it sums
+_IO_FIELDS = {
+    "bytes_read": "inputBytes",
+    "records_read": "inputRecords",
+    "bytes_written": "outputBytes",
+    "records_written": "outputRecords",
+    "shuffle_bytes_read": "shuffleReadBytes",
+    "shuffle_bytes_written": "shuffleWriteBytes",
+}
+
+#: stage attempts whose metrics can no longer change
+_FINAL_STAGE_STATUSES = {"COMPLETE", "FAILED", "SKIPPED"}
+
+
 class MetricsCollector:
     def __init__(self, spark: Any):
         self.spark = spark
         self._gauges: dict[str, Any] = {}
         self._compile_histogram: Any = None
+        # (stageId, attemptId) -> that attempt's _IO_FIELDS values, as
+        # last read; see io_totals
+        self._stage_io: dict[tuple[int, int], tuple[float, ...]] = {}
+        self._final_stages: set[tuple[int, int]] = set()
 
     def snapshot(self) -> dict[str, float]:
         sc = self.spark.sparkContext
@@ -79,32 +97,39 @@ class MetricsCollector:
         AppStatusListener (onTaskEnd → taskMetrics) and summed across
         all stages of this application — parity with the reference's
         spark_bytes_read / spark_records_read / spark_records_written
-        counters (SparkRunner.scala:202-216)."""
+        counters (SparkRunner.scala:202-216).
+
+        The totals never fall. The listener bus is drained first, so the
+        store has seen every task of an action that has returned. The
+        store keeps only ``spark.ui.retainedStages`` stages, so each
+        collector keeps a ledger of every stage attempt it has read: an
+        evicted stage still counts, and a finished one is not re-read."""
         sc = self.spark.sparkContext
         try:
             jvm, gw = sc._jvm, sc._gateway
-            store = sc._jsc.sc().statusStore()
-            stages = store.stageList(
+            jsc = sc._jsc.sc()
+            jsc.listenerBus().waitUntilEmpty()
+            stages = jsc.statusStore().stageList(
                 jvm.java.util.ArrayList(),  # all statuses
                 False,  # details
                 False,  # withSummaries
                 gw.new_array(jvm.double, 0),  # unsortedQuantiles
                 jvm.java.util.ArrayList(),  # all task statuses
             )
-            fields = {
-                "bytes_read": "inputBytes",
-                "records_read": "inputRecords",
-                "bytes_written": "outputBytes",
-                "records_written": "outputRecords",
-                "shuffle_bytes_read": "shuffleReadBytes",
-                "shuffle_bytes_written": "shuffleWriteBytes",
-            }
-            totals = dict.fromkeys(fields, 0.0)
             for i in range(stages.size()):
                 stage = stages.apply(i)
-                for out_key, getter in fields.items():
-                    totals[out_key] += float(getattr(stage, getter)())
-            return totals
+                key = (stage.stageId(), stage.attemptId())
+                if key in self._final_stages:
+                    continue
+                self._stage_io[key] = tuple(
+                    float(getattr(stage, getter)()) for getter in _IO_FIELDS.values()
+                )
+                if str(stage.status()) in _FINAL_STAGE_STATUSES:
+                    self._final_stages.add(key)
+            return {
+                name: sum(io[i] for io in self._stage_io.values())
+                for i, name in enumerate(_IO_FIELDS)
+            }
         except Exception:  # internal JVM surface — degrade, don't fail jobs
             logger.warning("AppStatusStore metrics unavailable", exc_info=True)
             return {}

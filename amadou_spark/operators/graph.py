@@ -1,19 +1,34 @@
 """Graph operators over Spark edge lists.
 
+Every operator has two physical strategies behind one contract, chosen
+by the real edge count — the same runtime size decision AQE makes for a
+broadcast join:
+
+- At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges, :func:`_local_graph`
+  collects the operator's canonical edge frame through Arrow (one
+  bounded collect), a numpy kernel runs every round on the driver, and
+  :func:`_local_frame` hands the result back as a one-partition
+  ``LocalRelation``. No per-edge Python loop runs; a fixpoint that fits
+  in driver memory pays one collect instead of one or more Spark jobs
+  per round.
+- Above the gate the distributed loops run: each round is a shuffle
+  join plus a map-side-combined aggregate, materialized per round and
+  released after (lineage would otherwise grow every round and re-run
+  every prior round per action).
+
+Both strategies return the same rows (the float scores of :func:`hits`
+and :func:`pagerank` up to summation order); the tests run each
+operator both ways.
+
 Connected components turn near-duplicate PAIRS into duplicate CLUSTERS
-(one canonical keep-id per group), completing the dedup story: shingle
-→ candidate pair → verify → cluster → keep one. The algorithm is
-iterative min-label propagation to a fixpoint: each round every node
-adopts the minimum label among itself and its neighbours, so
-convergence takes O(component diameter) rounds. Near-dup graphs have
-tiny diameters (dup clusters are cliques or near-cliques), so this
-terminates in 2-4 rounds in practice. Each round is ONE shuffle join on
-the edge key plus a groupBy min — no driver-side graph materialization,
-so it scales to edge lists that don't fit on any single node. When
-propagation hits its round cap unconverged (adversarially long paths),
-:func:`connected_components` falls back to the diameter-independent
-large-star/small-star contraction (Kiveris et al., "Connected
-Components in MapReduce and Beyond"), :func:`_star_fixpoint`.
+(one canonical keep-id per group): shingle → candidate pair → verify →
+cluster → keep one. Distributed, it is iterative min-label propagation
+to a fixpoint, O(component diameter) rounds; near-dup graphs are
+near-cliques, so 2-4 rounds. When propagation hits its round cap
+unconverged, :func:`connected_components` falls back to the
+diameter-independent large-star/small-star contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond"),
+:func:`_star_fixpoint`.
 
 The undirected operators (:func:`triangle_stats`,
 :func:`local_clustering`, :func:`bfs_levels`, :func:`kcore`,
@@ -22,54 +37,80 @@ columns (u, v) of integral node ids. Each reads it through
 :func:`_undirected`, so reversed duplicates, repeated edges and
 self-loops never change a result, and node ids come out as BIGINT.
 
-Iterative loops materialize each round and release the previous one
-(lineage would otherwise grow every round and re-run every prior round
-per action).
+One rule for bad input, on both strategies: an edge with a NULL
+endpoint is ignored, as is an :func:`sssp` edge with a NULL weight.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amadou_spark.scale import loop_confs, loop_width, materialize_shared
 from amadou_spark.session import conf_scope
 
-# Below this many (directed) edges the component structure is solved
-# driver-side with a union-find over the collected edge list — the exact
-# analogue of a broadcast join's size gate: when one side of the problem
-# fits comfortably in driver memory (2M edges × two 8-64 byte ids ≈ tens
-# of MB), centralizing beats paying multi-round shuffle scheduling. Near-
-# dup edge sets are tiny relative to their corpora (edges exist only
-# where documents overlap), so at 100 TB this path still fires for most
-# real dedup runs; anything larger takes the distributed fixpoint below.
-LOCAL_CC_MAX_EDGES = 2_000_000
+# At or below this many edges a graph operator runs its rounds on the
+# driver — the analogue of a broadcast join's size gate: when the whole
+# problem fits comfortably in driver memory (2M edges × two 8-64 byte
+# ids ≈ tens of MB), one collect beats paying distributed scheduling per
+# round. Near-dup edge sets are tiny relative to their corpora (edges
+# exist only where documents overlap), so at 100 TB this path still
+# fires for most real dedup runs; anything larger takes the distributed
+# loops. Read at call time, so a test can patch it to 0 to force them.
+LOCAL_GRAPH_MAX_EDGES = 2_000_000
 
 
-def _local_components(edges_rows) -> list:
-    """Driver-side union-find over a bounded edge list; returns
-    [(node, cluster_id=min id in component), ...]."""
-    parent: dict = {}
+def _local_graph(edges: DataFrame, a: str, b: str, *extra: str):
+    """Collect the canonical edge frame ``edges`` to the driver, bounded
+    by :data:`LOCAL_GRAPH_MAX_EDGES`; returns ``(edges, arrays)``.
 
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
+    One Arrow collect of at most ``LOCAL_GRAPH_MAX_EDGES + 1`` rows (the
+    ``toLocalIterator`` path would run one job per partition) from a
+    lazy local checkpoint of ``edges``, so the collect also computes and
+    keeps every partition. At or below the gate, the kept blocks are
+    released and ``arrays`` is ``(nodes, ia, ib, *cols)``: the sorted
+    distinct endpoint ids, each edge's endpoints as int64 indexes into
+    ``nodes``, and the ``extra`` columns. Indexes preserve id order, so
+    a min over indexes is a min over ids. Above the gate, ``arrays`` is
+    None and the returned ``edges`` is the checkpoint: the distributed
+    loop reads its blocks instead of re-running the edge builder, and
+    releases them with :func:`_release`. The lazy checkpoint adds no
+    job; ``persist()`` would add AQE's cache stage, and counting before
+    collecting would add one more. ``edges`` must already be free of
+    NULL endpoints (each operator's canonical frame drops them).
+    """
+    gate = LOCAL_GRAPH_MAX_EDGES
+    kept = edges.localCheckpoint(eager=False)
+    pdf = kept.limit(gate + 1).toPandas()
+    if len(pdf) > gate:
+        return kept, None
+    _release(kept)
+    m = len(pdf)
+    nodes, idx = np.unique(
+        np.concatenate([pdf[a].to_numpy(), pdf[b].to_numpy()]),
+        return_inverse=True,
+    )
+    idx = idx.astype(np.int64)
+    return edges, (nodes, idx[:m], idx[m:], *(pdf[c].to_numpy() for c in extra))
 
-    for a, b in edges_rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by min so the root IS the min id of the component
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return [(n, find(n)) for n in parent]
+
+def _local_frame(spark, schema: str, **cols) -> DataFrame:
+    """A kernel's result columns as a DataFrame with DDL ``schema`` (the
+    distributed path's output types).
+
+    pandas input goes through Arrow and plans as a ``LocalRelation``,
+    whose statistics are exact, so a later join sees the real size. One
+    partition: a caller's final ``orderBy`` then sorts in place (one
+    job) instead of range-partitioning a few thousand rows (three)."""
+    return spark.createDataFrame(pd.DataFrame(cols), schema).coalesce(1)
+
+
+def _index_of(nodes: np.ndarray, x) -> int | None:
+    """Position of id ``x`` in the sorted ``nodes``, or None."""
+    i = int(np.searchsorted(nodes, x))
+    return i if i < len(nodes) and nodes[i] == x else None
 
 
 def _release(df: DataFrame) -> None:
@@ -205,12 +246,31 @@ def _star_fixpoint(sym: DataFrame, max_rounds: int = 40) -> DataFrame:
     return labels
 
 
+def _components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Root (min node index of its component) of each of ``n`` nodes
+    joined by edges ``a``-``b``: vectorised min-label hooking plus
+    pointer jumping. Invariant: ``parent[x] <= x`` and lies in x's
+    component, so once every edge's endpoints share a root, the root of
+    a component is its minimum. Each pass hooks every larger root onto
+    the smallest root it touches, so a pass either finishes or merges."""
+    parent = np.arange(n)
+    while True:
+        pa, pb = parent[a], parent[b]
+        if np.array_equal(pa, pb):
+            return parent
+        np.minimum.at(parent, np.maximum(pa, pb), np.minimum(pa, pb))
+        while True:  # pointer jumping: every node straight to its root
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    local_threshold: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Return (node, cluster_id) for every node in ``edges``, where
     cluster_id is the minimum node id in the node's connected
@@ -218,46 +278,36 @@ def connected_components(
     singletons back if they want total coverage).
 
     Physical strategies behind one contract, chosen by the real edge
-    cardinality (the same runtime-statistics decision AQE makes for
-    join strategies): ≤ ``local_threshold`` edges → driver-side
-    union-find (the scheduling cost of even one distributed round
-    exceeds solving the whole problem centrally); larger → iterative
-    min-label propagation, one edge-key shuffle per round, O(diameter)
-    rounds — the cheap winner on near-dup graphs, whose components are
+    cardinality: at or below :data:`LOCAL_GRAPH_MAX_EDGES` edges →
+    :func:`_components` on the driver; larger → iterative min-label
+    propagation, one edge-key shuffle per round, O(diameter) rounds —
+    the cheap winner on near-dup graphs, whose components are
     near-cliques with diameter 2-4. If propagation has not converged
     after ``max_iter`` rounds (the graph's diameter is larger), the
     diameter-independent large-star/small-star contraction
     (:func:`_star_fixpoint`) finishes the job instead of returning
     unconverged labels; ``max_iter=0`` goes straight to it."""
-    # Materialize the directed edge list BEFORE the symmetric union reads
-    # it twice: persist alone is not enough — the union's two branches can
-    # run concurrently in one job, each missing the still-empty cache and
-    # re-running the (possibly expensive) upstream pair-generation lineage,
-    # e.g. a shingle self-join. The count also gives the edge cardinality
-    # that sizes the loop's shuffle width.
-    directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    directed.persist()
-    n_edges = directed.count()
+    directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     spark = directed.sparkSession
-    if n_edges <= local_threshold:
-        # Driver union-find fast path (see docstring). The collect is
-        # bounded by the size gate, exactly like a broadcast build side.
-        # Arrow-batched transfer (toPandas), not toLocalIterator: the
-        # iterator path runs one sequential job per partition; Arrow
-        # moves the whole bounded edge list in one job at ~millions of
-        # rows/sec.
-        pdf = directed.toPandas()
-        # .tolist() converts numpy scalars to plain Python ints/strs so
-        # createDataFrame's type verifier accepts the result rows.
-        rows = _local_components(zip(pdf["a"].tolist(), pdf["b"].tolist()))
-        from pyspark.sql.types import StructField, StructType
-
-        node_t = directed.schema["a"].dataType
-        directed.unpersist()
-        schema = StructType(
-            [StructField("node", node_t), StructField("cluster_id", node_t)]
+    directed, g = _local_graph(directed, "a", "b")
+    if g is not None:
+        nodes, ia, ib = g
+        t = directed.schema["a"].dataType.simpleString()
+        return _local_frame(
+            spark,
+            f"node {t}, cluster_id {t}",
+            node=nodes,
+            cluster_id=nodes[_components(len(nodes), ia, ib)],
         )
-        return spark.createDataFrame(rows, schema)
+    # The directed edge list is already materialized (the builder's
+    # collect computed every partition of its checkpoint) BEFORE the
+    # symmetric union reads it twice: a plain persist would not be
+    # enough — the union's two branches can run concurrently in one job,
+    # each missing the still-empty cache and re-running the (possibly
+    # expensive) upstream pair-generation lineage, e.g. a shingle
+    # self-join. The count, over those blocks, gives the edge
+    # cardinality that sizes the loop's shuffle width.
+    n_edges = directed.count()
     # Right-size the loop's shuffle width to the edge count: the label
     # rounds run over the (usually tiny, always <= 2x input) edge list,
     # and default shuffle partitions would pay scheduling overhead per
@@ -272,7 +322,7 @@ def connected_components(
     ).repartition(n_part, "node")
     labels.persist()
     labels.count()
-    directed.unpersist()
+    _release(directed)
     # Loop conf hygiene — AQE off (its per-exchange query-stage
     # materialization adds whole jobs per round to a loop whose width
     # n_part is already decided from the real edge count), shuffle
@@ -332,7 +382,6 @@ def pagerank(
     dst: str = "dst",
     n_iter: int = 3,
     damping: float = 0.85,
-    local_threshold: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list; returns
     (node, rank).
@@ -348,54 +397,34 @@ def pagerank(
     Fixed ``n_iter`` (not convergence-tested) keeps the result
     deterministic and SQL-expressible for the oracle.
 
-    Scale shape: each iteration is one shuffle join of the (static,
-    persisted, degree-annotated) edge list against the current ranks
-    plus a partial-aggregated sum per dst — identical cost profile to
-    the connected-components round. Ranks are persisted per round and
-    the previous round unpersisted, so lineage stays one-round deep.
-
-    Size-gated local fast path (the same broadcast-gate reasoning as
-    :func:`connected_components`): at ≤ ``LOCAL_CC_MAX_EDGES`` directed
-    edges the whole edge list fits in driver memory (2M × 16 bytes ≈
-    32 MB), and n_iter numpy bincount passes beat n_iter rounds of
-    distributed job scheduling by an order of magnitude. Larger graphs
-    take the distributed loop unchanged.
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges the ``n_iter``
+    rounds are numpy ``bincount`` passes on the driver. Above it, each
+    iteration is one shuffle join of the (static, persisted,
+    degree-annotated) edge list against the current ranks plus a
+    partial-aggregated sum per dst — the connected-components round's
+    cost profile. Ranks are materialized per round and the previous
+    round released, so lineage stays one round deep.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e.persist()
-    n_edges = e.count()
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
     spark = e.sparkSession
-    if n_edges <= local_threshold:
-        import numpy as np
-        import pandas as pd
-
-        pdf = e.toPandas()
-        e.unpersist()
-        # Node universe = src keys ONLY, exactly like the distributed
-        # loop (whose `nodes` table is the outdeg groupBy keys). An
-        # out-of-contract dangling node (outdeg 0, appears only as dst)
-        # is therefore excluded from the output and from the 1/N
-        # normalization by BOTH physical strategies — the size gate
-        # never changes the result set.
-        src_arr = pdf["src"].to_numpy()
-        dst_arr = pdf["dst"].to_numpy()
-        nodes, src_c = np.unique(src_arr, return_inverse=True)
-        n = len(nodes)
-        pos = np.searchsorted(nodes, dst_arr)
-        pos_clipped = np.minimum(pos, n - 1)
-        in_universe = nodes[pos_clipped] == dst_arr
-        dst_c = pos_clipped
-        outdeg = np.bincount(src_c, minlength=n).astype(np.float64)
-        rank = np.full(n, 1.0 / n)
-        base = (1.0 - damping) / n
+    e, g = _local_graph(e, "src", "dst")
+    if g is not None:
+        nodes, s, d = g
+        n_all = len(nodes)
+        outdeg = np.bincount(s, minlength=n_all).astype(np.float64)
+        # node universe = sources; a dangling dst's rank is computed
+        # but never read (it has no out-edge) and never returned
+        universe = outdeg > 0
+        n = max(int(universe.sum()), 1)
+        rank = np.full(n_all, 1.0 / n)
         for _ in range(n_iter):
-            w = rank[src_c] / outdeg[src_c]
-            contrib = np.bincount(
-                dst_c[in_universe], weights=w[in_universe], minlength=n
-            )
-            rank = base + damping * contrib
-        out = pd.DataFrame({"node": nodes, "rank": rank})
-        return spark.createDataFrame(out)
+            contrib = np.bincount(d, weights=rank[s] / outdeg[s], minlength=n_all)
+            rank = (1.0 - damping) / n + damping * contrib
+        t = e.schema["src"].dataType.simpleString()
+        return _local_frame(
+            spark, f"node {t}, rank double", node=nodes[universe], rank=rank[universe]
+        )
+    n_edges = e.count()  # over the builder's materialized blocks
     n_part = loop_width(spark, n_edges)
     # The degree table is |V| rows vs |E| edge rows; persisting and
     # counting it gives n_nodes (the broadcast-feasibility gate) AND the
@@ -454,7 +483,7 @@ def pagerank(
                 stepped = materialize_shared(stepped)
                 _release(ranks)
                 ranks = stepped
-            e.unpersist()
+            _release(e)
             deg.unpersist()
             return ranks.select("node", "rank")
         # Shuffle loop for huge vertex sets: degree-annotated edge list
@@ -462,7 +491,7 @@ def pagerank(
         withdeg = e.join(deg, "src").repartition(n_part, "src")
         withdeg.persist()
         withdeg.count()
-        e.unpersist()
+        _release(e)
         nodes = deg.select(F.col("src").alias("node")).repartition(n_part, "node")
         nodes.persist()
         nodes.count()
@@ -526,6 +555,9 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     agg and the output projection) — plus every 4th round as an
     analysis-depth bound for deep loops.
 
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` distinct edges the rounds
+    are two numpy ``bincount`` passes each, on the driver.
+
     Returns (node, role 'hub'|'authority', score DOUBLE, L1-normalized
     within each role).
     """
@@ -533,7 +565,27 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         # auth is only bound inside the loop; zero rounds would crash
         # on auth.agg below with a confusing NoneType error
         raise ValueError(f"hits() needs n_iter >= 1, got {n_iter}")
-    e = materialize_shared(edges.distinct())
+    canon, g = _local_graph(edges.select("src", "dst").dropna().distinct(), "src", "dst")
+    if g is not None:
+        nodes, s, d = g
+        n = len(nodes)
+        is_src = np.bincount(s, minlength=n) > 0
+        is_dst = np.bincount(d, minlength=n) > 0
+        hub = is_src.astype(np.float64)
+        for _ in range(n_iter):
+            auth = np.bincount(d, weights=hub[s], minlength=n)
+            hub = np.bincount(s, weights=auth[d], minlength=n)
+        h, a = hub[is_src], auth[is_dst]
+        t = canon.schema["src"].dataType.simpleString()
+        return _local_frame(
+            canon.sparkSession,
+            f"node {t}, role string, score double",
+            node=np.concatenate([nodes[is_src], nodes[is_dst]]),
+            role=np.repeat(["hub", "authority"], [len(h), len(a)]),
+            score=np.concatenate([h / h.sum(), a / a.sum()]),
+        )
+    e = materialize_shared(canon)
+    _release(canon)
     n_edges = e.count()  # over materialized blocks; sizes the loop
     hub = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("h")
@@ -583,11 +635,13 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
 
 def _undirected(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge set of a (u, v) edge list: each edge
-    once as (least, greatest) BIGINT ids, self-loops dropped — so
-    reversed duplicates, repeated edges and self-loops cannot inflate
-    any count downstream."""
+    once as (least, greatest) BIGINT ids, self-loops and edges with a
+    NULL endpoint dropped — so reversed duplicates, repeated edges and
+    self-loops cannot inflate any count downstream."""
     return (
-        edges.select(
+        edges.select("u", "v")
+        .dropna()
+        .select(
             F.least("u", "v").cast("bigint").alias("u"),
             F.greatest("u", "v").cast("bigint").alias("v"),
         )
@@ -750,6 +804,22 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _bfs(n: int, u: np.ndarray, v: np.ndarray, source: int, max_depth: int) -> np.ndarray:
+    """Hop level of each of ``n`` nodes from node index ``source`` over
+    undirected edges ``u``-``v``, -1 beyond ``max_depth`` or unreached:
+    one frontier expansion per level, stopping early when it drains."""
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    level = np.full(n, -1)
+    level[source] = 0
+    for lvl in range(1, max_depth + 1):
+        reached = dst[level[src] == lvl - 1]
+        reached = reached[level[reached] < 0]
+        if not len(reached):
+            break
+        level[reached] = lvl
+    return level
+
+
 def bfs_levels(
     edges: DataFrame, max_depth: int = 4, source: int | None = None
 ) -> DataFrame:
@@ -761,8 +831,10 @@ def bfs_levels(
     factor). Returns (node BIGINT, level INT) for every node within
     ``max_depth`` hops, where level is the minimal hop distance.
 
-    Frontier-expansion shape — the distributed BFS that survives wide
-    graphs: each round is ONE equi-join of the current frontier against
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges, :func:`_bfs` runs
+    the levels on the driver. Above it, the frontier-expansion shape —
+    the distributed BFS that survives wide graphs: each round is ONE
+    equi-join of the current frontier against
     the symmetrized edge list plus an anti-join against the visited
     set, so per-round cost is O(frontier-adjacent edges), never
     O(paths) (a path-enumerating recursion explodes combinatorially on
@@ -771,7 +843,23 @@ def bfs_levels(
     loops; the loop exits early when a frontier is exhausted.
     """
     spark = edges.sparkSession
-    sym = materialize_shared(_both_ways(_undirected(edges)))
+    e, g = _local_graph(_undirected(edges), "u", "v")
+    if g is not None:
+        nodes, u, v = g
+        if source is None:
+            if not len(nodes):
+                return _local_frame(spark, "node bigint, level int", node=[], level=[])
+            source = nodes[0]
+        i = _index_of(nodes, source)
+        if i is None:  # a source outside the graph reaches only itself
+            return _local_frame(spark, "node bigint, level int", node=[source], level=[0])
+        level = _bfs(len(nodes), u, v, i, max_depth)
+        seen = level >= 0
+        return _local_frame(
+            spark, "node bigint, level int", node=nodes[seen], level=level[seen]
+        ).orderBy("node")
+    sym = materialize_shared(_both_ways(e))
+    _release(e)
     if source is None:
         # 1-row control job
         source = sym.agg(F.min("src")).collect()[0][0]
@@ -803,6 +891,28 @@ def bfs_levels(
     return visited.orderBy("node")
 
 
+_UNREACHED = np.iinfo(np.int64).max
+
+
+def _bellman_ford(
+    n: int, src: np.ndarray, dst: np.ndarray, w: np.ndarray, source: int, rounds: int
+) -> np.ndarray:
+    """Minimal path weight from node index ``source`` to each of ``n``
+    nodes using at most ``rounds`` of the directed edges ``src``→``dst``
+    with weights ``w`` (:data:`_UNREACHED` where there is none): each
+    round relaxes every edge out of a reached node against the previous
+    round's distances."""
+    dist = np.full(n, _UNREACHED)
+    dist[source] = 0
+    for _ in range(rounds):
+        ds = dist[src]
+        ok = ds < _UNREACHED
+        nxt = dist.copy()
+        np.minimum.at(nxt, dst[ok], ds[ok] + w[ok])
+        dist = nxt
+    return dist
+
+
 def sssp(
     edges: DataFrame, rounds: int = 3, source: int | None = None
 ) -> DataFrame:
@@ -815,8 +925,10 @@ def sssp(
     by contract, like the oracle that unrolls it; a caller wanting the
     exact fixpoint raises ``rounds`` to the graph diameter.
 
-    Frontier-optimized relaxation: round r relaxes only edges out of
-    nodes whose distance IMPROVED in round r-1 — provably identical to
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges,
+    :func:`_bellman_ford` relaxes every edge per round on the driver.
+    Above it, frontier-optimized relaxation: round r relaxes only edges
+    out of nodes whose distance IMPROVED in round r-1 — provably identical to
     relaxing every edge (an unimproved node re-offers exactly the
     candidates already min-folded in round r-1) but per-round cost is
     O(improved-frontier edges), never O(E) once the wave passes. Same
@@ -825,12 +937,32 @@ def sssp(
     (node, candidate-dist) pair per reached node per partition.
     """
     spark = edges.sparkSession
-    e = edges.select(
-        F.col("src").cast("bigint").alias("src"),
-        F.col("dst").cast("bigint").alias("dst"),
-        F.col("w").cast("bigint").alias("w"),
+    canon, g = _local_graph(
+        edges.select(
+            F.col("src").cast("bigint").alias("src"),
+            F.col("dst").cast("bigint").alias("dst"),
+            F.col("w").cast("bigint").alias("w"),
+        ).dropna(),
+        "src",
+        "dst",
+        "w",
     )
-    e = materialize_shared(e)
+    if g is not None:
+        nodes, s, d, w = g
+        if source is None:
+            if not len(s):
+                return _local_frame(spark, "node bigint, dist bigint", node=[], dist=[])
+            source = nodes[s.min()]
+        i = _index_of(nodes, source)
+        if i is None:  # a source outside the graph reaches only itself
+            return _local_frame(spark, "node bigint, dist bigint", node=[source], dist=[0])
+        dist = _bellman_ford(len(nodes), s, d, w, i, rounds)
+        seen = dist < _UNREACHED
+        return _local_frame(
+            spark, "node bigint, dist bigint", node=nodes[seen], dist=dist[seen]
+        ).orderBy("node")
+    e = materialize_shared(canon)
+    _release(canon)
     if source is None:
         # 1-row control job
         source = e.agg(F.min("src")).collect()[0][0]
@@ -876,6 +1008,41 @@ def sssp(
     return dist.orderBy("node")
 
 
+def _kcore_unconverged(k: int, max_rounds: int) -> RuntimeError:
+    return RuntimeError(
+        f"kcore(k={k}) did not reach fixpoint within "
+        f"max_rounds={max_rounds}: the surviving subgraph still "
+        "has nodes below degree k (a strict supergraph of the "
+        "true k-core). Raise max_rounds."
+    )
+
+
+def _kcore_degrees(
+    n: int, u: np.ndarray, v: np.ndarray, k: int, max_rounds: int
+) -> np.ndarray:
+    """Degree of each of ``n`` nodes in the k-core of undirected edges
+    ``u``-``v`` (0 = peeled): round-synchronous peeling, every round
+    dropping each edge with an endpoint of degree < k. Raises
+    :func:`_kcore_unconverged` when ``max_rounds`` ends short of the
+    fixpoint, as the distributed loop does."""
+    alive = np.ones(len(u), dtype=bool)
+
+    def degrees():
+        return np.bincount(u[alive], minlength=n) + np.bincount(v[alive], minlength=n)
+
+    for _ in range(max_rounds):
+        keep = degrees() >= k
+        nxt = alive & keep[u] & keep[v]
+        if nxt.sum() == alive.sum():
+            break
+        alive = nxt
+    else:
+        deg = degrees()
+        if ((deg > 0) & (deg < k)).any():
+            raise _kcore_unconverged(k, max_rounds)
+    return degrees()
+
+
 def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
     """Iterative k-core peeling of the undirected graph ``edges`` (u, v),
     with integral node ids: repeatedly drop nodes with degree < k (and
@@ -890,7 +1057,9 @@ def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
     survivor still has degree < k the call raises a RuntimeError naming
     the bound — at 100x scale deeper peeling chains get likelier.
 
-    The peeling shape at scale: each round is one endpoint-explode
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges,
+    :func:`_kcore_degrees` peels on the driver. The peeling shape above
+    it: each round is one endpoint-explode
     degree aggregation plus two semi-joins restricting the edge list to
     surviving nodes — all equi-joins on node ids, partial-aggregated
     map-side, nothing driver-resident. The edge list only shrinks, so
@@ -899,7 +1068,19 @@ def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
     unrolled oracle, so early exit cannot diverge from it). Lineage is
     cut per round like the CC/PageRank/BFS loops.
     """
-    e = materialize_shared(_undirected(edges))
+    canon, g = _local_graph(_undirected(edges), "u", "v")
+    if g is not None:
+        nodes, u, v = g
+        deg = _kcore_degrees(len(nodes), u, v, k, max_rounds)
+        kept = deg > 0
+        return _local_frame(
+            edges.sparkSession,
+            "node bigint, degree bigint",
+            node=nodes[kept],
+            degree=deg[kept],
+        ).orderBy("node")
+    e = materialize_shared(canon)
+    _release(canon)
     n_edges = e.count()
     # The peeling rounds run under full AQE, with no loop_confs pin:
     # AQE's run-time re-planning turns each round's two semi-joins into
@@ -922,12 +1103,7 @@ def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
         # check decides whether it happened to LAND on the fixpoint
         # (1-row control action, only on the exhaustion path)
         if _degrees(e).filter(F.col("d") < k).limit(1).count() > 0:
-            raise RuntimeError(
-                f"kcore(k={k}) did not reach fixpoint within "
-                f"max_rounds={max_rounds}: the surviving subgraph still "
-                "has nodes below degree k (a strict supergraph of the "
-                "true k-core). Raise max_rounds."
-            )
+            raise _kcore_unconverged(k, max_rounds)
     return _degrees(e, "degree").orderBy("node")
 
 
@@ -1096,6 +1272,27 @@ def adamic_adar(edges: DataFrame, chunk: int = 32) -> DataFrame:
     )
 
 
+def _lpa_labels(n: int, u: np.ndarray, v: np.ndarray, rounds: int) -> np.ndarray:
+    """Label (a node index) of each of ``n`` nodes after ``rounds``
+    synchronous sweeps over undirected edges ``u``-``v``, every node
+    having a neighbour. Round 1 is the min neighbour (each label is
+    unique before it); later rounds take the most frequent neighbour
+    label, ties to the smallest: count each (node, label) pair, sort by
+    node, count descending, label ascending, keep each node's first."""
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    label = np.full(n, n)
+    np.minimum.at(label, src, dst)
+    for _ in range(rounds - 1):
+        pairs, cnt = np.unique(src * n + label[dst], return_counts=True)
+        node, lab = np.divmod(pairs, n)
+        order = np.lexsort((lab, -cnt, node))
+        node, lab = node[order], lab[order]
+        first = np.ones(len(node), dtype=bool)
+        first[1:] = node[1:] != node[:-1]
+        label[node[first]] = lab[first]
+    return label
+
+
 def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected graph, fixed ``rounds`` sweeps, fully deterministic.
@@ -1107,8 +1304,10 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     LPA's random tie-break, so results are identical across engines,
     reshards and retries. Returns (node BIGINT, community BIGINT).
 
-    Scale shape (the same per-round contract as :func:`pagerank` /
-    :func:`bfs_levels`): one equi-join of the symmetrized edge list
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges, :func:`_lpa_labels`
+    runs the rounds on the driver. Scale shape above it (the same
+    per-round contract as :func:`pagerank` / :func:`bfs_levels`): one
+    equi-join of the symmetrized edge list
     against the |V|-row label table plus two map-side-combinable hash
     aggs (neighbor-label counts, then the argmax with min-label
     tie-break as max-count filter + MIN — portable to the unrolled SQL
@@ -1118,7 +1317,18 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """
     if rounds < 1:
         raise ValueError("label_propagation needs rounds >= 1")
-    sym = materialize_shared(_both_ways(_undirected(edges)))
+    canon, g = _local_graph(_undirected(edges), "u", "v")
+    if g is not None:
+        nodes, u, v = g
+        label = _lpa_labels(len(nodes), u, v, rounds)
+        return _local_frame(
+            edges.sparkSession,
+            "node bigint, community bigint",
+            node=nodes,
+            community=nodes[label],
+        )
+    sym = materialize_shared(_both_ways(canon))
+    _release(canon)
     # Sweeps run under full AQE, with no loop_confs pin: a pin freezes
     # the label join as a static SortMergeJoin where AQE broadcasts the
     # |V|-row label table at run time. See kcore's note.

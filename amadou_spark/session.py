@@ -97,14 +97,24 @@ def default_master() -> str:
     return f"local[{int(cpus)}]"
 
 
+def default_driver_memory() -> str:
+    """The smaller of 32g and half of physical memory, in whole GiB (at
+    least 1g). In local mode the driver is the whole memory budget; 32g
+    is sized for a 128 GiB host, and a heap larger than the host lets
+    the JVM grow until something outside it kills the process."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(32, half_gib))}g"
+
+
 def driver_memory() -> str:
-    """``$SPARK_GRAFT_DRIVER_MEM``, or 32g when it is not set. In local
-    mode the driver is the whole memory budget; 32g is sized for a
-    128 GiB host. A value outside Spark's size syntax (digits, then an
-    optional b/k/kb/m/mb/g/gb/t/tb/p/pb suffix in any case) fails here,
-    naming the variable, instead of as a JVM that exits before the
-    Java gateway starts."""
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    """``$SPARK_GRAFT_DRIVER_MEM``, or :func:`default_driver_memory`
+    when it is not set. A value outside Spark's size syntax (digits,
+    then an optional b/k/kb/m/mb/g/gb/t/tb/p/pb suffix in any case)
+    fails here, naming the variable, instead of as a JVM that exits
+    before the Java gateway starts."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        return default_driver_memory()
     if not re.fullmatch(r"[0-9]+[kmgtp]?b?", mem, re.IGNORECASE):
         raise ValueError(
             f"SPARK_GRAFT_DRIVER_MEM must be a size like 2g or 512m, got {mem!r}"

@@ -22,6 +22,26 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def both_paths():
+    """``both_paths(fn)`` -> ``(fn() on the driver-local graph path,
+    fn() on the distributed loops)``. The graph operators pick their
+    path by ``graph.LOCAL_GRAPH_MAX_EDGES``, read at call time, so the
+    second call patches it to 0 (every test graph is far below the real
+    gate). Session-scoped because hypothesis rejects function-scoped
+    fixtures; the patch lives only inside the call."""
+    from unittest import mock
+
+    from amadou_spark.operators import graph
+
+    def run(fn):
+        local = fn()
+        with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", 0):
+            return local, fn()
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
 

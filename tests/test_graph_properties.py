@@ -1,17 +1,22 @@
 """Property-based tests for the graph operators: on random small
-graphs, the distributed implementations must agree exactly with
-brute-force driver-side references (itertools / dict BFS / iterative
-peel). Spark sessions are expensive per example, so each property runs
-a small number of RANDOM graphs via hypothesis with a reduced
-max_examples — the planted-graph unit tests in test_llm_ops.py cover
-the hand-checkable shapes; these cover the shapes nobody thought of.
+graphs, the implementations must agree exactly with brute-force
+driver-side references (itertools / dict BFS / iterative peel). The
+fixpoint operators (k-core, BFS, SSSP, HITS, label propagation) run on
+both of their physical paths — the driver-local numpy kernels and the
+distributed loops, via the ``both_paths`` fixture — over messy edge
+lists: reversed duplicates, repeated edges, self-loops, the empty list,
+negative ids and ids of 2**31 and beyond. Spark sessions are expensive
+per example, so each property runs a small number of RANDOM graphs via
+hypothesis with a reduced max_examples — the planted-graph unit tests
+in test_llm_ops.py cover the hand-checkable shapes; these cover the
+shapes nobody thought of.
 """
 
 from __future__ import annotations
 
 import itertools
 import math
-from collections import deque
+from collections import Counter, deque
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -21,6 +26,13 @@ EDGE = st.tuples(
     st.integers(min_value=0, max_value=11),
 )
 EDGES = st.lists(EDGE, min_size=0, max_size=25)
+
+#: node ids for the both-path properties: negatives and ids at and past
+#: 2**31, so an INT-sized or non-negative id assumption shows
+IDS = [-(2**40), -7, -1, 0, 1, 2, 3, 5, 2**31 - 1, 2**31, 2**31 + 1, 2**40]
+MESSY_EDGES = st.lists(
+    st.tuples(st.sampled_from(IDS), st.sampled_from(IDS)), max_size=25
+)
 
 _SLOW = settings(
     max_examples=12,
@@ -97,16 +109,13 @@ def test_local_clustering_matches_bruteforce(spark, edges):
     assert got == expect
 
 
-@given(EDGES, st.integers(min_value=1, max_value=4))
+@given(MESSY_EDGES, st.integers(min_value=1, max_value=4))
 @_SLOW
-def test_kcore_matches_iterative_peel(spark, edges, k):
+def test_kcore_matches_iterative_peel(spark, both_paths, edges, k):
     from amadou_spark.operators.graph import kcore
 
-    es = _canon(edges)
-    if not es:
-        return
-    # reference: peel to fixpoint
-    cur = set(es)
+    # reference: peel the canonical edge set to fixpoint
+    cur = _canon(edges)
     while True:
         deg: dict = {}
         for u, v in cur:
@@ -121,37 +130,64 @@ def test_kcore_matches_iterative_peel(spark, edges, k):
     for u, v in cur:
         expect[u] = expect.get(u, 0) + 1
         expect[v] = expect.get(v, 0) + 1
-    df = spark.createDataFrame(sorted(es), "u int, v int")
+    df = spark.createDataFrame(edges, "u long, v long")
     # max_rounds=20 >> any 12-node peel depth, so both sides converge
-    got = {r.node: r.degree for r in kcore(df, k=k, max_rounds=20).collect()}
-    assert got == expect
+    local, dist = both_paths(
+        lambda: {r.node: r.degree for r in kcore(df, k=k, max_rounds=20).collect()}
+    )
+    assert local == dist == expect
 
 
-@given(EDGES, st.integers(min_value=1, max_value=4))
+@given(MESSY_EDGES, st.integers(min_value=1, max_value=4))
 @_SLOW
-def test_bfs_levels_match_reference(spark, edges, depth):
+def test_bfs_levels_match_reference(spark, both_paths, edges, depth):
     from amadou_spark.operators.graph import bfs_levels
 
-    es = _canon(edges)
-    if not es:
-        return
-    adj = _adj(es)
-    src = min(adj)
-    expect = {src: 0}
-    q = deque([src])
-    while q:
-        n = q.popleft()
-        if expect[n] >= depth:
-            continue
-        for m in adj[n]:
-            if m not in expect:
-                expect[m] = expect[n] + 1
-                q.append(m)
-    df = spark.createDataFrame(sorted(es), "u int, v int")
-    got = {
-        r.node: r.level for r in bfs_levels(df, max_depth=depth).collect()
-    }
-    assert got == expect
+    adj = _adj(_canon(edges))
+    expect = {}
+    if adj:
+        src = min(adj)
+        expect[src] = 0
+        q = deque([src])
+        while q:
+            n = q.popleft()
+            if expect[n] >= depth:
+                continue
+            for m in adj[n]:
+                if m not in expect:
+                    expect[m] = expect[n] + 1
+                    q.append(m)
+    df = spark.createDataFrame(edges, "u long, v long")
+    local, dist = both_paths(
+        lambda: {r.node: r.level for r in bfs_levels(df, max_depth=depth).collect()}
+    )
+    assert local == dist == expect
+
+
+@given(MESSY_EDGES, st.integers(min_value=1, max_value=3))
+@_SLOW
+def test_label_propagation_matches_reference(spark, both_paths, edges, rounds):
+    """Synchronous rounds from identity labels: each node takes its
+    most frequent neighbour label, count ties to the smallest label."""
+    from amadou_spark.operators.graph import label_propagation
+
+    adj = _adj(_canon(edges))
+    label = {n: n for n in adj}
+    for _ in range(rounds):
+        new = {}
+        for n, nbrs in adj.items():
+            counts = Counter(label[m] for m in nbrs)
+            top = max(counts.values())
+            new[n] = min(lab for lab, c in counts.items() if c == top)
+        label = new
+    df = spark.createDataFrame(edges, "u long, v long")
+    local, dist = both_paths(
+        lambda: {
+            r.node: r.community
+            for r in label_propagation(df, rounds=rounds).collect()
+        }
+    )
+    assert local == dist == label
 
 
 @given(
@@ -240,8 +276,8 @@ def test_adamic_adar_matches_bruteforce(spark, edges, chunk):
 
 
 WEDGE = st.tuples(
-    st.integers(min_value=0, max_value=9),
-    st.integers(min_value=0, max_value=9),
+    st.sampled_from(IDS[:10]),
+    st.sampled_from(IDS[:10]),
     st.integers(min_value=1, max_value=20),
 )
 WEIGHTED_EDGES = st.lists(WEDGE, min_size=1, max_size=22)
@@ -249,19 +285,18 @@ WEIGHTED_EDGES = st.lists(WEDGE, min_size=1, max_size=22)
 
 @given(edges=WEIGHTED_EDGES, rounds=st.integers(min_value=1, max_value=4))
 @_SLOW
-def test_sssp_matches_full_relaxation_bellman_ford(spark, edges, rounds):
-    """The frontier-optimized distributed SSSP must agree exactly with
-    the textbook full-edge-relaxation Bellman-Ford at the same round
-    bound — pinning both correctness and the frontier-restriction
-    equivalence claim in the operator docstring."""
+def test_sssp_matches_full_relaxation_bellman_ford(spark, both_paths, edges, rounds):
+    """Both SSSP paths — the driver kernel and the frontier-optimized
+    distributed loop — must agree exactly with the textbook
+    full-edge-relaxation Bellman-Ford at the same round bound, pinning
+    both correctness and the frontier-restriction equivalence claim in
+    the operator docstring. The raw edge list keeps its self-loops and
+    repeated edges of differing weight."""
     from amadou_spark.operators.graph import sssp
 
-    es = [(u, v, w) for u, v, w in edges if u != v]
-    if not es:
-        return
     # directed multigraph: keep the min weight per (src, dst)
     best: dict = {}
-    for u, v, w in es:
+    for u, v, w in edges:
         if (u, v) not in best or w < best[(u, v)]:
             best[(u, v)] = w
     src = min(u for u, _ in best)
@@ -272,27 +307,23 @@ def test_sssp_matches_full_relaxation_bellman_ford(spark, edges, rounds):
             if u in dist and dist[u] + w < nxt.get(v, float("inf")):
                 nxt[v] = dist[u] + w
         dist = nxt
-    df = spark.createDataFrame(
-        sorted((u, v, w) for (u, v), w in best.items()),
-        "src int, dst int, w int",
+    df = spark.createDataFrame(edges, "src long, dst long, w int")
+    local, distributed = both_paths(
+        lambda: {r.node: r.dist for r in sssp(df, rounds=rounds).collect()}
     )
-    got = {r.node: r.dist for r in sssp(df, rounds=rounds).collect()}
-    assert got == dist
+    assert local == distributed == dist
 
 
 @given(
     st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=5),
-            st.integers(min_value=10, max_value=15),
-        ),
+        st.tuples(st.sampled_from(IDS[:6]), st.sampled_from(IDS[6:])),
         min_size=1,
         max_size=15,
     ),
     st.integers(min_value=1, max_value=3),
 )
 @_SLOW
-def test_hits_matches_power_iteration(spark, edges, n_iter):
+def test_hits_matches_power_iteration(spark, both_paths, edges, n_iter):
     from amadou_spark.operators.graph import hits
 
     es = sorted(set(edges))
@@ -312,12 +343,14 @@ def test_hits_matches_power_iteration(spark, edges, n_iter):
     auth = {k: v / tot for k, v in auth.items()}
     tot = sum(hub.values())
     hub = {k: v / tot for k, v in hub.items()}
-    df = spark.createDataFrame(es, "src long, dst long")
-    got_h, got_a = {}, {}
-    for r in hits(df, n_iter=n_iter).collect():
-        (got_h if r.role == "hub" else got_a)[r.node] = r.score
-    assert set(got_h) == set(hub) and set(got_a) == set(auth)
-    for k, v in hub.items():
-        assert math.isclose(got_h[k], v, rel_tol=1e-9)
-    for k, v in auth.items():
-        assert math.isclose(got_a[k], v, rel_tol=1e-9)
+    # the raw list, repeats included: hits() owns the dedup
+    df = spark.createDataFrame(edges, "src long, dst long")
+    for rows in both_paths(lambda: hits(df, n_iter=n_iter).collect()):
+        got_h, got_a = {}, {}
+        for r in rows:
+            (got_h if r.role == "hub" else got_a)[r.node] = r.score
+        assert set(got_h) == set(hub) and set(got_a) == set(auth)
+        for k, v in hub.items():
+            assert math.isclose(got_h[k], v, rel_tol=1e-9)
+        for k, v in auth.items():
+            assert math.isclose(got_a[k], v, rel_tol=1e-9)

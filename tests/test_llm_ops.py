@@ -315,32 +315,33 @@ def test_redact_pii_planted_fixture(spark):
     assert out[2].redacted == "nothing sensitive here"
 
 
-def test_connected_components_planted_graph(spark):
+def test_connected_components_planted_graph(spark, both_paths):
     """Two components (a 4-chain — needs >1 propagation round — and a
-    pair) resolve to min-id labels; the isolated node is absent."""
+    pair) resolve to min-id labels on both paths; the isolated node is
+    absent."""
     from amadou_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(3, 9), (9, 12), (12, 20), (40, 41)], "id_a long, id_b long"
     )
-    out = {r.node: r.cluster_id for r in connected_components(edges).collect()}
-    assert out == {3: 3, 9: 3, 12: 3, 20: 3, 40: 40, 41: 40}
+    for out in both_paths(
+        lambda: {r.node: r.cluster_id for r in connected_components(edges).collect()}
+    ):
+        assert out == {3: 3, 9: 3, 12: 3, 20: 3, 40: 40, 41: 40}
 
 
-def test_connected_components_both_paths_agree(spark):
-    """The size-gated driver union-find and the distributed min-label
-    fixpoint (forced via local_threshold=0) produce identical labels,
+def test_connected_components_both_paths_agree(spark, both_paths):
+    """The size-gated driver components and the distributed min-label
+    fixpoint (the local gate patched to 0) produce identical labels,
     including on a long chain (worst case for round counts) and string
     node ids (the pagerank-style vertex domain)."""
     from amadou_spark.operators.graph import connected_components
 
     chain = [(i, i + 1) for i in range(0, 5)] + [(100, 101), (101, 99)]
     edges = spark.createDataFrame(chain, "id_a long, id_b long")
-    local = {r.node: r.cluster_id for r in connected_components(edges).collect()}
-    dist = {
-        r.node: r.cluster_id
-        for r in connected_components(edges, local_threshold=0).collect()
-    }
+    local, dist = both_paths(
+        lambda: {r.node: r.cluster_id for r in connected_components(edges).collect()}
+    )
     assert local == dist
     assert local[5] == 0 and local[99] == 99 and local[100] == 99
 
@@ -456,18 +457,23 @@ def test_triangle_stats_wedge_free_graph(spark):
     assert row.clustering is None
 
 
-def test_bfs_levels_planted_path(spark):
+def test_bfs_levels_planted_path(spark, both_paths):
     """Path 1-2-3-4-5-6 from source 1 with max_depth=3 reaches only
-    nodes 1..4; a disconnected edge (10,11) must never appear."""
+    nodes 1..4; a disconnected edge (10,11) must never appear. An
+    explicit source outside the graph reaches only itself."""
     from amadou_spark.operators.graph import bfs_levels
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)]
     df = spark.createDataFrame(edges, "u int, v int")
-    got = {(r.node, r.level) for r in bfs_levels(df, max_depth=3).collect()}
-    assert got == {(1, 0), (2, 1), (3, 2), (4, 3)}
+    for got in both_paths(
+        lambda: {(r.node, r.level) for r in bfs_levels(df, max_depth=3).collect()}
+    ):
+        assert got == {(1, 0), (2, 1), (3, 2), (4, 3)}
+    for got in both_paths(lambda: bfs_levels(df, source=77).collect()):
+        assert [tuple(r) for r in got] == [(77, 0)]
 
 
-def test_bfs_levels_early_exit_and_min_level(spark):
+def test_bfs_levels_early_exit_and_min_level(spark, both_paths):
     """Triangle + tail: node 3 is reachable at hops 1 (direct) and 2
     (via 2) — level must be the minimum; frontier drains before
     max_depth so the loop exits early."""
@@ -475,11 +481,13 @@ def test_bfs_levels_early_exit_and_min_level(spark):
 
     edges = [(1, 2), (2, 3), (1, 3), (3, 4)]
     df = spark.createDataFrame(edges, "u int, v int")
-    got = {(r.node, r.level) for r in bfs_levels(df, max_depth=10).collect()}
-    assert got == {(1, 0), (2, 1), (3, 1), (4, 2)}
+    for got in both_paths(
+        lambda: {(r.node, r.level) for r in bfs_levels(df, max_depth=10).collect()}
+    ):
+        assert got == {(1, 0), (2, 1), (3, 1), (4, 2)}
 
 
-def test_kcore_planted_graph(spark):
+def test_kcore_planted_graph(spark, both_paths):
     """K5 with a pendant tail: the 2-core strips the tail in cascading
     rounds (node 6 first, then 7 becomes degree-0) leaving exactly K5
     with all degrees 4; a 5-core of K5 is empty (max degree is 4)."""
@@ -488,9 +496,33 @@ def test_kcore_planted_graph(spark):
     k5 = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
     edges = k5 + [(5, 6), (6, 7)]
     df = spark.createDataFrame(edges, "u int, v int")
-    got = {(r.node, r.degree) for r in kcore(df, k=2, max_rounds=8).collect()}
-    assert got == {(n, 4) for n in range(1, 6)}
-    assert kcore(df, k=5, max_rounds=8).count() == 0
+    for got, n_5core in both_paths(
+        lambda: (
+            {(r.node, r.degree) for r in kcore(df, k=2, max_rounds=8).collect()},
+            kcore(df, k=5, max_rounds=8).count(),
+        )
+    ):
+        assert got == {(n, 4) for n in range(1, 6)}
+        assert n_5core == 0
+
+
+def test_label_propagation_planted_communities(spark, both_paths):
+    """Two triangles joined by one bridge (3-4). Round 1 gives every
+    node its min neighbour. Round 2 takes the most frequent neighbour
+    label (node 4 sees 1, 4, 4 and keeps 4), count ties to the smallest
+    (node 2 sees 2, 1 and takes 1; node 5 sees 3, 4 and takes 3)."""
+    from amadou_spark.operators.graph import label_propagation
+
+    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6)]
+    df = spark.createDataFrame(edges, "u long, v long")
+    for r1, r2 in both_paths(
+        lambda: tuple(
+            dict(map(tuple, label_propagation(df, rounds=n).collect()))
+            for n in (1, 2)
+        )
+    ):
+        assert r1 == {1: 2, 2: 1, 3: 1, 4: 3, 5: 4, 6: 4}
+        assert r2 == {1: 1, 2: 1, 3: 1, 4: 4, 5: 3, 6: 3}
 
 
 def test_link_prediction_excludes_existing_edges(spark, sf_dir):
@@ -527,13 +559,13 @@ def test_link_prediction_excludes_existing_edges(spark, sf_dir):
     assert all((r.node_a, r.node_b) not in edges for r in out)
 
 
-def test_bfs_levels_empty_graph(spark):
+def test_bfs_levels_empty_graph(spark, both_paths):
     """Only-self-loop input canonicalizes to zero edges: must return an
     empty frame, not crash deriving the default source."""
     from amadou_spark.operators.graph import bfs_levels
 
     df = spark.createDataFrame([(3, 3)], "u int, v int")
-    assert bfs_levels(df).count() == 0
+    assert both_paths(lambda: bfs_levels(df).count()) == (0, 0)
 
 
 def test_duplicated_spans_planted(spark):
@@ -560,7 +592,7 @@ def test_duplicated_spans_planted(spark):
     assert got == {("d1", 2, 11, 10), ("d2", 1, 10, 10)}
 
 
-def test_kcore_raises_on_unconverged_bound(spark):
+def test_kcore_raises_on_unconverged_bound(spark, both_paths):
     """Convergence contract: a path graph peels one
     layer per round under k=2, so max_rounds=1 cannot reach fixpoint —
     the bounded result is a strict supergraph of the (empty) 2-core and
@@ -573,12 +605,16 @@ def test_kcore_raises_on_unconverged_bound(spark):
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "u long, v long"
     )
-    with _pytest.raises(RuntimeError, match="fixpoint"):
-        kcore(path, k=2, max_rounds=1)
-    assert kcore(path, k=2, max_rounds=10).count() == 0
-    # a graph that IS its own k-core converges in one round regardless
     tri = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "u long, v long")
-    assert kcore(tri, k=2, max_rounds=1).count() == 3
+
+    def check():
+        with _pytest.raises(RuntimeError, match="fixpoint"):
+            kcore(path, k=2, max_rounds=1)
+        assert kcore(path, k=2, max_rounds=10).count() == 0
+        # a graph that IS its own k-core converges in one round regardless
+        assert kcore(tri, k=2, max_rounds=1).count() == 3
+
+    both_paths(check)
 
 
 def test_duplicated_spans_merges_overlapping_windows(spark):

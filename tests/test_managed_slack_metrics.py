@@ -119,6 +119,51 @@ def test_metrics_per_task_io_counters(spark, sf_dir):
     }
 
 
+_EVICTION_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from amadou_spark.metrics import MetricsCollector
+from amadou_spark.session import get_spark
+
+conf = {
+    "spark.driver.memory": "1g",
+    "spark.sql.shuffle.partitions": "2",
+    "spark.ui.retainedStages": "4",
+}
+spark = get_spark("amadou-io-ledger", master="local[2]", conf=conf)
+path = sys.argv[2]
+spark.range(1500).coalesce(1).write.parquet(path)
+collector = MetricsCollector(spark)
+seen = [collector.io_totals()["records_read"]]
+for _ in range(6):
+    spark.read.parquet(path).groupBy().count().collect()
+    seen.append(collector.io_totals()["records_read"])
+spark.stop()
+print(json.dumps(seen))
+"""
+
+
+def test_io_totals_never_fall_when_stages_are_evicted(tmp_path):
+    """The status store keeps only ``spark.ui.retainedStages`` stages.
+    With 4 retained, a scan of a 1,500-row file (three stages: scan,
+    skipped, final) stays in the store until the next scans evict it.
+    The collector's totals must rise by the full 1,500 records per scan
+    and never fall; summing the store alone drops every evicted stage's
+    records."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _EVICTION_SCRIPT, repo, str(tmp_path / "t.parquet")],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert all(b >= a + 1500 for a, b in zip(seen, seen[1:])), seen
+
+
 def test_observed_counters_ride_the_query(spark, sf_dir):
     from pyspark.sql import functions as F
 

@@ -343,14 +343,17 @@ def test_interval_join_plan_is_hash_join_not_nested_loop(spark, sf_dir):
 # ------------------------------------------------------------- pagerank
 
 
-@pytest.mark.parametrize("local_threshold", [0, 2_000_000])
-def test_pagerank_matches_numpy_reference(spark, local_threshold):
-    """Both physical strategies (distributed loop at threshold=0, local
-    numpy fast path at the default gate) must equal the dense numpy
-    power iteration on a small known graph (symmetrized, so no
+@pytest.mark.parametrize("gate", [0, 2_000_000])
+def test_pagerank_matches_numpy_reference(spark, gate):
+    """Both physical strategies (distributed loop with the local gate at
+    0, local numpy kernel at the default gate) must equal the dense
+    numpy power iteration on a small known graph (symmetrized, so no
     dangling nodes)."""
+    from unittest import mock
+
     import numpy as np
 
+    from amadou_spark.operators import graph
     from amadou_spark.operators.graph import pagerank
 
     pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
@@ -370,9 +373,8 @@ def test_pagerank_matches_numpy_reference(spark, local_threshold):
             contrib[idx[d]] += r[idx[s]] / out[idx[s]]
         r = (1 - 0.85) / n + 0.85 * contrib
 
-    got = dict(
-        pagerank(edges, n_iter=3, local_threshold=local_threshold).collect()
-    )
+    with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", gate):
+        got = dict(pagerank(edges, n_iter=3).collect())
     assert set(got) == set(nodes)
     for name in nodes:
         assert abs(got[name] - r[idx[name]]) < 1e-12, name
@@ -380,60 +382,56 @@ def test_pagerank_matches_numpy_reference(spark, local_threshold):
     assert all(0 < v < 1 for v in got.values())
 
 
-def test_cc_star_matches_unionfind_on_random_graph(spark):
-    """large-star/small-star (distributed, forced via local_threshold=0;
-    max_iter=0 skips label propagation) must equal the driver
-    union-find on a seeded random graph."""
+def test_cc_star_matches_unionfind_on_random_graph(spark, both_paths):
+    """large-star/small-star (distributed, the local gate patched to 0;
+    max_iter=0 skips label propagation) must equal the driver's
+    hook-and-jump components on a seeded random graph."""
     import random
 
-    from amadou_spark.operators.graph import (
-        _local_components,
-        connected_components,
-    )
+    from amadou_spark.operators.graph import connected_components
 
     rng = random.Random(7)
     pairs = list({
         tuple(sorted(rng.sample(range(48), 2))) for _ in range(60)
     })
     edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    want = dict(_local_components(pairs))
-    got = dict(
-        connected_components(edges, local_threshold=0, max_iter=0).collect()
+    want, got = both_paths(
+        lambda: dict(connected_components(edges, max_iter=0).collect())
     )
     assert got == want
 
 
-def test_cc_self_loop_node_all_strategies_agree(spark):
+def test_cc_self_loop_node_all_strategies_agree(spark, both_paths):
     """A node whose only edge is a self-loop is 'a node in edges': the
-    local union-find, label propagation, and star contraction must all
+    local components, label propagation, and star contraction must all
     return it as its own singleton cluster (the star path's a > b
     orientation used to drop it)."""
     from amadou_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([(0, 1), (7, 7)], ["id_a", "id_b"])
     expect = {0: 0, 1: 0, 7: 7}
-    for kwargs in (
-        {"local_threshold": 1_000},            # driver union-find
-        {"local_threshold": 0},                # label propagation
-        {"local_threshold": 0, "max_iter": 0},  # star contraction
-    ):
-        got = dict(connected_components(edges, **kwargs).collect())
-        assert got == expect, kwargs
+    for kwargs in ({}, {"max_iter": 0}):  # label propagation, star contraction
+        for got in both_paths(
+            lambda: dict(connected_components(edges, **kwargs).collect())
+        ):
+            assert got == expect, kwargs
 
 
 def test_cc_long_path_fallback_converges(spark):
     """A path graph's diameter exceeds the label-propagation round cap;
     connected_components must fall back to the star contraction and
     return CORRECT labels, not the unconverged propagation ones."""
+    from unittest import mock
+
+    from amadou_spark.operators import graph
     from amadou_spark.operators.graph import connected_components
 
     n = 16
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["id_a", "id_b"]
     )
-    got = dict(
-        connected_components(edges, local_threshold=0, max_iter=2).collect()
-    )
+    with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", 0):
+        got = dict(connected_components(edges, max_iter=2).collect())
     assert got == {i: 0 for i in range(n + 1)}
 
 
@@ -469,10 +467,11 @@ _K4_TAIL = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
         "label_propagation",
     ],
 )
-def test_undirected_ops_ignore_messy_edges(spark, op):
+def test_undirected_ops_ignore_messy_edges(spark, both_paths, op):
     """Every undirected operator returns the same rows for a messy edge
     list (reversed duplicates, repeated edges, self-loops — one on a
-    node with no other edge) as for its canonical u < v form."""
+    node with no other edge) as for its canonical u < v form, on both
+    of its physical paths where it has two."""
     from amadou_spark.operators import graph
 
     fn = getattr(graph, op)
@@ -486,24 +485,69 @@ def test_undirected_ops_ignore_messy_edges(spark, op):
 
     def rows(pairs):
         df = spark.createDataFrame(pairs, "u int, v int")
-        return sorted(tuple(r) for r in fn(df, **kwargs).collect())
+        return both_paths(
+            lambda: sorted(tuple(r) for r in fn(df, **kwargs).collect())
+        )
 
-    canonical = rows(_K4_TAIL)
+    canonical, canonical_dist = rows(_K4_TAIL)
     assert canonical  # every operator has output on this graph
-    assert rows(messy) == canonical
+    assert canonical_dist == canonical
+    assert rows(messy) == (canonical, canonical)
 
 
-def test_pagerank_dangling_node_same_universe_both_paths(spark):
-    """r2 ADVICE: an out-of-contract dangling node (only ever a dst)
-    must be treated identically by the local numpy path and the
-    distributed loop — excluded from the node set and from the 1/N
-    normalization — so the size gate can never flip the answer."""
+#: each operator over an edge frame with columns (u, v, w)
+_NULL_CASES = {
+    "connected_components": lambda g, df: g.connected_components(df, "u", "v"),
+    "pagerank": lambda g, df: g.pagerank(df, "u", "v"),
+    "hits": lambda g, df: g.hits(df.selectExpr("u AS src", "v AS dst")),
+    "sssp": lambda g, df: g.sssp(df.selectExpr("u AS src", "v AS dst", "w")),
+    "bfs_levels": lambda g, df: g.bfs_levels(df),
+    "kcore": lambda g, df: g.kcore(df, k=2),
+    "label_propagation": lambda g, df: g.label_propagation(df),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NULL_CASES))
+def test_graph_ops_ignore_null_endpoints(spark, both_paths, op):
+    """An edge with a NULL endpoint is ignored by every fixpoint
+    operator on both paths: the rows and the output schema equal those
+    of the NULL-free edge list, and no NULL id comes out. A NULL that
+    reached the driver would arrive as float64 NaN, on which a min-label
+    loop never settles (``nan != nan``) and ids come out DOUBLE. An
+    sssp edge with a NULL weight is ignored too."""
+    from amadou_spark.operators import graph
+
+    clean = [(1, 2, 1), (2, 3, 1), (3, 1, 1), (3, 4, 1), (4, 1, 1)]
+    dirty = clean + [(1, None, 1), (None, 4, 1), (None, None, 1), (2, 9, None)]
+    if op != "sssp":
+        dirty = dirty[:-1]  # a NULL weight is an sssp-only case
+
+    def run(pairs):
+        df = spark.createDataFrame(pairs, "u long, v long, w long")
+        out = _NULL_CASES[op](graph, df)
+        rows = (
+            tuple(round(x, 12) if isinstance(x, float) else x for x in r)
+            for r in out.collect()
+        )
+        return out.schema.simpleString(), sorted(rows)
+
+    want, want_dist = both_paths(lambda: run(clean))
+    assert want[1] and want == want_dist
+    got, got_dist = both_paths(lambda: run(dirty))
+    assert got == got_dist == want
+    assert all(None not in row for row in got[1])
+
+
+def test_pagerank_dangling_node_same_universe_both_paths(spark, both_paths):
+    """An out-of-contract dangling node (only ever a dst) must be
+    treated identically by the local numpy path and the distributed
+    loop — excluded from the node set and from the 1/N normalization —
+    so the size gate can never flip the answer."""
     from amadou_spark.operators.graph import pagerank
 
     pairs = [("a", "b"), ("b", "a"), ("a", "zzz_dangling")]
     edges = spark.createDataFrame(pairs, ["src", "dst"])
-    local = dict(pagerank(edges, n_iter=3, local_threshold=2_000_000).collect())
-    dist = dict(pagerank(edges, n_iter=3, local_threshold=0).collect())
+    local, dist = both_paths(lambda: dict(pagerank(edges, n_iter=3).collect()))
     assert set(local) == set(dist) == {"a", "b"}
     for node in local:
         assert abs(local[node] - dist[node]) < 1e-12, node

@@ -11,13 +11,13 @@ Pins are written against the FINAL AQE plan (collect() first, then
 ``executedPlan().toString()`` truncated at the "Initial Plan" section)
 and use only properties that hold at ANY scale factor: absence lists
 always, minimum operator counts only where the plan shape guarantees
-them structurally (a 6-way dim join has >= 5 joins at any sf; q164's
-driver-side iteration yields a `Scan ExistingRDD` by construction —
-PySpark createDataFrame plans through applySchemaToPythonRDD, not a
-LocalRelation). Exact
-counts are
-deliberately avoided — AQE may legally specialize empty branches at
-tiny sf.
+them structurally (a 6-way dim join has >= 5 joins at any sf). How a
+driver-side result plans depends on what PySpark's createDataFrame is
+given: q164's list of tuples plans through applySchemaToPythonRDD as a
+`Scan ExistingRDD`, while a pandas frame goes through Arrow and plans
+as a LocalRelation (`LocalTableScan`), as the graph operators' local
+results do. Exact counts are deliberately avoided — AQE may legally
+specialize empty branches at tiny sf.
 """
 
 from __future__ import annotations
@@ -72,19 +72,25 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
         ["SortMergeJoin", "CartesianProduct", "BroadcastHashJoin"],
         {"Scan ExistingRDD": 1},
     ),
-    # iterative graph ops: final plans read checkpointed rounds, but a
-    # cartesian or single-partition regression in the tail still shows
+    # graph fixpoints: below graph.LOCAL_GRAPH_MAX_EDGES (every test
+    # scale) the rounds run on the driver and the final plan is the
+    # sorted one-partition LocalRelation of the result — no join, and
+    # no single-partition exchange for the final sort
     "q102_sssp": (
-        ["CartesianProduct", "Exchange SinglePartition"],
-        {},
+        ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
+        {"LocalTableScan": 1},
     ),
     "q98_kcore": (
-        ["CartesianProduct", "Exchange SinglePartition"],
-        {},
+        ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
+        {"LocalTableScan": 1},
     ),
     "q97_bfs_levels": (
         ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
-        {},
+        {"LocalTableScan": 1},
+    ),
+    "q150_label_propagation": (
+        ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
+        {"LocalTableScan": 1},
     ),
     # wedge self-join after r8/r9 hash-never-sort gating: broadcast or
     # shuffle_hash, never sort-merge; the scalar triangle total's final
@@ -123,11 +129,11 @@ PINS: dict[str, tuple[list[str], dict[str, int]]] = {
         ],
         {"HashAggregate": 2},
     ),
-    # bounded-grain SinglePartition (end-only normalization aggregates)
-    # is in oracle.SP_ALLOWLIST, so only cartesians are pinned here
+    # local HITS: the L1 normalization happens on the driver too, so
+    # the final plan is the sorted LocalRelation of the scores
     "q159_hits": (
-        ["CartesianProduct"],
-        {},
+        ["SortMergeJoin", "CartesianProduct", "Exchange SinglePartition"],
+        {"LocalTableScan": 1},
     ),
     "llm_split_leakage_safe": (
         ["CartesianProduct", "Exchange SinglePartition"],

@@ -7,7 +7,12 @@ from __future__ import annotations
 
 import pytest
 
-from amadou_spark.session import default_master, driver_memory, get_spark
+from amadou_spark.session import (
+    default_driver_memory,
+    default_master,
+    driver_memory,
+    get_spark,
+)
 
 
 @pytest.mark.parametrize(
@@ -34,7 +39,20 @@ def test_driver_mem_env_accepts_spark_sizes(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", value)
     assert driver_memory() == value
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
-    assert driver_memory() == "32g"
+    assert driver_memory() == default_driver_memory()
+
+
+def test_default_driver_memory_is_half_of_physical_capped_at_32g(monkeypatch):
+    """Unset, the driver heap is half of physical memory in whole GiB,
+    at least 1g and at most 32g: a 32g heap on a 15 GB host let the JVM
+    outgrow the host."""
+    import os
+
+    gib = 2**30
+    for phys, want in [(15 * gib, "7g"), (128 * gib, "32g"), (1 * gib, "1g")]:
+        sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys // 4096}
+        monkeypatch.setattr(os, "sysconf", sizes.__getitem__)
+        assert default_driver_memory() == want
 
 
 def test_cpus_env_sets_the_local_master(monkeypatch):

@@ -60,8 +60,8 @@ REVIEW = {
     "llm_bpe_learn_merges": "iterative BPE: each round's pair count is an explode + map-side-combined hash agg over the WORD table (not the corpus); merges apply as codegen literal replace; lineage cut per round so plans stay flat",
     "llm_text_bm25": "ONE tokenization pass: query-term tf pivoted into per-doc columns inside the doc-length agg (checkpointed); df/n/avgdl fold into one 1-row broadcast; scoring is per-row arithmetic with NO fact join (r7 — the old tf/dl/df formulation re-exploded documents ~5x); top-20 TakeOrdered on the rounded score",
     "q96_triangle_count": "degree-oriented wedge join: orientation caps out-degree at O(sqrt(m)) so no hub hotspot; oriented list checkpointed once for its three consumers",
-    "q97_bfs_levels": "per-round frontier-edge equi-join + visited anti-join: cost O(frontier edges), never O(paths); early exit on drained frontier",
-    "q98_kcore": "per-round endpoint-explode degree agg + two semi-joins; edge list only shrinks so round cost is monotone decreasing",
+    "q97_bfs_levels": "at or below graph.LOCAL_GRAPH_MAX_EDGES: one bounded Arrow collect of the canonical edges, numpy frontier rounds on the driver, result as a one-partition LocalRelation sorted in place; above it: per-round frontier-edge equi-join + visited anti-join, cost O(frontier edges), never O(paths), early exit on drained frontier",
+    "q98_kcore": "at or below graph.LOCAL_GRAPH_MAX_EDGES: one bounded Arrow collect, numpy bincount peeling rounds on the driver, one-partition LocalRelation result; above it: per-round endpoint-explode degree agg + two semi-joins, edge list only shrinks so round cost is monotone decreasing",
     "q99_link_prediction": "hub-salted wedge join: adjacency hash-blocked into ceil(d/32) chunks, block pairs equi-join on (center, blk_i, blk_j) so no key exceeds ~chunk rows/side; joins are size-gated hash-never-sort (r8; r9 sizes the build leg by its POST-explode cardinality sum(blk+1)) so AQE can never flip them to sort-merge; anti-join removes existing edges; top-20 via TakeOrdered",
     "q100_trend_fit": "per-group OLS: two stacked hash aggs (month rollup -> BIGINT moment sums), map-side combine both; single division at the end — no float accumulation",
     "llm_token_pmi": "two count tables off one explode; unigram join-back unhinted (broadcast while vocab small); top-30 on rounded score via TakeOrdered",
@@ -80,7 +80,7 @@ REVIEW = {
     "llm_kmeans": "assignment = pure per-row codegen (array_min over k literal-centroid distance structs) — no join/shuffle/UDF; the per-round update shuffles only (cluster, dim, partial-mean) scalar triples",
     "llm_random_projection": "16 zip_with folds over literal sign rows: zero shuffle, zero Python; the only exchange is the final orderBy (gate-only)",
     "q101_kmv_distinct": "per-group sketch = window over (flag, hash), checkpointed at <= |flags| x k rows; merged estimate reads the UNION OF SKETCHES (KMV mergeability — r7: the old merge re-distincted the fact table), TakeOrderedAndProject k-minima then a 1-row broadcast",
-    "q102_sssp": "per-round frontier equi-join + map-side-combined min agg; frontier restriction keeps round cost at O(improved edges), never O(E)",
+    "q102_sssp": "at or below graph.LOCAL_GRAPH_MAX_EDGES: one bounded Arrow collect, numpy Bellman-Ford rounds on the driver, one-partition LocalRelation result; above it: per-round frontier equi-join + map-side-combined min agg, frontier restriction keeps round cost at O(improved edges), never O(E)",
     "q103_feature_pack": "seven features, ONE Window operator, one shuffle+sort on (user_id | ts,event_id); the only other exchange is the gate's final orderBy",
     "q104_autocorr": "daily rollup collapses events before anything else; lags + 3 corr aggs run on the O(days x types) remnant — one window sort, one final agg",
     "q105_gini": "rows collapse to per-(priority, distinct price) counts; tie-run rank sums computed in closed form off a value-domain prefix sum — no fact-grain rank window (r6 rewrite)",
@@ -135,7 +135,7 @@ REVIEW = {
     "q147_spearman": "midranks via RANK + tie-run size; rho from six explicit exact sums, never engine co-moments; windows ride the bounded rollup",
     "q148_anova_oneway": "ONE map-side-combined hash agg to 5 group-moment rows; F/eta^2 are arithmetic on the remnant — no window, no join",
     "q149_mann_kendall": "pair join on the bounded calendar rollup (materialized once for 3 consumers); S exact integer; variance in DOUBLE",
-    "q150_label_propagation": "per round: one O(E) equi-join vs the node-label table + two map-side aggs (max-count filter + MIN = portable argmax); rounds fixed and unrolled in the oracle",
+    "q150_label_propagation": "at or below graph.LOCAL_GRAPH_MAX_EDGES: one bounded Arrow collect, numpy rounds (count sort per node, ties to the smallest label) on the driver, one-partition LocalRelation result — no label join, so no AQE build-side choice; above it, per round: one O(E) equi-join vs the node-label table + two map-side aggs (max-count filter + MIN = portable argmax); rounds fixed and unrolled in the oracle",
     "q151_hazard_rate": "q131 shape: duration-grid prefix sums; no exp/ln anywhere — one division + floor-half-up is the only float step",
     "llm_quality_linear_classifier": "64 INTEGER milli-weights as a literal array: per-row codegen element_at, exact BIGINT sums, one division + floor-half-up; no join/UDF before the per-doc agg",
     "q152_kruskal_wallis": "q124 shape: values coarsen to whole dollars, collapse to (val, grp) counts; midrank prefix sum rides the bounded price domain; H is a 5-row closed form with tie correction",
@@ -147,7 +147,7 @@ REVIEW = {
     "llm_dedup_cross_source": "only 32-byte md5 hashes shuffle; hash equi-join bounded by dup-group sizes; source-pair matrix output bounded by |sources|^2",
     "q157_levene_test": "q148 shape on |x - group median|: exact 5-row median table broadcast back, ONE map-side-combined moment agg over the deviations",
     "q158_psi_drift": "bounds = 1-row broadcast; everything collapses to the <=2x10x|types| cell grid in ONE map-side-combined agg; PSI closed-form on the grid",
-    "q159_hits": "q70 shape: per round exactly two equi-joins vs node-score tables + two map-side sums; L1 normalize ONCE at the end (scalars cancel through linear updates); lineage cut per round",
+    "q159_hits": "at or below graph.LOCAL_GRAPH_MAX_EDGES: one bounded Arrow collect of the distinct edges, two numpy bincounts per round on the driver, one-partition LocalRelation result; above it, the q70 shape: per round exactly two equi-joins vs node-score tables + two map-side sums; either way L1 normalize ONCE at the end (scalars cancel through linear updates)",
     "q160_price_decile_bands": "deciles off the $1000-grid lookup table (bounded by the price range), a LocalRelation built from one domain-sized collect and broadcast with no job (the one-measure case of q118's bounded_domain_ntile); only the <=9 boundary-crossing grid runs reach the tie-break window, filtered before the shuffle; band revenue = exact BIGINT cents sums",
     "llm_corpus_length_gini": "q105 shape: docs collapse to per-(lang, distinct token count) cells; tie-run rank sums in closed form off a per-lang prefix sum — no doc-grain rank window",
     "q161_mutual_information": "ONE map-side-combined contingency agg checkpointed at the |nations|x|segments| grain; marginals/total are exact regroups of the checkpoint (zero fact scans in the final plan); MI terms are e12 fixed-point BIGINTs",
