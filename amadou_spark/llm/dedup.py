@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from amadou_spark.llm.text import portable_token_hash, tokens
-from amadou_spark.scale import GATE_CONFS, materialize_shared
+from amadou_spark.scale import GATE_CONFS, broadcast_gate, materialize_shared
 from amadou_spark.session import conf_scope
 
 
@@ -87,24 +87,6 @@ def exploded_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> Da
     return main.union(fallback)
 
 
-# Planning-time broadcast gate for join sides with a provable row-count
-# bound (per-doc shingle counts are ≤ |docs|; the stop-shingle set is
-# ≤ |doc-shingle pairs|/max_shingle_freq). Same pattern as
-# operators/graph.py's small_v gate: make the size decision AQE would
-# make, one stage EARLIER — the bounding counts are cheap (parquet
-# metadata / checkpointed blocks), and a planning-time broadcast spares
-# the probe side its entire shuffle map phase (AQE's runtime conversion
-# still writes the probe shuffle files before it can convert). ≤5M
-# narrow rows ≈ tens of MB — comfortably broadcastable; above the gate
-# the joins stay unhinted and AQE picks from observed sizes.
-BROADCAST_ROWS_GATE = 5_000_000
-
-
-def _gate(df: DataFrame, bound_rows: int) -> DataFrame:
-    """Hint broadcast iff a sound upper bound on df's rows fits the gate."""
-    return F.broadcast(df) if bound_rows <= BROADCAST_ROWS_GATE else df
-
-
 def _shingle_pair_counts(
     docs: DataFrame,
     text_col: str,
@@ -162,7 +144,7 @@ def _shingle_pair_counts(
         ).first()
     n_docs = stats["nd"]
     hot_bound = stats["nr"] // max_shingle_freq
-    sh = sh.join(_gate(hot, hot_bound), "shingle", "left_anti")
+    sh = sh.join(broadcast_gate(hot, hot_bound), "shingle", "left_anti")
     a = sh.alias("a")
     b = sh.alias("b")
     common = (
@@ -175,13 +157,13 @@ def _shingle_pair_counts(
         .agg(F.count("*").alias("n_common"))
     )
     # per-doc shingle counts are |docs| rows — unbounded at corpus
-    # scale, so the broadcast is size-gated (see BROADCAST_ROWS_GATE):
+    # scale, so the broadcast is size-gated (see scale.BROADCAST_ROWS_GATE):
     # hinted while the doc count is provably small, otherwise a plain
     # shuffle join on the 8-byte doc_id that AQE may still convert
     ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
     cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
-    return common.join(_gate(ca, n_docs), "id_a").join(
-        _gate(cb, n_docs), "id_b"
+    return common.join(broadcast_gate(ca, n_docs), "id_a").join(
+        broadcast_gate(cb, n_docs), "id_b"
     )
 
 
@@ -459,7 +441,7 @@ def minhash_lsh_pairs(
         )
     )
     # per-doc counts are |docs| rows — unbounded, so the hint is
-    # size-gated (see BROADCAST_ROWS_GATE); the bound comes from the
+    # size-gated (see scale.BROADCAST_ROWS_GATE); the bound comes from the
     # checkpointed sh (|distinct doc_id| == |counts| <= |docs|), not a
     # second full scan of the uncached docs lineage
     # planning-only bound: one countDistinct job under GATE_CONFS
@@ -471,8 +453,8 @@ def minhash_lsh_pairs(
     cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return (
-        common.join(_gate(ca, n_docs), "id_a")
-        .join(_gate(cb, n_docs), "id_b")
+        common.join(broadcast_gate(ca, n_docs), "id_a")
+        .join(broadcast_gate(cb, n_docs), "id_b")
         .filter(jac >= 1.0 - max_distance)
         .select("id_a", "id_b", F.round(1.0 - jac, 6).alias("jaccard_dist"))
     )

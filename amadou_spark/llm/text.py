@@ -338,10 +338,10 @@ def _bpe_induce(
     n_words = vocab.count()  # over materialized blocks; sizes the loop
 
     merges: list[tuple[int, str, str, str, int]] = []
-    # Same loop conf hygiene as the graph fixpoints: each round is
-    # (argmax job + merge-apply materialization) over the bounded
-    # distinct-word table, which AQE and the batch shuffle width would
-    # pad with stage-materialization jobs.
+    # Pinned loop confs: each round is (argmax job + merge-apply
+    # materialization) over the bounded distinct-word table, which AQE
+    # and the batch shuffle width would pad with stage-materialization
+    # jobs.
     spark = docs.sparkSession
     with conf_scope(spark, loop_confs(spark, n_words)):
         for rank in range(1, num_merges + 1):

@@ -22,13 +22,9 @@ operator both ways.
 
 Connected components turn near-duplicate PAIRS into duplicate CLUSTERS
 (one canonical keep-id per group): shingle → candidate pair → verify →
-cluster → keep one. Distributed, it is iterative min-label propagation
-to a fixpoint, O(component diameter) rounds; near-dup graphs are
-near-cliques, so 2-4 rounds. When propagation hits its round cap
-unconverged, :func:`connected_components` falls back to the
-diameter-independent large-star/small-star contraction (Kiveris et
-al., "Connected Components in MapReduce and Beyond"),
-:func:`_star_fixpoint`.
+cluster → keep one. Distributed, it is the diameter-independent
+large-star/small-star contraction (Kiveris et al., "Connected
+Components in MapReduce and Beyond"), :func:`_star_fixpoint`.
 
 The undirected operators (:func:`triangle_stats`,
 :func:`local_clustering`, :func:`bfs_levels`, :func:`kcore`,
@@ -48,8 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from amadou_spark.scale import loop_confs, loop_width, materialize_shared
-from amadou_spark.session import conf_scope
+from amadou_spark.scale import broadcast_gate, materialize_shared
 
 # At or below this many edges a graph operator runs its rounds on the
 # driver — the analogue of a broadcast join's size gate: when the whole
@@ -150,17 +145,17 @@ def _release(df: DataFrame) -> None:
         pass
 
 
-def _star_fixpoint(sym: DataFrame, max_rounds: int = 40) -> DataFrame:
+def _star_fixpoint(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) — the
     diameter-independent distributed CC algorithm: O(log² n) rounds on
-    ANY graph shape, vs O(diameter) for min-label propagation.
+    ANY graph shape, where min-label propagation needs O(diameter).
 
-    Input: symmetrized distinct edge list (a, b). Output: (node,
-    cluster_id = min id of component) for every non-isolated node.
+    Input: edge list (a, b), either orientation, duplicates and
+    self-loops allowed. Output: (node, cluster_id = min id of
+    component) for every node in an edge.
 
-    Per round (each op is a groupBy + equi-join — the same shuffle
-    shape as one propagation round, ~2× the stages):
+    Per round (each op is a groupBy + equi-join):
     - large-star: every neighbor v > u re-points to m(u) = min(Γ(u)∪{u});
     - small-star: on the now larger→smaller directed list, every
       neighbor (and u itself) re-points to u's min neighbor.
@@ -168,9 +163,12 @@ def _star_fixpoint(sym: DataFrame, max_rounds: int = 40) -> DataFrame:
     fixpoint is detected by a (count, hash-sum) signature — one tiny
     aggregate per round, no edge-list diff join.
     """
+    # each undirected edge once, oriented (greatest, least)
     e = (
-        sym.filter(F.col("a") > F.col("b"))
-        .select(F.col("a").alias("u"), F.col("b").alias("v"))
+        edges.select(
+            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+        )
+        .filter(F.col("u") != F.col("v"))
         .distinct()
     )
     e.persist()
@@ -226,11 +224,11 @@ def _star_fixpoint(sym: DataFrame, max_rounds: int = 40) -> DataFrame:
             f"large-star/small-star did not reach a fixpoint in "
             f"{max_rounds} rounds — not expected for any finite graph"
         )
-    # Self-loop-only nodes were dropped by the a > b orientation but ARE
-    # "nodes in edges" under the contract (and both other strategies
-    # return them as their own singleton cluster) — union them back; the
+    # Self-loop-only nodes were dropped by the u != v filter but ARE
+    # "nodes in edges" under the contract (and the local path returns
+    # them as their own singleton cluster) — union them back; the
     # min-agg keeps the star label when such a node also has real edges.
-    loops = sym.filter(F.col("a") == F.col("b")).select(
+    loops = edges.filter(F.col("a") == F.col("b")).select(
         F.col("a").alias("node"), F.col("a").alias("cluster_id")
     )
     labels = (
@@ -267,113 +265,36 @@ def _components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """Return (node, cluster_id) for every node in ``edges``, where
     cluster_id is the minimum node id in the node's connected
     component. Nodes with no edges are absent (callers union
     singletons back if they want total coverage).
 
-    Physical strategies behind one contract, chosen by the real edge
-    cardinality: at or below :data:`LOCAL_GRAPH_MAX_EDGES` edges →
-    :func:`_components` on the driver; larger → iterative min-label
-    propagation, one edge-key shuffle per round, O(diameter) rounds —
-    the cheap winner on near-dup graphs, whose components are
-    near-cliques with diameter 2-4. If propagation has not converged
-    after ``max_iter`` rounds (the graph's diameter is larger), the
-    diameter-independent large-star/small-star contraction
-    (:func:`_star_fixpoint`) finishes the job instead of returning
-    unconverged labels; ``max_iter=0`` goes straight to it."""
+    At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges, :func:`_components`
+    runs on the driver; above it, the large-star/small-star contraction
+    :func:`_star_fixpoint` runs over the builder's materialized edges,
+    whose round count does not depend on the components' diameter. The
+    result's labels stay persisted, so consuming it does not re-run the
+    fixpoint."""
     directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
-    spark = directed.sparkSession
     directed, g = _local_graph(directed, "a", "b")
     if g is not None:
         nodes, ia, ib = g
         t = directed.schema["a"].dataType.simpleString()
         return _local_frame(
-            spark,
+            directed.sparkSession,
             f"node {t}, cluster_id {t}",
             node=nodes,
             cluster_id=nodes[_components(len(nodes), ia, ib)],
         )
-    # The directed edge list is already materialized (the builder's
-    # collect computed every partition of its checkpoint) BEFORE the
-    # symmetric union reads it twice: a plain persist would not be
-    # enough — the union's two branches can run concurrently in one job,
-    # each missing the still-empty cache and re-running the (possibly
-    # expensive) upstream pair-generation lineage, e.g. a shingle
-    # self-join. The count, over those blocks, gives the edge
-    # cardinality that sizes the loop's shuffle width.
-    n_edges = directed.count()
-    # Right-size the loop's shuffle width to the edge count: the label
-    # rounds run over the (usually tiny, always <= 2x input) edge list,
-    # and default shuffle partitions would pay scheduling overhead per
-    # round out of all proportion to the data.
-    n_part = loop_width(spark, n_edges)
-    sym = directed.union(
-        directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().repartition(n_part, "b")
-    sym.persist()
-    labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    ).repartition(n_part, "node")
-    labels.persist()
-    labels.count()
+    # The rounds run under AQE, with no loop_confs pin: on a random
+    # 2.5M-edge graph the pinned contraction ran 17 jobs against 93 but
+    # was no faster (45.3 and 34.4 s pinned, 38.6 and 34.0 s unpinned).
+    labels = _star_fixpoint(directed)
     _release(directed)
-    # Loop conf hygiene — AQE off (its per-exchange query-stage
-    # materialization adds whole jobs per round to a loop whose width
-    # n_part is already decided from the real edge count), shuffle
-    # width pinned to n_part, codegen off below the size gate.
-    with conf_scope(spark, loop_confs(spark, n_edges)):
-        for _ in range(max_iter):
-            nbr_min = (
-                sym.join(labels, sym["b"] == labels["node"])
-                .groupBy("a")
-                .agg(F.min("label").alias("_nbr"))
-            )
-            # Keep the previous label alongside the new one so
-            # convergence is a filter-count on this same DataFrame —
-            # not a third join.
-            stepped = (
-                labels.select("node", F.col("label").alias("_old"))
-                .join(nbr_min, F.col("node") == F.col("a"), "left")
-                .select(
-                    "node",
-                    "_old",
-                    F.least(
-                        F.col("_old"), F.coalesce(F.col("_nbr"), F.col("_old"))
-                    ).alias("label"),
-                )
-            )
-            # eager localCheckpoint: materialize AND truncate lineage —
-            # persist alone leaves each round's analyzed plan containing
-            # the previous round's (cache pruning happens after
-            # analysis), which grows plan-build time exponentially over
-            # rounds (see _star_fixpoint note)
-            stepped = materialize_shared(stepped)
-            changed = stepped.filter(F.col("label") != F.col("_old")).count()
-            _release(labels)
-            labels = stepped
-            if changed == 0:
-                break
-        else:
-            # Diameter > max_iter: returning the partially-propagated
-            # labels would be silently WRONG, so switch to the
-            # diameter-independent contraction. Near-dup graphs never
-            # get here (clique-like, 2-4 rounds); long-path graphs pay
-            # the capped label rounds then O(log² n) more.
-            _release(labels)
-            labels = _star_fixpoint(sym).select(
-                "node", F.col("cluster_id").alias("label")
-            )
-    # The final labels stay persisted (one narrow row per clustered node,
-    # already materialized by the convergence count) so consuming the
-    # result doesn't re-run the whole fixpoint lineage.
-    sym.unpersist()
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
+    return labels
 
 
 def pagerank(
@@ -399,11 +320,11 @@ def pagerank(
 
     At or below :data:`LOCAL_GRAPH_MAX_EDGES` edges the ``n_iter``
     rounds are numpy ``bincount`` passes on the driver. Above it, each
-    iteration is one shuffle join of the (static, persisted,
-    degree-annotated) edge list against the current ranks plus a
-    partial-aggregated sum per dst — the connected-components round's
-    cost profile. Ranks are materialized per round and the previous
-    round released, so lineage stays one round deep.
+    iteration joins the builder's materialized edge list against the
+    |V|-row (rank, outdeg) table, broadcast while |V| is within
+    :data:`~amadou_spark.scale.BROADCAST_ROWS_GATE`, plus a
+    partial-aggregated sum per dst. Ranks are materialized per round
+    and the previous round released, so lineage stays one round deep.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
     spark = e.sparkSession
@@ -424,105 +345,59 @@ def pagerank(
         return _local_frame(
             spark, f"node {t}, rank double", node=nodes[universe], rank=rank[universe]
         )
-    n_edges = e.count()  # over the builder's materialized blocks
-    n_part = loop_width(spark, n_edges)
     # The degree table is |V| rows vs |E| edge rows; persisting and
-    # counting it gives n_nodes (the broadcast-feasibility gate) AND the
-    # materialized build side every later step reuses.
+    # counting it gives n_nodes (the broadcast gate's bound) AND the
+    # materialized node set every round reuses.
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     deg.persist()
     n_nodes = deg.count()
-    small_v = n_nodes <= 5_000_000
     base = (1.0 - damping) / n_nodes
 
-    # Same loop hygiene as connected_components: AQE's per-exchange
-    # stage materialization and a batch-sized shuffle width cost more
-    # than the rounds themselves. Codegen-off is gated on graph size —
-    # interpreting millions of edge rows per round costs more than the
-    # per-round code generation it saves (LOOP_CODEGEN_OFF_MAX_ROWS).
-    with conf_scope(spark, loop_confs(spark, n_edges)):
-        if small_v:
-            # Broadcast loop: the (rank, outdeg) vector — |V| rows — is
-            # the broadcast build side each round, so the persisted edge
-            # list is only ever scanned map-side; the sole shuffle per
-            # round is the partial-aggregated contribution sum (map-side
-            # combine emits ≤ |V| rows per partition). The edge list is
-            # never degree-annotated or repartitioned at all.
-            ranks = deg.select(
-                F.col("src").alias("node"),
-                F.lit(1.0 / n_nodes).alias("rank"),
-                "outdeg",
-            )
-            ranks.persist()
-            for _ in range(n_iter):
-                rs = F.broadcast(ranks)
-                contrib = (
-                    e.join(rs, e["src"] == rs["node"])
-                    .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-                    .groupBy("dst")
-                    .agg(F.sum("c").alias("s"))
-                )
-                # every node of the symmetrized graph has an in-edge, but
-                # the general contract only promises outdeg ≥ 1 — keep the
-                # left join from the node set (= deg keys, broadcast-tiny).
-                cs = F.broadcast(contrib)
-                stepped = (
-                    deg.join(cs, deg["src"] == cs["dst"], "left")
-                    .select(
-                        F.col("src").alias("node"),
-                        (
-                            F.lit(base)
-                            + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                        ).alias("rank"),
-                        "outdeg",
-                    )
-                )
-                # eager localCheckpoint: materialize AND cut lineage so
-                # round r+1's plan doesn't embed round r's (exponential
-                # plan-analysis growth otherwise — see the CC loops)
-                stepped = materialize_shared(stepped)
-                _release(ranks)
-                ranks = stepped
-            _release(e)
-            deg.unpersist()
-            return ranks.select("node", "rank")
-        # Shuffle loop for huge vertex sets: degree-annotated edge list
-        # pre-partitioned by src once; each round shuffle-joins ranks.
-        withdeg = e.join(deg, "src").repartition(n_part, "src")
-        withdeg.persist()
-        withdeg.count()
-        _release(e)
-        nodes = deg.select(F.col("src").alias("node")).repartition(n_part, "node")
-        nodes.persist()
-        nodes.count()
-        deg.unpersist()
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-        ranks.persist()
-        for _ in range(n_iter):
-            contrib = (
-                withdeg.join(ranks, withdeg["src"] == ranks["node"])
-                .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            stepped = (
-                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            # eager localCheckpoint — same lineage-cut as the broadcast
-            # loop above
-            stepped = materialize_shared(stepped)
-            _release(ranks)
-            ranks = stepped
-        withdeg.unpersist()
-        nodes.unpersist()
-        return ranks
+    # Within the broadcast gate the (rank, outdeg) vector — |V| rows —
+    # is each round's broadcast build side, so the edge list is only
+    # ever scanned map-side; the sole shuffle per round is the
+    # partial-aggregated contribution sum (map-side combine emits ≤ |V|
+    # rows per partition). Above it both joins shuffle.
+    #
+    # The rounds run under AQE, with no loop_confs pin: at the sf1 slice
+    # (q70, about 11.8M edges) the pinned loop ran 4 jobs fewer but was
+    # no faster, median 14.58 s pinned against 13.91 s unpinned over 7
+    # interleaved pairs.
+    ranks = deg.select(
+        F.col("src").alias("node"),
+        F.lit(1.0 / n_nodes).alias("rank"),
+        "outdeg",
+    )
+    ranks.persist()
+    for _ in range(n_iter):
+        rs = broadcast_gate(ranks, n_nodes)
+        contrib = (
+            e.join(rs, e["src"] == rs["node"])
+            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        # every node of the symmetrized graph has an in-edge, but the
+        # general contract only promises outdeg ≥ 1 — keep the left
+        # join from the node set (= deg keys).
+        cs = broadcast_gate(contrib, n_nodes)
+        stepped = deg.join(cs, deg["src"] == cs["dst"], "left").select(
+            F.col("src").alias("node"),
+            (
+                F.lit(base)
+                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("rank"),
+            "outdeg",
+        )
+        # eager localCheckpoint: materialize AND cut lineage so round
+        # r+1's plan doesn't embed round r's (exponential plan-analysis
+        # growth otherwise — see _star_fixpoint)
+        stepped = materialize_shared(stepped)
+        _release(ranks)
+        ranks = stepped
+    _release(e)
+    deg.unpersist()
+    return ranks.select("node", "rank")
 
 
 def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
@@ -565,7 +440,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         # auth is only bound inside the loop; zero rounds would crash
         # on auth.agg below with a confusing NoneType error
         raise ValueError(f"hits() needs n_iter >= 1, got {n_iter}")
-    canon, g = _local_graph(edges.select("src", "dst").dropna().distinct(), "src", "dst")
+    e, g = _local_graph(edges.select("src", "dst").dropna().distinct(), "src", "dst")
     if g is not None:
         nodes, s, d = g
         n = len(nodes)
@@ -576,44 +451,43 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
             auth = np.bincount(d, weights=hub[s], minlength=n)
             hub = np.bincount(s, weights=auth[d], minlength=n)
         h, a = hub[is_src], auth[is_dst]
-        t = canon.schema["src"].dataType.simpleString()
+        t = e.schema["src"].dataType.simpleString()
         return _local_frame(
-            canon.sparkSession,
+            e.sparkSession,
             f"node {t}, role string, score double",
             node=np.concatenate([nodes[is_src], nodes[is_dst]]),
             role=np.repeat(["hub", "authority"], [len(h), len(a)]),
             score=np.concatenate([h / h.sum(), a / a.sum()]),
         )
-    e = materialize_shared(canon)
-    _release(canon)
-    n_edges = e.count()  # over materialized blocks; sizes the loop
     hub = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("h")
     )
     auth = None
-    # CC-style loop conf hygiene around the alternating rounds
-    with conf_scope(e.sparkSession, loop_confs(e.sparkSession, n_edges)):
-        for i in range(n_iter):
-            last = i == n_iter - 1
-            auth = (
-                e.join(hub, e["src"] == hub["node"])
-                .groupBy(e["dst"].alias("node"))
-                .agg(F.sum("h").alias("a"))
-            )
-            if last:
-                # two consumers (final hub update + output) —
-                # materialize; intermediate auths feed exactly one
-                # join and stay lazy
-                auth = materialize_shared(auth)
-            hub = (
-                e.join(auth, e["dst"] == auth["node"])
-                .groupBy(e["src"].alias("node"))
-                .agg(F.sum("a").alias("h"))
-            )
-            if last or i % 4 == 3:
-                # final hub branches (totals agg + output); intermediate
-                # cuts only every 4th round to bound analysis depth
-                hub = materialize_shared(hub)
+    # The rounds run under AQE, with no loop_confs pin: at the sf1 slice
+    # (q159) the pinned loop ran 16 jobs fewer but was no faster, median
+    # 15.77 s pinned against 15.19 s unpinned over 7 interleaved pairs.
+    for i in range(n_iter):
+        last = i == n_iter - 1
+        auth = (
+            e.join(hub, e["src"] == hub["node"])
+            .groupBy(e["dst"].alias("node"))
+            .agg(F.sum("h").alias("a"))
+        )
+        if last:
+            # two consumers (final hub update + output) —
+            # materialize; intermediate auths feed exactly one
+            # join and stay lazy
+            auth = materialize_shared(auth)
+        hub = (
+            e.join(auth, e["dst"] == auth["node"])
+            .groupBy(e["src"].alias("node"))
+            .agg(F.sum("a").alias("h"))
+        )
+        if last or i % 4 == 3:
+            # final hub branches (totals agg + output); intermediate
+            # cuts only every 4th round to bound analysis depth
+            hub = materialize_shared(hub)
+    _release(e)  # the output reads only the materialized final rounds
     h_tot = hub.agg(F.sum("h").alias("t"))
     a_tot = auth.agg(F.sum("a").alias("t"))
     return (
@@ -937,7 +811,7 @@ def sssp(
     (node, candidate-dist) pair per reached node per partition.
     """
     spark = edges.sparkSession
-    canon, g = _local_graph(
+    e, g = _local_graph(
         edges.select(
             F.col("src").cast("bigint").alias("src"),
             F.col("dst").cast("bigint").alias("dst"),
@@ -961,8 +835,6 @@ def sssp(
         return _local_frame(
             spark, "node bigint, dist bigint", node=nodes[seen], dist=dist[seen]
         ).orderBy("node")
-    e = materialize_shared(canon)
-    _release(canon)
     if source is None:
         # 1-row control job
         source = e.agg(F.min("src")).collect()[0][0]
@@ -1005,6 +877,7 @@ def sssp(
             .select("node", "dist")
         )
         dist = merged
+    _release(e)  # the output reads only the materialized distances
     return dist.orderBy("node")
 
 
@@ -1068,7 +941,7 @@ def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
     unrolled oracle, so early exit cannot diverge from it). Lineage is
     cut per round like the CC/PageRank/BFS loops.
     """
-    canon, g = _local_graph(_undirected(edges), "u", "v")
+    e, g = _local_graph(_undirected(edges), "u", "v")
     if g is not None:
         nodes, u, v = g
         deg = _kcore_degrees(len(nodes), u, v, k, max_rounds)
@@ -1079,9 +952,7 @@ def kcore(edges: DataFrame, k: int = 14, max_rounds: int = 8) -> DataFrame:
             node=nodes[kept],
             degree=deg[kept],
         ).orderBy("node")
-    e = materialize_shared(canon)
-    _release(canon)
-    n_edges = e.count()
+    n_edges = e.count()  # over the builder's materialized blocks
     # The peeling rounds run under full AQE, with no loop_confs pin:
     # AQE's run-time re-planning turns each round's two semi-joins into
     # BROADCASTs of the surviving-node table, where a static pinned plan

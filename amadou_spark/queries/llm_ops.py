@@ -1431,12 +1431,10 @@ def llm_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT src AS doc_id, LEAST(src, MIN(node)) AS cluster_id
         FROM walk GROUP BY src ORDER BY doc_id
     """,
-    description="near-dup pairs → duplicate CLUSTERS via distributed "
-    "connected components (iterative min-label propagation, one edge-key "
-    "shuffle per round, O(component diameter) rounds — dup clusters are "
-    "near-cliques so it converges in 2-4; the diameter-independent "
-    "large-star/small-star contraction is the implemented fallback for "
-    "adversarial graphs). Completes the dedup story: "
+    description="near-dup pairs → duplicate CLUSTERS via connected "
+    "components (driver hook-and-jump up to 2M edges, above that the "
+    "diameter-independent large-star/small-star contraction, O(log² n) "
+    "rounds on any graph shape). Completes the dedup story: "
     "candidate pair → verify → cluster → one canonical keep-id per group. "
     "Oracle = DuckDB recursive-CTE transitive closure over the same "
     "3-gram-Jaccard>=0.5 edge set",

@@ -20,10 +20,11 @@ from amadou_spark.session import conf_scope
 # whole-stage codegen off. The session's codegen cache already spares
 # each round's new plan a Janino compile, yet the pin still pays: without
 # it (bench.py, min of 3, 8 alternating pairs at sf0.01 and sf0.1) the BPE
-# merge loop was slower in 6 pairs and the sum of the four registry users
-# in 5, plausibly because whole-stage codegen still generates each
-# stage's source every round to look it up. Above this size the
-# interpreted-evaluation penalty dominates.
+# merge loop was slower in 6 pairs and the sum of the pin's four
+# registry users then (q159_hits and three BPE queries) in 5, plausibly
+# because whole-stage codegen still generates each stage's source every
+# round to look it up. Above this size the interpreted-evaluation
+# penalty dominates. The BPE loop is the pin's only user now.
 LOOP_CODEGEN_OFF_MAX_ROWS = 200_000
 
 # Rows per shuffle partition in a pinned fixpoint loop. Do not widen
@@ -31,11 +32,29 @@ LOOP_CODEGEN_OFF_MAX_ROWS = 200_000
 # executor time of width 5 (5964 s vs 25 s summed executorRunTime, same
 # 138 stages), because every pinned task pays ~300-600 ms of fixed
 # overhead per round. A wide pin also makes every loop join a static
-# SortMergeJoin where AQE would broadcast the tiny side at run time,
-# which is why the BFS, SSSP, k-core and label-propagation loops run
-# under AQE with no pin at all; the pin stays where it measured flat or
-# better (CC, PageRank, HITS, the BPE induction loop).
+# SortMergeJoin where AQE would broadcast the tiny side at run time.
+# The pin's one user is the BPE induction loop (llm/text.py); every
+# graph loop runs under AQE, and the connected-components, PageRank and
+# HITS loops measured no faster pinned (see their comments in
+# operators/graph.py).
 LOOP_ROWS_PER_PARTITION = 50_000
+
+# Planning-time broadcast gate for a join side whose row count has a
+# sound upper bound taken from data already materialized (checkpoint
+# blocks or parquet metadata): make the size decision AQE would make,
+# one stage EARLIER. A planning-time broadcast spares the probe side its
+# whole shuffle map phase (AQE's run-time conversion still writes the
+# probe's shuffle files before it converts). ≤5M narrow rows ≈ tens of
+# MB, comfortably broadcastable; above the gate the join stays unhinted
+# and AQE picks from observed sizes.
+BROADCAST_ROWS_GATE = 5_000_000
+
+
+def broadcast_gate(df: DataFrame, bound_rows: int) -> DataFrame:
+    """``df`` hinted broadcast iff ``bound_rows``, a sound upper bound
+    on its rows, is within :data:`BROADCAST_ROWS_GATE`."""
+    return F.broadcast(df) if bound_rows <= BROADCAST_ROWS_GATE else df
+
 
 # Conf for tiny planning-gate ACTIONS (a bound-probing count/first over
 # already-materialized blocks, whose result only feeds broadcast-hint
@@ -47,20 +66,6 @@ LOOP_ROWS_PER_PARTITION = 50_000
 GATE_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
 
-def loop_width(spark: SparkSession, n_rows: int) -> int:
-    """Right-size an iterative loop's shuffle width to its real row
-    count (the decision AQE would make per stage, taken once for the
-    whole loop): ~LOOP_ROWS_PER_PARTITION rows per partition, capped
-    at the core count."""
-    return max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            n_rows // LOOP_ROWS_PER_PARTITION + 1,
-        ),
-    )
-
-
 def loop_confs(spark: SparkSession, n_rows: int) -> dict[str, str]:
     """Session conf for a pinned iterative fixpoint loop over
     ``n_rows`` rows per round; run the loop under
@@ -69,12 +74,17 @@ def loop_confs(spark: SparkSession, n_rows: int) -> dict[str, str]:
     - AQE off: its per-exchange query-stage materialization adds whole
       jobs to every round whose width is already decided here from the
       real row count;
-    - shuffle width from :func:`loop_width`: the session default is
-      sized for batch scans, not a loop over a small table;
+    - shuffle width of about ``LOOP_ROWS_PER_PARTITION`` rows per
+      partition, capped at the core count: the session default is sized
+      for batch scans, not a loop over a small table;
     - whole-stage codegen off up to ``LOOP_CODEGEN_OFF_MAX_ROWS``."""
+    width = min(
+        spark.sparkContext.defaultParallelism,
+        n_rows // LOOP_ROWS_PER_PARTITION + 1,
+    )
     confs = {
         "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(loop_width(spark, n_rows)),
+        "spark.sql.shuffle.partitions": str(width),
     }
     if n_rows <= LOOP_CODEGEN_OFF_MAX_ROWS:
         confs["spark.sql.codegen.wholeStage"] = "false"

@@ -343,22 +343,13 @@ def test_interval_join_plan_is_hash_join_not_nested_loop(spark, sf_dir):
 # ------------------------------------------------------------- pagerank
 
 
-@pytest.mark.parametrize("gate", [0, 2_000_000])
-def test_pagerank_matches_numpy_reference(spark, gate):
-    """Both physical strategies (distributed loop with the local gate at
-    0, local numpy kernel at the default gate) must equal the dense
-    numpy power iteration on a small known graph (symmetrized, so no
-    dangling nodes)."""
-    from unittest import mock
+_PR_PAIRS = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
+_PR_SYM = _PR_PAIRS + [(d, s) for s, d in _PR_PAIRS]
 
+
+def _pagerank_reference(sym, n_iter=3, damping=0.85):
+    """Dense numpy power iteration over edge list ``sym``: node -> rank."""
     import numpy as np
-
-    from amadou_spark.operators import graph
-    from amadou_spark.operators.graph import pagerank
-
-    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
-    sym = pairs + [(d, s) for s, d in pairs]
-    edges = spark.createDataFrame(sym, ["src", "dst"])
 
     nodes = sorted({n for p in sym for n in p})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -367,25 +358,60 @@ def test_pagerank_matches_numpy_reference(spark, gate):
     for s, _ in sym:
         out[idx[s]] += 1
     r = np.full(n, 1.0 / n)
-    for _ in range(3):
+    for _ in range(n_iter):
         contrib = np.zeros(n)
         for s, d in sym:
             contrib[idx[d]] += r[idx[s]] / out[idx[s]]
-        r = (1 - 0.85) / n + 0.85 * contrib
+        r = (1 - damping) / n + damping * contrib
+    return {name: r[idx[name]] for name in nodes}
 
-    with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", gate):
-        got = dict(pagerank(edges, n_iter=3).collect())
-    assert set(got) == set(nodes)
-    for name in nodes:
-        assert abs(got[name] - r[idx[name]]) < 1e-12, name
+
+def _assert_pagerank_matches(got, want):
+    assert set(got) == set(want)
+    for name in want:
+        assert abs(got[name] - want[name]) < 1e-12, name
     # ranks of a stochastic-ish vector stay positive and bounded
     assert all(0 < v < 1 for v in got.values())
 
 
+@pytest.mark.parametrize("gate", [0, 2_000_000])
+def test_pagerank_matches_numpy_reference(spark, gate):
+    """Both physical strategies (distributed loop with the local gate at
+    0, local numpy kernel at the default gate) must equal the dense
+    numpy power iteration on a small known graph (symmetrized, so no
+    dangling nodes)."""
+    from unittest import mock
+
+    from amadou_spark.operators import graph
+    from amadou_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(_PR_SYM, ["src", "dst"])
+    with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", gate):
+        got = dict(pagerank(edges, n_iter=3).collect())
+    _assert_pagerank_matches(got, _pagerank_reference(_PR_SYM))
+
+
+def test_pagerank_unhinted_rounds_match_numpy_reference(spark, both_paths):
+    """With the broadcast gate at 0 the distributed rounds join the
+    rank and contribution tables unhinted (the branch for vertex sets
+    too large to broadcast); both paths must still equal the numpy
+    reference."""
+    from unittest import mock
+
+    from amadou_spark import scale
+    from amadou_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(_PR_SYM, ["src", "dst"])
+    want = _pagerank_reference(_PR_SYM)
+    with mock.patch.object(scale, "BROADCAST_ROWS_GATE", 0):
+        for got in both_paths(lambda: dict(pagerank(edges, n_iter=3).collect())):
+            _assert_pagerank_matches(got, want)
+
+
 def test_cc_star_matches_unionfind_on_random_graph(spark, both_paths):
-    """large-star/small-star (distributed, the local gate patched to 0;
-    max_iter=0 skips label propagation) must equal the driver's
-    hook-and-jump components on a seeded random graph."""
+    """large-star/small-star (distributed, the local gate patched to 0)
+    must equal the driver's hook-and-jump components on a seeded random
+    graph."""
     import random
 
     from amadou_spark.operators.graph import connected_components
@@ -396,31 +422,28 @@ def test_cc_star_matches_unionfind_on_random_graph(spark, both_paths):
     })
     edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
     want, got = both_paths(
-        lambda: dict(connected_components(edges, max_iter=0).collect())
+        lambda: dict(connected_components(edges).collect())
     )
     assert got == want
 
 
 def test_cc_self_loop_node_all_strategies_agree(spark, both_paths):
     """A node whose only edge is a self-loop is 'a node in edges': the
-    local components, label propagation, and star contraction must all
-    return it as its own singleton cluster (the star path's a > b
-    orientation used to drop it)."""
+    local components and the star contraction must both return it as
+    its own singleton cluster (the star path's edge orientation drops
+    self-loops)."""
     from amadou_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([(0, 1), (7, 7)], ["id_a", "id_b"])
     expect = {0: 0, 1: 0, 7: 7}
-    for kwargs in ({}, {"max_iter": 0}):  # label propagation, star contraction
-        for got in both_paths(
-            lambda: dict(connected_components(edges, **kwargs).collect())
-        ):
-            assert got == expect, kwargs
+    for got in both_paths(lambda: dict(connected_components(edges).collect())):
+        assert got == expect
 
 
 def test_cc_long_path_fallback_converges(spark):
-    """A path graph's diameter exceeds the label-propagation round cap;
-    connected_components must fall back to the star contraction and
-    return CORRECT labels, not the unconverged propagation ones."""
+    """Distributed connected components on a 16-hop path (diameter
+    16, where min-label propagation would need 16 rounds) must label
+    every node with the path's minimum id."""
     from unittest import mock
 
     from amadou_spark.operators import graph
@@ -431,7 +454,7 @@ def test_cc_long_path_fallback_converges(spark):
         [(i, i + 1) for i in range(n)], ["id_a", "id_b"]
     )
     with mock.patch.object(graph, "LOCAL_GRAPH_MAX_EDGES", 0):
-        got = dict(connected_components(edges, max_iter=2).collect())
+        got = dict(connected_components(edges).collect())
     assert got == {i: 0 for i in range(n + 1)}
 
 

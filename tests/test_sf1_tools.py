@@ -84,6 +84,8 @@ def test_replicas_keep_sampling_and_value_domains_disjoint(sf1, sf_dir):
         "SELECT count(*) FROM lineitem WHERE l_orderkey % 5 = 0",
         "SELECT count(DISTINCT text) FROM documents",
         "SELECT count(DISTINCT label) FROM embeddings",
+        "SELECT count(DISTINCT s_name) FROM supplier",
+        "SELECT count(DISTINCT c_name) FROM customer",
     ):
         assert _count(sf1, sql) == REPLICAS * _count(sf_dir, sql) > 0, sql
 

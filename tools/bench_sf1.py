@@ -138,7 +138,8 @@ def main(names: list[str]) -> None:
         "per-query ratios are host-drift-free by construction",
         "slice_note": "lineitem/orders/customer/part/supplier/events/"
         "documents/embeddings are 10x disjoint replicas (supplier since "
-        "layout v5); region/nation are the sf0.1 files",
+        "layout v5, per-replica c_name/s_name since v6); region/nation "
+        "are the sf0.1 files",
         "gate": GATE,
         "gate_overrides": GATE_OVERRIDES,
         "n_queries": len(queries),

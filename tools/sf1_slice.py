@@ -28,8 +28,11 @@ replica's data properties match sf0.1 exactly:
   day while per-user histories and duration domains keep their shape.
 - ``supplier`` shifts ``s_suppkey`` with lineitem's ``l_suppkey`` and
   keeps ``s_nationkey``, as TPC-H scales SUPPLIER with SF.
-- Names (``c_name``, ``s_name``) and every other non-key column are
-  copied verbatim.
+- Names (``c_name``, ``s_name``) are rebuilt from the shifted key the
+  way TPC-H writes them (``Customer#`` or ``Supplier#`` then the key
+  zero-padded to 9 digits, which every sf0.1 row matches), so a query
+  grouping by name sees 10x groups, not 10 replicas merged per name.
+  Every other non-key column is copied verbatim.
 - ``nation`` and ``region`` are fixed-size in TPC-H: symlinks to the
   source files.
 
@@ -54,7 +57,7 @@ REPLICAS = 10
 
 #: Written once every table of this layout is built; holds the row
 #: counts. A directory without it rebuilds every replicated table.
-MARKER = ".built_v5"
+MARKER = ".built_v6"
 
 #: table -> {key column: key domain}. Columns of one domain shift by the
 #: same offset.
@@ -67,6 +70,12 @@ SHIFTS = {
     "events": {"event_id": "event_id", "user_id": "user_id"},
     "documents": {"doc_id": "doc_id"},
     "embeddings": {"vec_id": "vec_id", "label": "label"},
+}
+
+#: table -> (name column, key column, TPC-H name prefix)
+NAMES = {
+    "customer": ("c_name", "c_custkey", "Customer#"),
+    "supplier": ("s_name", "s_suppkey", "Supplier#"),
 }
 
 
@@ -148,6 +157,10 @@ def ensure_sf1(spark, src: str = SF01, dst: str = SF1_DIR) -> dict:
         df = spark.read.parquet(_path(src, t))
         shifts = {c: offsets[domain] for c, domain in SHIFTS[t].items()}
         replaced = _documents_tagging() if t == "documents" else None
+        if t in NAMES:
+            name, key, prefix = NAMES[t]
+            shifted = (F.col(key) + F.col("_r") * shifts[key]).cast("string")
+            replaced = {name: F.concat(F.lit(prefix), F.lpad(shifted, 9, "0"))}
         _replicate(spark, df, shifts, replaced).write.mode("overwrite").parquet(
             _path(dst, t)
         )
